@@ -1,10 +1,14 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship query smoke check at sf0.001.
-``queries()`` — one entry per implemented operator from SURVEY.md §2;
-each callable takes (spark, sf_dir) and returns a DataFrame.
+``queries()`` — every ``q_<name>`` function in this module, keyed
+``<name>``, in definition order; each takes (spark, sf_dir) and returns
+a DataFrame.
 ``oracle_sql()`` — DuckDB-equivalent ANSI SQL per query (tables
 pre-registered as views). Column names/aliases match exactly.
+
+Adding an entry means writing one ``q_<name>`` function plus its oracle
+SQL under the same name in ``oracle_sql()``.
 """
 
 from __future__ import annotations
@@ -3710,456 +3714,10 @@ def q_doc_lexical_diversity(spark, sf_dir):
     return TX.lexical_diversity(_t(spark, sf_dir, "documents"))
 
 
-def _last_green_rounds() -> dict[str, int]:
-    """Last driver-certified round per registry entry, read from the
-    ``CORRECTNESS_r*.json`` artifacts the driver writes next to this
-    file. "Green in round N" means the round-N sweep either fully
-    matched the entry against its oracle (all boolean fields true,
-    ``err`` null) or ran its documented rows-only check
-    (``err == 'no_oracle'`` with a recorded row count — the strongest
-    certification a model-fit entry can receive). Entries the sweep
-    errored on, or whose hash mismatched, do NOT count — they need
-    re-certification, so they must sort to the front."""
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m is None:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue  # a malformed artifact must not break the registry
-        if not isinstance(rows, dict):
-            continue
-        for name, rec in rows.items():
-            if not isinstance(rec, dict):
-                continue
-            flags = [v for v in rec.values() if isinstance(v, bool)]
-            green = (rec.get("err") is None and flags and all(flags)) or (
-                rec.get("err") == "no_oracle"
-                and rec.get("spark_rows") is not None
-            )
-            if green:
-                last[name] = max(last.get(name, -1), rnd)
-    return last
-
-
-def _added_rounds() -> dict[str, int]:
-    """Round each entry was REGISTERED, from the tracked
-    ``tests/registry_added.json`` (tests/test_registry.py asserts every
-    registry key has a record, so a new entry cannot land without
-    declaring its round). Only consulted for never-certified entries —
-    certified rows rank by their last green round."""
-    import json
-    import os
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    try:
-        with open(os.path.join(here, "tests", "registry_added.json")) as fh:
-            data = json.load(fh)
-    except (OSError, ValueError):
-        return {}
-    return {k: int(v) for k, v in data.items()} if isinstance(data, dict) else {}
-
-
-# The reference's actual serving surface (main.py:81-232 + the
-# streamlit panels): the flagship §2-core queries a user of the
-# reference hits first. VERDICT r8 Next #3: these must never be the
-# OLDEST certification evidence, so once they are >= 2 rounds stale
-# they ride a cadence boost back into the sweep front (below).
-_CORE_SURFACE = frozenset({
-    "summary_events",          # A1  fetch_weather_summary
-    "distinct_event_types",    # A2  fetch_sites
-    "recent_events_topk",      # O22 /weather/raw recency scan
-    "events_window_filter",    # O4/O5 /weather/hourly predicate scan
-    "hourly_type_pivot",       # J1  multi-series alignment
-    "hourly_completeness",     # A6  per-hour completeness heatmap
-    "hourly_long",             # A9  wide->long reshape
-    "keep_metrics",            # J3/A8 kept/dropped KPI combine
-    "drop_reason_counts",      # W2/A5 duplicate labeling + counts
-    "latest_per_user_hour",    # A3  last-per-group dedup
-    "props_stats",             # F10 nested-JSON props extraction
-})
-
-
-def _observed_window_rows() -> int:
-    """Size of the driver's sweep window, observed as the row count of
-    the most recent ``CORRECTNESS_r*.json`` artifact (each artifact
-    holds exactly the rows that round's sweep certified). 0 when no
-    artifact exists yet."""
-    import glob
-    import json
-    import os
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    best_round, best_rows = -1, 0
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m is None:
-            continue
-        try:
-            with open(path) as fh:
-                rows = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        if isinstance(rows, dict) and int(m.group(1)) > best_round:
-            best_round, best_rows = int(m.group(1)), len(rows)
-    return best_rows
-
-
-def _debt_order(
-    names: list[str],
-    last: dict[str, int],
-    added: dict[str, int],
-    window_rows: int,
-) -> list[str]:
-    """Pure ordering core (unit-tested against simulated window sizes):
-    rank by CERTIFICATION DEBT, descending; input order breaks ties.
-
-    Both tuning constants DERIVE from the observed steady state
-    ``period = len(names) / window_rows`` — the number of rounds a
-    full rotation takes — instead of hand-set values (VERDICT r8
-    Next #4: the hard-coded 2.5 credit assumed a 50-row window):
-
-        debt = current − last_green                       (certified)
-        debt = current − added + (period/2 + 0.5)         (never)
-        debt += max(0, period − 1)    (certified CORE rows ≥ 2 stale,
-                                       OR never rows that MISSED ≥ 1
-                                       sweep since registration)
-
-    The never-certified credit ``period/2 + 0.5``: an entry with
-    externally UNVALIDATED claims outranks rows certified up to about
-    half a rotation before its registration — but not the long-stale
-    tail, so a round registering ~20 operators cannot starve
-    re-certification behind its own zero-wait additions (plain
-    "never-certified first" regressed exactly this way at 200
-    entries). At the r8 steady state (208 entries / 50-row window,
-    period 4.16) the credit is 2.58 ≈ the old 2.5; a 25-row window
-    doubles it, a 100-row window halves it, tracking how stale the
-    certified tail actually gets. The half-unit keeps never/certified
-    strictly ordered on integer ties (never first).
-
-    The cadence boost ``period − 1`` applies in two places:
-
-    * a §2-core serving row (_CORE_SURFACE) that reaches 2 rounds
-      stale gets effective debt ≥ period + 1, past the steady-state
-      front cutoff (≈ period), so the flagship queries re-certify
-      every ~2 rounds and are never the oldest evidence — without
-      occupying sweep slots while fresh (boost only at staleness
-      ≥ 2, ~len(core)/2 slots per round amortized);
-    * a never-certified STRAGGLER — an entry a sweep has already run
-      past without certifying (wait = current − added ≥ 1) — gets the
-      same boost. The anti-starvation credit discount exists to hold
-      back a round's own zero-wait additions; once an entry has
-      missed a sweep its unvalidated claims are the weakest evidence
-      in the registry and must not age a SECOND time behind the
-      stale-but-validated tail. (Found in r10: ``revenue_rollup``,
-      added r9 with wait 1, ranked at slot 59 — behind fifty 4-stale
-      r6 rows and outside a 50-row window — under the credit alone,
-      violating the r9 verdict's "every never-certified entry in the
-      r10 front" convergence requirement.)"""
-    current = max(last.values(), default=0) + 1
-    period = (len(names) / window_rows) if window_rows > 0 else 4.0
-    credit = period / 2.0 + 0.5
-    boost = max(0.0, period - 1.0)
-    pos = {k: i for i, k in enumerate(names)}
-
-    def key(k: str):
-        if k in last:
-            debt = float(current - last[k])
-            if k in _CORE_SURFACE and debt >= 2.0:
-                debt += boost
-        else:
-            wait = current - added.get(k, current)
-            debt = wait + credit
-            if wait >= 1:
-                debt += boost
-        return (-debt, pos[k])
-
-    return sorted(names, key=key)
-
-
-def _sweep_order(
-    base: dict[str, Callable[[SparkSession, str], DataFrame]],
-) -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Order the registry by certification debt (see ``_debt_order``),
-    derived at module load from the ``CORRECTNESS_r*.json`` artifacts,
-    the tracked added-round map, and the observed sweep-window size.
-
-    Every entry is oracle-checked locally by
-    tests/test_entry_oracle.py regardless of order; the ordering only
-    affects which rows a count/time-bounded external sweep certifies
-    first."""
-    ordered = _debt_order(
-        list(base), _last_green_rounds(), _added_rounds(),
-        _observed_window_rows(),
-    )
-    return {k: base[k] for k in ordered}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Hand-written order below is only the TIE-BREAK; the returned dict
-    # is re-ordered by _sweep_order (stalest driver certification
-    # first, derived from the CORRECTNESS_r*.json artifacts).
-    return _sweep_order({
-        # --- never driver-certified (r6 Next #1) -----------------------------
-        "doc_lexical_diversity": q_doc_lexical_diversity,
-        "value_percentile_state": q_value_percentile_state,
-        # --- new r7: scale-safe SemDeDup default (r6 Next #2) ----------------
-        "semantic_dedup_auto": q_semantic_dedup_auto,
-        # --- audit twins, last driver-green r5 (r6 Next #8) ------------------
-        "forecast_sarimax_audit": q_forecast_sarimax_audit,
-        "ann_ivf_recall": q_ann_ivf_recall,
-        # --- last driver-green r4: oldest certification, rotate now (Next #3)
-        # (slots 51-55 ride into the r8 front if the window is strictly 50)
-        "doc_pii_stats": q_doc_pii_stats,
-        "doc_repetition_stats": q_doc_repetition_stats,
-        "doc_commonness": q_doc_commonness,
-        "corpus_ngram_topk": q_corpus_ngram_topk,
-        "doc_keywords": q_doc_keywords,
-        "shipping_delay_report": q_shipping_delay_report,
-        "ngram_jaccard_capped": q_ngram_jaccard_capped,
-        "silver_reason_counts": q_silver_reason_counts,
-        "silver_clean_vs_actual": q_silver_clean_vs_actual,
-        "forecast_mllib": q_forecast_mllib,
-        "value_percentiles": q_value_percentiles,
-        "pipeline_lineage": q_pipeline_lineage,
-        "near_dup_clusters": q_near_dup_clusters,
-        "dedup_corpus": q_dedup_corpus,
-        "embedding_dedup": q_embedding_dedup,
-        "quarantine_summary": q_quarantine_summary,
-        "returned_item_report": q_returned_item_report,
-        "large_volume_customers": q_large_volume_customers,
-        "supplier_part_stats": q_supplier_part_stats,
-        "user_sessions": q_user_sessions,
-        "session_window_agg": q_session_window_agg,
-        "embedding_clusters": q_embedding_clusters,
-        "nation_trade_volume": q_nation_trade_volume,
-        "discounted_brand_revenue": q_discounted_brand_revenue,
-        "idle_rich_customers": q_idle_rich_customers,
-        "type_status_cube": q_type_status_cube,
-        "order_count_distribution": q_order_count_distribution,
-        "small_quantity_revenue": q_small_quantity_revenue,
-        "top_revenue_supplier": q_top_revenue_supplier,
-        "nation_market_share": q_nation_market_share,
-        "product_type_profit": q_product_type_profit,
-        "regional_cheapest_supplier": q_regional_cheapest_supplier,
-        "event_funnel": q_event_funnel,
-        "cohort_retention": q_cohort_retention,
-        "value_outliers": q_value_outliers,
-        "value_histogram": q_value_histogram,
-        "hourly_distinct_users": q_hourly_distinct_users,
-        "users_purchase_and_error": q_users_purchase_and_error,
-        "type_status_grouping_sets": q_type_status_grouping_sets,
-        "balance_quartiles": q_balance_quartiles,
-        "customer_running_revenue": q_customer_running_revenue,
-        "order_gap_stats": q_order_gap_stats,
-        "sliding_window_agg": q_sliding_window_agg,
-        "orders_expectations": q_orders_expectations,
-        "above_type_average_sql": q_above_type_average_sql,
-        "silver_rolling_features": q_silver_rolling_features,
-        "silver_gap_fill": q_silver_gap_fill,
-        "top_customers_per_nation": q_top_customers_per_nation,
-        "important_part_share": q_important_part_share,
-        "excess_share_suppliers": q_excess_share_suppliers,
-        # --- new r7 operators (local-green; driver cert rides the r8 front,
-        #     behind the 50-row r4 re-certification this round prioritizes) --
-        "orders_scd2": q_orders_scd2,
-        "embedding_rp_audit": q_embedding_rp_audit,
-        "kcenter_selection": q_kcenter_selection,
-        "doc_weighted_sample": q_doc_weighted_sample,
-        "site_trend_slopes": q_site_trend_slopes,
-        "corpus_collocations": q_corpus_collocations,
-        "hourly_anomalies": q_hourly_anomalies,
-        "doc_search_tfidf": q_doc_search_tfidf,
-        "doc_search_bm25": q_doc_search_bm25,
-        "part_fuzzy_pairs": q_part_fuzzy_pairs,
-        "part_fuzzy_pairs_auto": q_part_fuzzy_pairs_auto,
-        "doc_search_indexed": q_doc_search_indexed,
-        "click_attribution_outer": q_click_attribution_outer,
-        "media_jpeg420_audit": q_media_jpeg420_audit,
-        # --- new r10: progressive-JPEG byte-path audit -----------------------
-        "media_jpeg_prog_audit": q_media_jpeg_prog_audit,
-        "media_jpeg12_audit": q_media_jpeg12_audit,
-        "doc_winnow_pairs": q_doc_winnow_pairs,
-        "corpus_zipf_fit": q_corpus_zipf_fit,
-        "order_size_price_spearman": q_order_size_price_spearman,
-        "incremental_join_deletes": q_incremental_join_deletes,
-        "join_size_cms_audit": q_join_size_cms_audit,
-        "doc_split_ks": q_doc_split_ks,
-        "media_gif_audit": q_media_gif_audit,
-        "source_lang_entropy": q_source_lang_entropy,
-        "quantity_weighted_median": q_quantity_weighted_median,
-        "hourly_acf": q_hourly_acf,
-        "price_benford": q_price_benford,
-        "corpus_kcore": q_corpus_kcore,
-        "audio_frame_features": q_audio_frame_features,
-        "value_mad_outliers": q_value_mad_outliers,
-        "hourly_ccf": q_hourly_ccf,
-        "part_sorted_neighbors": q_part_sorted_neighbors,
-        "source_kl": q_source_kl,
-        "corpus_communities": q_corpus_communities,
-        "type_audience_similarity": q_type_audience_similarity,
-        "value_equidepth_bins": q_value_equidepth_bins,
-        "ann_binary_topk": q_ann_binary_topk,
-        "orders_zorder_stats": q_orders_zorder_stats,
-        "order_skyline": q_order_skyline,
-        "value_quantile_match": q_value_quantile_match,
-        "doc_lm_perplexity": q_doc_lm_perplexity,
-        "corpus_textrank": q_corpus_textrank,
-        "incremental_join_revenue": q_incremental_join_revenue,
-        "hybrid_search_rrf": q_hybrid_search_rrf,
-        "hourly_cusum": q_hourly_cusum,
-        "forecast_conformal": q_forecast_conformal,
-        "doc_negatives": q_doc_negatives,
-        "source_dataset_cards": q_source_dataset_cards,
-        "corpus_triangles": q_corpus_triangles,
-        "doc_search_prf": q_doc_search_prf,
-        "doc_search_prf_indexed": q_doc_search_prf_indexed,
-        "doc_frequent_pairs": q_doc_frequent_pairs,
-        "embedding_drift": q_embedding_drift,
-        "scd2_point_lookup": q_scd2_point_lookup,
-        "source_distinctive_terms": q_source_distinctive_terms,
-        "vocab_growth": q_vocab_growth,
-        # --- new r10 (sole addition: tokenizer-sizing coverage report) ------
-        "vocab_coverage": q_vocab_coverage,
-        # --- new r11: data-mixing weights, CCNet buckets, exact MIPS,
-        #     factor-4 JPEG audit ----------------------------------------------
-        "source_temperature_mix": q_source_temperature_mix,
-        "doc_ccnet_buckets": q_doc_ccnet_buckets,
-        "ann_mips_topk": q_ann_mips_topk,
-        "ann_mips_ivf_topk": q_ann_mips_ivf_topk,
-        "media_jpeg411_audit": q_media_jpeg411_audit,
-        "minhash_accuracy_audit": q_minhash_accuracy_audit,
-        "ann_hard_negatives": q_ann_hard_negatives,
-        # --- driver-certified r6 (current testdata) --------------------------
-        "doc_fingerprints": q_doc_fingerprints,
-        "exact_dedup": q_exact_dedup,
-        "fingerprint_dedup": q_fingerprint_dedup,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "simhash_signatures": q_simhash_signatures,
-        "simhash_near_pairs": q_simhash_near_pairs,
-        "ann_topk": q_ann_topk,
-        "embedding_near_pairs": q_embedding_near_pairs,
-        "ann_lsh_pairs": q_ann_lsh_pairs,
-        "gold_features": q_gold_features,
-        "gold_kpis": q_gold_kpis,
-        "forecast_baseline": q_forecast_baseline,
-        "asof_purchase_view": q_asof_purchase_view,
-        "dropped_events": q_dropped_events,
-        "type_status_rollup": q_type_status_rollup,
-        "silver_clean": q_silver_clean,
-        "customers_with_orders": q_customers_with_orders,
-        "customers_without_orders": q_customers_without_orders,
-        "events_iso_payload": q_events_iso_payload,
-        "upsert_merge": q_upsert_merge,
-        "revenue_q6": q_revenue_q6,
-        "doc_token_counts": q_doc_token_counts,
-        "ann_ivf_topk": q_ann_ivf_topk,
-        "embedding_quantization": q_embedding_quantization,
-        "forecast_eval": q_forecast_eval,
-        # --- new r13: rolling-origin backtest --------------------------------
-        "forecast_backtest": q_forecast_backtest,
-        "forecast_champion": q_forecast_champion,
-        "forecast_champion_forward": q_forecast_champion_forward,
-        "order_priority_sql": q_order_priority_sql,
-        "media_stats": q_media_stats,
-        "media_frame_sample": q_media_frame_sample,
-        "hourly_window_agg": q_hourly_window_agg,
-        "type_value_stats_salted": q_type_value_stats_salted,
-        "promo_revenue": q_promo_revenue,
-        "sole_failing_supplier": q_sole_failing_supplier,
-        "doc_split_counts": q_doc_split_counts,
-        "doc_stratified_sample": q_doc_stratified_sample,
-        "doc_filter_cascade": q_doc_filter_cascade,
-        "doc_pack_stats": q_doc_pack_stats,
-        "doc_mixture_counts": q_doc_mixture_counts,
-        "doc_contamination": q_doc_contamination,
-        "events_ohlc": q_events_ohlc,
-        "value_winsorized": q_value_winsorized,
-        "orders_profile": q_orders_profile,
-        "bloom_membership_audit": q_bloom_membership_audit,
-        "media_codec_audit": q_media_codec_audit,
-        "events_zscore": q_events_zscore,
-        "domain_affinity": q_domain_affinity,
-        "token_cms_audit": q_token_cms_audit,
-        "orders_cdc": q_orders_cdc,
-        # --- driver-certified r5 (current testdata) --------------------------
-        "forecast_sarimax": q_forecast_sarimax,
-        "ann_ivf_trained": q_ann_ivf_trained,
-        "leakage_safe_split": q_leakage_safe_split,
-        "event_type_drift": q_event_type_drift,
-        "pq_recall_audit": q_pq_recall_audit,
-        "pq_mips_recall_audit": q_pq_mips_recall_audit,
-        "ivfadc_mips_recall_audit": q_ivfadc_mips_recall_audit,
-        "ann_int8_mips_topk": q_ann_int8_mips_topk,
-        "ann_int8_packed_mips_topk": q_ann_int8_packed_mips_topk,
-        # --- new r13: IVF-SQ8 MIPS, symmetric + residual (r12 Next #6) -------
-        "ann_ivf_sq8_mips_topk": q_ann_ivf_sq8_mips_topk,
-        "ann_ivf_sq8r_mips_topk": q_ann_ivf_sq8r_mips_topk,
-        "embedding_mips_pairs": q_embedding_mips_pairs,
-        "ann_mips_lsh_pairs": q_ann_mips_lsh_pairs,
-        "doc_feature_hashes": q_doc_feature_hashes,
-        "ivfadc_recall": q_ivfadc_recall,
-        "hourly_agg_incremental": q_hourly_agg_incremental,
-        "dedup_cluster_sizes": q_dedup_cluster_sizes,
-        "token_heavy_hitters": q_token_heavy_hitters,
-        "doc_sparse_cosine": q_doc_sparse_cosine,
-        "hourly_count_decomposition": q_hourly_count_decomposition,
-        "referential_audit": q_referential_audit,
-        "doc_sample_fixed": q_doc_sample_fixed,
-        "dedup_corpus_best": q_dedup_corpus_best,
-        "doc_curriculum": q_doc_curriculum,
-        "value_drift": q_value_drift,
-        "doc_containment_pairs": q_doc_containment_pairs,
-        "session_attribution": q_session_attribution,
-        "value_tier_report": q_value_tier_report,
-        "semantic_dedup": q_semantic_dedup,
-        "sketch_accuracy_audit": q_sketch_accuracy_audit,
-        "doc_scrubbed_spans": q_doc_scrubbed_spans,
-        "source_quota_cap": q_source_quota_cap,
-        "doc_epoch_mixture": q_doc_epoch_mixture,
-        "incremental_novel_docs": q_incremental_novel_docs,
-        "incremental_novel_near": q_incremental_novel_near,
-        "curated_corpus": q_curated_corpus,
-        "forecast_hw_audit": q_forecast_hw_audit,
-        "funnel_latency": q_funnel_latency,
-        "bpe_audit": q_bpe_audit,
-        "doc_chunks": q_doc_chunks,
-        "salted_join_segments": q_salted_join_segments,
-        "doc_duplicated_spans": q_doc_duplicated_spans,
-        "summary_events": q_summary_events,
-        "distinct_event_types": q_distinct_event_types,
-        "latest_per_user_hour": q_latest_per_user_hour,
-        "recent_events_topk": q_recent_events_topk,
-        "events_window_filter": q_events_window_filter,
-        "hourly_type_pivot": q_hourly_type_pivot,
-        "hourly_completeness": q_hourly_completeness,
-        "hourly_long": q_hourly_long,
-        "drop_reason_counts": q_drop_reason_counts,
-        "keep_metrics": q_keep_metrics,
-        "props_stats": q_props_stats,
-        "pricing_summary": q_pricing_summary,
-        "shipping_priority": q_shipping_priority,
-        "local_supplier_volume": q_local_supplier_volume,
-        "doc_text_stats": q_doc_text_stats,
-        "doc_lang_id": q_doc_lang_id,
-        # --- r9 (consolidation round; the one addition the verdict
-        # budget allows: ROLLUP above a multi-join fact stream — the
-        # warehouse-scale form of §2.4's single-table
-        # type_status_rollup) -----------------------------------------
-        "revenue_rollup": q_revenue_rollup,
-    })
+    """Every ``q_<name>`` function above, keyed ``<name>``, in
+    definition order."""
+    return {n[2:]: f for n, f in globals().items() if n.startswith("q_")}
 
 
 # ---------------------------------------------------------------- oracles

@@ -914,20 +914,21 @@ def _write_index_batch(
         .bucketBy(n_buckets, "t").sortBy("t")
     )
     writer.saveAsTable(f"{table_prefix}_postings")
-    try:
+    if obs._jo.getRow().size() == 0:
+        # a batch with ZERO posting rows (every text NULL — the only
+        # way, since any non-NULL text yields >= 1 token) loses its
+        # observed-metrics row to AQE empty-relation handling: the
+        # metrics row comes back empty and obs.get would fail in row
+        # conversion. Fall back to the direct aggregate — one extra
+        # (trivial) pass over that degenerate batch only,
+        # value-identical by definition
+        stats_df = _search_stats(docs, text_col, batch_id)
+    else:
         got = obs.get
         stats_df = docs.sparkSession.createDataFrame(
             [(batch_id, got["n"], got["l"])],
             "batch_id string, n bigint, l bigint",
         )
-    except Exception:  # noqa: BLE001 — degenerate-batch fallback
-        # a batch with ZERO posting rows (every text NULL — the only
-        # way, since any non-NULL text yields >= 1 token) loses its
-        # observed-metrics row to AQE empty-relation handling and
-        # obs.get raises in row conversion; fall back to the direct
-        # aggregate — one extra (trivial) pass over that degenerate
-        # batch only, value-identical by definition
-        stats_df = _search_stats(docs, text_col, batch_id)
     stats_df.write.format("parquet").mode(mode).saveAsTable(
         f"{table_prefix}_stats"
     )

@@ -216,7 +216,9 @@ def global_rank(
 
     Laziness / error surface (r15): the audit and the cumulative
     offsets are FOLDED INTO THE PLAN — the bucket envelopes feed
-    ``raise_error`` guards inside the offset expression, and the
+    ``raise_error`` guards inside the broadcast join key, so every
+    consumer of the result (``count()``, a projection that omits the
+    rank, the rank itself) evaluates them, and the
     offsets are a running sum over the (tiny, ≤ max_buckets) bucket
     table — so calling this function launches NO job and performs no
     driver collect; each former call paid one driver round-trip per
@@ -262,11 +264,15 @@ def global_rank(
     # semantics — a driver-side Python `<=` on collected Rows disagrees
     # with Spark for struct keys (Row tuples) and raises bare
     # TypeErrors on mixed-null fields. Single-partition window is fine:
-    # the frame is capped at max_buckets rows. r15: the offsets are a
-    # running count over the SAME single-partition sort, and every
-    # contract check guards the offset expression itself (a raise_error
-    # branch feeding the consumed column cannot be pruned away) — no
-    # collect, no createDataFrame, no driver job per call.
+    # the frame holds at most max_buckets rows unless the query fails.
+    # It is not cut with limit(max_buckets + 1): the optimizer would
+    # size it at max_buckets + 1 rows in every consumer's join estimate
+    # and turn their broadcast joins into sort-merge joins. The offsets
+    # are a running count over the SAME single-partition sort, and
+    # every contract check guards the join key (a raise_error branch
+    # feeding the join condition cannot be pruned away, whatever the
+    # caller projects) — no collect, no createDataFrame, no driver job
+    # per call.
     wb = Window.orderBy("_gb")
     env = per_bucket.select(
         "_gb",
@@ -291,7 +297,7 @@ def global_rank(
     # The overlap test is NULL-safe: the last bucket's _next_lo is NULL,
     # so `>` yields NULL and the branch falls through.
     off_df = env.select(
-        F.col("_gb").alias("_gb2"),
+        F.col("_off"),
         F.when(
             F.col("_nb") > max_buckets,
             F.raise_error(
@@ -339,8 +345,8 @@ def global_rank(
                 )
             ),
         )
-        .otherwise(F.col("_off"))
-        .alias("_off"),
+        .otherwise(F.col("_gb"))
+        .alias("_gb2"),
     )
     w = Window.partitionBy("_gb").orderBy("_gk")
     # NULL-SAFE join key (r15): a plain inner equi-join lets the

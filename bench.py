@@ -27,246 +27,9 @@ import __spark_entry__ as entry_mod  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Headline set: the scale-relevant queries (big scans, shuffles, joins,
-# windows) — not the tiny serving lookups.
-HEADLINE = [
-    "revenue_rollup",
-    "pricing_summary",
-    "shipping_priority",
-    "local_supplier_volume",
-    "latest_per_user_hour",
-    "hourly_type_pivot",
-    "drop_reason_counts",
-    "recent_events_topk",
-    "props_stats",
-    "doc_text_stats",
-    "exact_dedup",
-    "ngram_jaccard_pairs",
-    "ngram_jaccard_capped",
-    "minhash_lsh_pairs",
-    "simhash_near_pairs",
-    "ann_topk",
-    "ann_lsh_pairs",
-    "embedding_near_pairs",
-    "silver_clean",
-    "upsert_merge",
-    "revenue_q6",
-    "doc_token_counts",
-    "forecast_sarimax",
-    "asof_purchase_view",
-    "promo_revenue",
-    "type_value_stats_salted",
-    "hourly_window_agg",
-    "silver_reason_counts",
-    "forecast_mllib",
-    "returned_item_report",
-    "large_volume_customers",
-    "supplier_part_stats",
-    "user_sessions",
-    "session_window_agg",
-    "embedding_clusters",
-    "nation_trade_volume",
-    "discounted_brand_revenue",
-    "idle_rich_customers",
-    "doc_split_counts",
-    "doc_filter_cascade",
-    "order_count_distribution",
-    "nation_market_share",
-    "product_type_profit",
-    "shipping_delay_report",
-    "regional_cheapest_supplier",
-    "sole_failing_supplier",
-    "doc_pack_stats",
-    "dedup_corpus",
-    "doc_contamination",
-    "doc_pii_stats",
-    "doc_keywords",
-    "event_funnel",
-    "top_customers_per_nation",
-    "cohort_retention",
-    "silver_rolling_features",
-    "silver_gap_fill",
-    # r5 additions (VERDICT r4 ask #8): plan shapes with no tracked
-    # number yet — window frames, grouping sets/cube, expectation
-    # suites, iterative CC, quantization, IVF, the salted join
-    "near_dup_clusters",
-    "embedding_dedup",
-    "sliding_window_agg",
-    "customer_running_revenue",
-    "value_outliers",
-    "doc_mixture_counts",
-    "hourly_completeness",
-    "type_status_grouping_sets",
-    "type_status_cube",
-    "orders_expectations",
-    "embedding_quantization",
-    "balance_quartiles",
-    "order_gap_stats",
-    "hourly_distinct_users",
-    "above_type_average_sql",
-    "salted_join_segments",
-    "ann_ivf_topk",
-    "doc_duplicated_spans",
-    "session_attribution",
-    "value_tier_report",
-    "semantic_dedup",
-    "sketch_accuracy_audit",
-    "doc_scrubbed_spans",
-    "source_quota_cap",
-    "doc_epoch_mixture",
-    "incremental_novel_docs",
-    "incremental_novel_near",
-    "curated_corpus",
-    "forecast_hw_audit",
-    "funnel_latency",
-    "bpe_audit",
-    "doc_chunks",
-    "leakage_safe_split",
-    "event_type_drift",
-    "pq_recall_audit",
-    "doc_feature_hashes",
-    "ivfadc_recall",
-    "hourly_agg_incremental",
-    "dedup_cluster_sizes",
-    "token_heavy_hitters",
-    "doc_sparse_cosine",
-    "hourly_count_decomposition",
-    "referential_audit",
-    "doc_sample_fixed",
-    "dedup_corpus_best",
-    "doc_curriculum",
-    "value_drift",
-    "doc_containment_pairs",
-    # r6 additions
-    "events_ohlc",
-    "value_winsorized",
-    "orders_profile",
-    "bloom_membership_audit",
-    "media_codec_audit",
-    "events_zscore",
-    "domain_affinity",
-    "token_cms_audit",
-    "orders_cdc",
-    "value_percentile_state",
-    "doc_lexical_diversity",
-    # r7 additions (VERDICT r6 ask #4: close the implicit exclusion
-    # list — every formerly-absent registry entry that does real scan/
-    # shuffle/kernel work at sf0.1 is now benched; the few remaining
-    # exclusions are in EXCLUDED below with a reason each)
-    "semantic_dedup_auto",
-    "doc_fingerprints",
-    "fingerprint_dedup",
-    "simhash_signatures",
-    "doc_repetition_stats",
-    "doc_commonness",
-    "corpus_ngram_topk",
-    "doc_lang_id",
-    "doc_stratified_sample",
-    "gold_features",
-    "gold_kpis",
-    "forecast_baseline",
-    "forecast_eval",
-    "silver_clean_vs_actual",
-    "type_status_rollup",
-    "order_priority_sql",
-    "value_percentiles",
-    "value_histogram",
-    "pipeline_lineage",
-    "quarantine_summary",
-    "small_quantity_revenue",
-    "top_revenue_supplier",
-    "users_purchase_and_error",
-    "important_part_share",
-    "excess_share_suppliers",
-    "media_stats",
-    "media_frame_sample",
-    "hourly_long",
-    # new r7 operators
-    "orders_scd2",
-    "embedding_rp_audit",
-    "kcenter_selection",
-    "doc_weighted_sample",
-    "site_trend_slopes",
-    "corpus_collocations",
-    "hourly_anomalies",
-    "doc_search_tfidf",
-    "doc_search_bm25",
-    "part_fuzzy_pairs",
-    "doc_lm_perplexity",
-    "corpus_textrank",
-    "incremental_join_revenue",
-    "hybrid_search_rrf",
-    "hourly_cusum",
-    "forecast_conformal",
-    "doc_negatives",
-    "source_dataset_cards",
-    "corpus_triangles",
-    "doc_search_prf",
-    "doc_search_prf_indexed",
-    "doc_frequent_pairs",
-    "embedding_drift",
-    "scd2_point_lookup",
-    "source_distinctive_terms",
-    "vocab_growth",
-    "vocab_coverage",
-    "minhash_accuracy_audit",
-    "ann_hard_negatives",
-    # r8 additions
-    "part_fuzzy_pairs_auto",
-    "doc_search_indexed",
-    "click_attribution_outer",
-    "media_jpeg420_audit",
-    "media_jpeg_prog_audit",
-    "media_jpeg12_audit",
-    "doc_winnow_pairs",
-    "corpus_zipf_fit",
-    "order_size_price_spearman",
-    "incremental_join_deletes",
-    "join_size_cms_audit",
-    "doc_split_ks",
-    "media_gif_audit",
-    "source_lang_entropy",
-    "quantity_weighted_median",
-    "hourly_acf",
-    "price_benford",
-    "corpus_kcore",
-    "audio_frame_features",
-    "value_mad_outliers",
-    "hourly_ccf",
-    "part_sorted_neighbors",
-    "source_kl",
-    "corpus_communities",
-    "type_audience_similarity",
-    "value_equidepth_bins",
-    "ann_binary_topk",
-    "orders_zorder_stats",
-    "order_skyline",
-    "value_quantile_match",
-    # r11 additions
-    "source_temperature_mix",
-    "doc_ccnet_buckets",
-    "ann_mips_topk",
-    "ann_mips_ivf_topk",
-    "media_jpeg411_audit",
-    # r12 additions
-    "pq_mips_recall_audit",
-    "ivfadc_mips_recall_audit",
-    "ann_int8_mips_topk",
-    "ann_int8_packed_mips_topk",
-    "embedding_mips_pairs",
-    "ann_mips_lsh_pairs",
-    # r13 additions
-    "ann_ivf_sq8_mips_topk",
-    "ann_ivf_sq8r_mips_topk",
-    "forecast_backtest",
-    "forecast_champion",
-    "forecast_champion_forward",
-]
-
-# Every registry entry NOT in HEADLINE, with the reason it is excluded
-# from the perf artifact ("no silent caps" — the bench asserts
-# HEADLINE | EXCLUDED == queries().keys() and writes this map into
-# BENCH_DETAIL.json so absences are visible, not implicit).
+# The registry entries left out of the perf artifact, each with its
+# reason (written into BENCH_DETAIL.json so absences are visible, not
+# implicit). Every other entry is benched.
 EXCLUDED = {
     "summary_events": "the bench warmup query itself (timed cost would double-count JVM boot)",
     "distinct_event_types": "tiny serving lookup (sub-50ms; noise dominates signal)",
@@ -280,6 +43,10 @@ EXCLUDED = {
     "ann_ivf_recall": "recall-audit twin of benched ann_ivf_topk + ann_topk (re-runs both)",
     "ann_ivf_trained": "MLlib KMeans fit dominated by iteration count, not data-plane cost; covered by forecast_mllib for the fit path and ann_ivf_topk for the probe path",
 }
+
+# Headline set: every registry entry not excluded above, in registry
+# order.
+HEADLINE = [k for k in entry_mod.queries() if k not in EXCLUDED]
 
 
 def load_prev_detail(detail_path: str) -> dict | None:
@@ -597,17 +364,11 @@ def main() -> None:
     spark = get_spark("bench")
     queries = entry_mod.queries()
 
-    # no silent caps: every registry entry is either benched or in
-    # EXCLUDED with a written reason — a new entry that is neither
-    # fails the bench loudly instead of silently vanishing from the
-    # perf artifact
-    unaccounted = set(queries) - set(HEADLINE) - set(EXCLUDED)
-    stale = (set(HEADLINE) | set(EXCLUDED)) - set(queries)
-    if unaccounted or stale:
-        raise SystemExit(
-            f"bench coverage drift: unaccounted registry entries "
-            f"{sorted(unaccounted)}; stale bench names {sorted(stale)}"
-        )
+    # an exclusion naming no registry entry is a typo or a leftover
+    # from a removed entry: fail loudly instead of carrying it
+    stale = set(EXCLUDED) - set(queries)
+    if stale:
+        raise SystemExit(f"bench coverage drift: stale bench names {sorted(stale)}")
 
     # warmup: boot JVM + parquet footer reads + spawn the Python UDF
     # workers (otherwise their one-time fork cost lands on whichever
@@ -681,8 +442,6 @@ def main() -> None:
     errors: dict[str, str] = {}
     cold_total = 0.0
     for name in HEADLINE:
-        if name not in queries:
-            continue
         try:
             cold = run_once(name)
             warm = run_once(name)

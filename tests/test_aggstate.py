@@ -430,7 +430,6 @@ def test_stream_cms_state_equals_union_build(spark, tmp_path):
     assert again == want
 
 
-@pytest.mark.slow
 def test_state_and_lsh_markers_work_through_file_scheme_hadoop_paths(
     spark, tmp_path
 ):

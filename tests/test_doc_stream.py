@@ -56,7 +56,6 @@ def test_stream_scrubs_filters_and_dedups(spark, tmp_path):
     assert rows[1].n_tokens > 0
 
 
-@pytest.mark.slow
 def test_stream_replay_is_idempotent(spark, tmp_path):
     drop = tmp_path / "drop"
     out = str(tmp_path / "clean")
@@ -193,7 +192,6 @@ def test_stream_near_dup_across_batches_via_lsh_index(spark, tmp_path):
     } == {1, 11}
 
 
-@pytest.mark.slow
 def test_append_lsh_index_per_table_markers_are_replay_safe(spark, tmp_path):
     # review r6: a crash BETWEEN the bands and sets appends must replay
     # only the missing table — an all-or-nothing marker would re-append
@@ -286,7 +284,6 @@ def test_stream_property_rotating_sources_exactly_one_row_per_key(spark, tmp_pat
     run()
 
 
-@pytest.mark.slow
 def test_search_index_survives_crash_between_search_and_lsh_append(
     spark, tmp_path, monkeypatch
 ):
@@ -366,7 +363,6 @@ def test_search_index_survives_crash_between_search_and_lsh_append(
             spark.sql(f"DROP TABLE IF EXISTS {lsh_prefix}_{suffix}")
 
 
-@pytest.mark.slow
 def test_search_index_replay_after_lsh_commit_skips_empty_append(spark, tmp_path):
     # ADVICE r7 (low): a replay AFTER the LSH append committed probes
     # its own docs as self-near-dups → empty survivors; the old code

@@ -16,10 +16,8 @@ def test_every_oracle_has_a_query():
 
 
 def test_bench_headline_names_resolve():
-    qs = entry_mod.queries()
-    missing = [n for n in bench.HEADLINE if n not in qs]
-    assert not missing, missing
-    assert len(set(bench.HEADLINE)) == len(bench.HEADLINE), "duplicate bench rows"
+    stale = sorted(set(bench.EXCLUDED) - set(entry_mod.queries()))
+    assert not stale, stale
 
 
 def test_invariance_list_names_resolve():
@@ -33,328 +31,6 @@ def test_rows_only_queries_are_the_documented_two():
     qs, os_ = entry_mod.queries(), entry_mod.oracle_sql()
     rows_only = sorted(set(qs) - set(os_))
     assert rows_only == ["ann_ivf_trained", "forecast_sarimax"], rows_only
-
-
-def test_registry_order_is_certification_debt_first():
-    # VERDICT r7 Next #2 / r8 Next #4: the sweep-front ordering is
-    # DERIVED from the CORRECTNESS_r*.json artifacts + the tracked
-    # added-round map + the OBSERVED sweep-window size, never
-    # maintained by hand. Ordering key: certification DEBT descending;
-    # the never-certified credit is period/2 + 0.5 (period =
-    # n_entries / window_rows), and §2-core serving rows >= 2 rounds
-    # stale ride a period-1 cadence boost. Plain "never-certified
-    # first" regressed at 200 entries: a round adding ~20 operators
-    # pushed 4-round-stale certified rows out of a 50-row sweep
-    # window behind its own zero-wait additions.
-    last = entry_mod._last_green_rounds()
-    added = entry_mod._added_rounds()
-    current = max(last.values(), default=0) + 1
-    w = entry_mod._observed_window_rows()
-    ks = list(entry_mod.queries())
-    period = (len(ks) / w) if w > 0 else 4.0
-    credit = period / 2.0 + 0.5
-    boost = max(0.0, period - 1.0)
-
-    def debt(k):
-        if k in last:
-            d = float(current - last[k])
-            if k in entry_mod._CORE_SURFACE and d >= 2.0:
-                d += boost
-            return d
-        wait = current - added.get(k, current)
-        return wait + credit + (boost if wait >= 1 else 0.0)
-
-    debts = [debt(k) for k in ks]
-    assert debts == sorted(debts, reverse=True), [
-        (k, d) for k, d in zip(ks, debts)
-    ][:5]
-    # (r10) straggler convergence: EVERY never-certified entry that has
-    # already missed a sweep (wait >= 1) must sit inside the observed
-    # sweep window — the r9 verdict's done-condition for r10 is that
-    # all nine stragglers certify, after which every registry entry
-    # has been driver-certified at least once. Under the credit alone
-    # revenue_rollup (added r9, wait 1) ranked 59th behind fifty
-    # 4-stale r6 rows; the straggler boost is what restores this.
-    stragglers = {
-        k for k in ks if k not in last and added.get(k, current) < current
-    }
-    if stragglers and w > 0:
-        assert max(ks.index(k) for k in stragglers) < w, sorted(
-            (ks.index(k), k) for k in stragglers
-        )
-    # the concrete guarantees the rotation rides on:
-    # (a) non-core certified rows staler than the credit outrank
-    #     never-certified entries added in the current round...
-    stale = {
-        k
-        for k in ks
-        if k in last
-        and k not in entry_mod._CORE_SURFACE
-        and current - last[k] > credit
-    }
-    newly = {k for k in ks if k not in last and added.get(k, 0) >= current}
-    if stale and newly:
-        assert max(ks.index(k) for k in stale) < min(
-            ks.index(k) for k in newly
-        )
-    # (b) ...while never-certified entries from PREVIOUS rounds outrank
-    #     non-core rows certified in the round they were added or later
-    prior_never = {
-        k for k in ks if k not in last and added.get(k, current) < current
-    }
-    recent = {
-        k
-        for k in ks
-        if k in last
-        and k not in entry_mod._CORE_SURFACE
-        and current - last[k] <= 2
-    }
-    if prior_never and recent:
-        assert max(ks.index(k) for k in prior_never) < min(
-            ks.index(k) for k in recent
-        )
-    # (c) a §2-core row >= 2 rounds stale outranks every non-core
-    #     certified row of equal staleness (the cadence guarantee)
-    overdue_core = {
-        k
-        for k in ks
-        if k in entry_mod._CORE_SURFACE
-        and k in last
-        and current - last[k] >= 2
-    }
-    plain_same = {
-        k
-        for k in ks
-        if k in last
-        and k not in entry_mod._CORE_SURFACE
-        and current - last[k] in {current - last[c] for c in overdue_core}
-    }
-    if overdue_core and plain_same:
-        assert max(ks.index(k) for k in overdue_core) < min(
-            ks.index(k) for k in plain_same
-        )
-
-
-def test_debt_order_survives_simulated_window_sizes():
-    # VERDICT r8 Next #4 done-condition: the derived ordering holds
-    # with a 25-row and a 100-row sweep window, not just the observed
-    # 50. Synthetic registry: 200 entries — 40 certified 5 rounds ago,
-    # 40 certified 3 rounds ago, 40 certified last round (incl. two
-    # core rows), 40 never-certified added last round, 40 never-
-    # certified added this round; current round = 9.
-    names, last, added = [], {}, {}
-    core_stale = ["summary_events", "keep_metrics"]       # 3 stale
-    core_fresh = ["hourly_long", "props_stats"]           # certified r8
-    for i in range(40):
-        names.append(f"old5_{i}"); last[f"old5_{i}"] = 4
-        added[f"old5_{i}"] = 3
-    names += core_stale
-    for k in core_stale:
-        last[k] = 6; added[k] = 1
-    for i in range(38):
-        names.append(f"mid3_{i}"); last[f"mid3_{i}"] = 6
-        added[f"mid3_{i}"] = 3
-    names += core_fresh
-    for k in core_fresh:
-        last[k] = 8; added[k] = 1
-    for i in range(38):
-        names.append(f"new1_{i}"); last[f"new1_{i}"] = 8
-        added[f"new1_{i}"] = 5
-    for i in range(40):
-        names.append(f"nc8_{i}"); added[f"nc8_{i}"] = 8
-    for i in range(40):
-        names.append(f"nc9_{i}"); added[f"nc9_{i}"] = 9
-
-    for w in (25, 50, 100):
-        period = len(names) / w
-        credit = period / 2.0 + 0.5
-        boost = max(0.0, period - 1.0)
-        order = entry_mod._debt_order(names, last, added, w)
-        idx = {k: i for i, k in enumerate(order)}
-        # overdue core rows lead everything except (possibly) the
-        # deepest certified backlog and boosted never-certified
-        # stragglers — their boosted debt clears the steady-state
-        # cutoff (= period) at every window size, but a 5-round-stale
-        # row may still legitimately drain first when the period is
-        # short, and a straggler (also boosted, also never validated)
-        # can rank ahead when the credit exceeds the core rows'
-        # staleness edge
-        assert max(idx[k] for k in core_stale) < min(
-            idx[k]
-            for k in names
-            if k in core_fresh
-            or k.startswith(("mid3_", "new1_", "nc9_"))
-        ), w
-        # fresh core rows get NO boost — they rank with the other
-        # round-8-certified rows, not ahead of staler work
-        assert min(idx[k] for k in core_fresh) > max(
-            idx[f"old5_{i}"] for i in range(40)
-        ), w
-        # last-round never-certified entries are STRAGGLERS (they
-        # missed the round-8 sweep): debt = 1 + credit + boost. They
-        # outrank certified rows strictly fresher than that and lose
-        # to strictly staler ones (at w=100 the 5-stale backlog still
-        # drains first: 3.5 < 5)
-        nc_debt = 1 + credit + boost
-        for cert_debt, grp in ((5, "old5_0"), (3, "mid3_0"), (1, "new1_0")):
-            if cert_debt > nc_debt:
-                assert idx[grp] < idx["nc8_0"], (w, grp)
-            elif cert_debt < nc_debt:
-                assert idx[grp] > idx["nc8_0"], (w, grp)
-        # this round's additions (wait 0) get NO straggler boost —
-        # the anti-starvation property the credit was built for
-        nc9_debt = 0 + credit
-        for cert_debt, grp in ((5, "old5_0"), (3, "mid3_0"), (1, "new1_0")):
-            if cert_debt > nc9_debt:
-                assert idx[grp] < idx["nc9_0"], (w, grp)
-            elif cert_debt < nc9_debt:
-                assert idx[grp] > idx["nc9_0"], (w, grp)
-        # never-certified from a previous round always outrank this
-        # round's additions
-        assert max(idx[f"nc8_{i}"] for i in range(40)) < min(
-            idx[f"nc9_{i}"] for i in range(40)
-        ), w
-    # the window-derivation itself: a 25-row window must rank
-    # straggler never-certified entries HIGHER relative to the 5-stale
-    # backlog than a 100-row window does (period quadruples ->
-    # credit + boost more than quadruple: 1+4.5+7=12.5 > 5 vs
-    # 1+1.5+1=3.5 < 5)
-    o25 = entry_mod._debt_order(names, last, added, 25)
-    o100 = entry_mod._debt_order(names, last, added, 100)
-    assert o25.index("nc8_0") < o25.index("old5_0")
-    assert o100.index("nc8_0") > o100.index("old5_0")
-
-
-def test_debt_order_properties_under_random_histories():
-    # hypothesis fuzz over random certification histories and window
-    # sizes: the invariants that must hold for EVERY history, not just
-    # the constructed ones above
-    from hypothesis import given, settings, strategies as st
-
-    core = sorted(entry_mod._CORE_SURFACE)
-
-    @st.composite
-    def history(draw):
-        n = draw(st.integers(min_value=5, max_value=120))
-        names = [f"e{i}" for i in range(n)] + draw(
-            st.lists(st.sampled_from(core), max_size=4, unique=True)
-        )
-        current = draw(st.integers(min_value=2, max_value=12))
-        last, added = {}, {}
-        for k in names:
-            added[k] = draw(st.integers(min_value=1, max_value=current))
-            if added[k] < current and draw(st.booleans()):
-                last[k] = draw(
-                    st.integers(min_value=added[k], max_value=current - 1)
-                )
-        w = draw(st.integers(min_value=1, max_value=2 * len(names)))
-        return names, last, added, w, current
-
-    @given(history())
-    @settings(max_examples=200, deadline=None)
-    def check(h):
-        names, last, added, w, current = h
-        order = entry_mod._debt_order(names, last, added, w)
-        # permutation of the input, nothing lost or invented
-        assert sorted(order) == sorted(names)
-        # deterministic
-        assert order == entry_mod._debt_order(names, last, added, w)
-        # mirror the function's own notion of "current": one past the
-        # newest certification on record (the drawn upper bound only
-        # shapes the history)
-        current = max(last.values(), default=0) + 1
-        period = len(names) / w
-        credit = period / 2.0 + 0.5
-        boost = max(0.0, period - 1.0)
-        # the emitted order IS the non-increasing debt order
-        def debt(k):
-            if k in last:
-                d = float(current - last[k])
-                if k in entry_mod._CORE_SURFACE and d >= 2.0:
-                    d += boost
-                return d
-            wait = current - added[k]
-            return wait + credit + (boost if wait >= 1 else 0.0)
-        ds = [debt(k) for k in order]
-        assert all(a >= b for a, b in zip(ds, ds[1:]))
-        # among EXACTLY equal debts, input order is preserved (stable
-        # tie-break). Exact equality, not a tolerance: the mirror
-        # replays the function's own float ops in the same order, and
-        # sorted() keys on the exact values — two debts one ulp apart
-        # (e.g. 3 + credit + boost vs a certified 5.0) are a REAL
-        # ordering difference, not a tie (found by hypothesis when the
-        # straggler boost landed never-rows next to certified ones)
-        for a, b in zip(order, order[1:]):
-            if debt(a) == debt(b):
-                assert names.index(a) < names.index(b)
-
-    check()
-
-
-def test_core_surface_reenters_within_two_rounds_from_real_history():
-    # VERDICT r9 Next #5, repaired per VERDICT r10 "What's wrong" #1:
-    # the previous version anchored ABSOLUTE round labels at
-    # max(last_green)+1 and asserted "the r10 front contains no core
-    # row" — which broke the moment the driver wrote the next
-    # CORRECTNESS artifact into the tree (current shifted to 11, the
-    # order it labeled r10 was really the r11 order, and the cadence
-    # boost had CORRECTLY pulled the 2-stale core rows in). The
-    # contract is round-RELATIVE: a §2-core serving row re-enters the
-    # sweep front within 2 rounds of its last green, whatever round
-    # the on-disk history ends at. Simulate the driver's mechanics
-    # forward from the REAL history: each round certifies the front
-    # `w` rows of the CURRENT debt order, then the next round
-    # re-derives the order from the updated history.
-    last = dict(entry_mod._last_green_rounds())
-    added = entry_mod._added_rounds()
-    names = list(entry_mod.queries())
-    w = entry_mod._observed_window_rows()
-    assert w > 0, "no CORRECTNESS artifact on disk"
-    core = [k for k in names if k in entry_mod._CORE_SURFACE]
-    assert len(core) == 11, core
-    # every core row has been driver-certified at least once (true
-    # since the r9 cadence-regime start) — the relative guarantee
-    # below is anchored on last greens, so they must exist
-    assert all(k in last for k in core), [k for k in core if k not in last]
-
-    current = max(last.values()) + 1
-    # the NEXT sweep (round `current`, whatever its number) must
-    # contain every never-certified STRAGGLER — an entry that has
-    # already missed >= 1 sweep since registration (the straggler
-    # boost's anti-starvation guarantee, live on real history)
-    order = entry_mod._debt_order(names, last, added, w)
-    stragglers = {
-        k for k in names if k not in last and added.get(k, current) < current
-    }
-    assert stragglers <= set(order[:w]), sorted(stragglers - set(order[:w]))
-
-    # simulate 6 rounds forward; after EVERY sweep, no core row may
-    # remain >= 2 rounds stale: at staleness 2 the period-1 boost
-    # lifts its debt past the steady-state cutoff, so the sweep that
-    # planned while it was 2-stale must have re-certified it. (The
-    # zero-cost-while-fresh half — no boost below staleness 2 — is
-    # covered structurally by test_debt_order_survives_simulated_
-    # window_sizes and the hypothesis property test; asserting "fresh
-    # core NEVER appears in a front" here would be wrong, since a
-    # 1-stale row can legitimately ride in on plain debt when the
-    # backlog is shallow.)
-    sim_last = dict(last)
-    for rnd in range(current, current + 6):
-        front = entry_mod._debt_order(names, sim_last, added, w)[:w]
-        for k in front:
-            sim_last[k] = rnd
-        overdue = {k: rnd - sim_last[k] for k in core if rnd - sim_last[k] >= 2}
-        assert not overdue, (rnd, overdue)
-
-
-def test_every_registry_entry_declares_its_added_round():
-    # the added-round map is what lets the debt ordering rank entries
-    # that have never been swept; an unrecorded entry would silently
-    # rank as zero-debt. Registering a query without recording its
-    # round fails here.
-    added = entry_mod._added_rounds()
-    missing = sorted(set(entry_mod.queries()) - set(added))
-    assert not missing, missing
 
 
 def test_bench_drift_normalization(tmp_path):
@@ -563,14 +239,3 @@ def test_query_fingerprints_move_with_implementing_code():
     )
     assert inert == base
 
-
-def test_last_green_rounds_semantics():
-    # green = full oracle match OR the documented rows-only check;
-    # errors and hash mismatches must NOT count as certification
-    last = entry_mod._last_green_rounds()
-    # r2's shipping_delay_report row was a hash MISMATCH — its last
-    # green must come from a later sweep, never round 2
-    assert last.get("shipping_delay_report", -1) != 2
-    # the two model fits certify through their rows-only records
-    assert last.get("forecast_sarimax", -1) >= 6
-    assert last.get("ann_ivf_trained", -1) >= 6
