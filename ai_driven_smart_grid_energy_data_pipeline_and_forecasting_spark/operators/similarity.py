@@ -107,6 +107,44 @@ def _batch_topk_cut(
     return order[ranks < k]
 
 
+def _scan_topk(
+    corpus: DataFrame, q_ids: np.ndarray, payload, score_batch,
+    score_schema: str, k: int, sim_col: str = "sim",
+) -> DataFrame:
+    """The exact-scan plan: ``score_batch(pdf, payload)`` scores a
+    corpus batch against every broadcast query (batch ids, B×Q
+    ``score_schema`` columns); self-matches drop, each query keeps its
+    ≤ k finite best under (sim desc, id asc), and the rank window ends."""
+    bc = corpus.sparkSession.sparkContext.broadcast((q_ids, payload))
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids_q, qp = bc.value
+        if len(ids_q) == 0:
+            return
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            nid, cols = score_batch(pdf, qp)
+            sim = cols[sim_col]
+            sim[np.equal.outer(nid, ids_q)] = -np.inf  # self-match
+            for qi in range(len(ids_q)):
+                order = np.lexsort((nid, -sim[:, qi]))[: min(k, len(nid))]
+                keep = order[np.isfinite(sim[order, qi])]
+                if len(keep):
+                    yield pd.DataFrame(
+                        {
+                            "query_id": ids_q[qi],
+                            "neighbor_id": nid[keep],
+                            **{c: v[keep, qi] for c, v in cols.items()},
+                        }
+                    )
+
+    scored = corpus.mapInPandas(
+        score, f"query_id long, neighbor_id long, {score_schema}"
+    )
+    return _rank_topk(scored, k, sim_col)
+
+
 def _pack_codes(q: np.ndarray) -> list[bytes]:
     """int8 code matrix → one dims-byte two's-complement buffer per
     row — the FAISS SQ8 storage layout (1 byte/dim, 4× narrower than
@@ -207,7 +245,6 @@ def ann_bruteforce_topk(
     """
     if metric not in ("cosine", "dot"):
         raise ValueError(f"ann_bruteforce_topk: unknown metric {metric!r}")
-    spark = emb.sparkSession
     qpdf = (
         emb.filter(query_filter)
         .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
@@ -216,44 +253,18 @@ def ann_bruteforce_topk(
     q_ids = qpdf["query_id"].to_numpy(dtype=np.int64)
     q_mat = _as_matrix(qpdf["qv"], dims)
     q_norm = _ordered_norms(q_mat) if len(q_ids) else np.empty(0)
-    bc = spark.sparkContext.broadcast((q_ids, q_mat, q_norm))
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, mq, nq = bc.value
-        if len(ids_q) == 0:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mc = _as_matrix(pdf[vec_col], dims)
-            ids_c = pdf[id_col].to_numpy(dtype=np.int64)
-            sim = _ordered_gemm(mq, mc)
-            if metric == "cosine":
-                nc = _ordered_norms(mc)
-                sim = sim / np.multiply.outer(nq, nc)
-            sim[np.equal.outer(ids_q, ids_c)] = -np.inf  # self-match
-            # per-batch candidate cut under the full (sim desc, id asc)
-            # order so global top-k survives ties at the boundary
-            for qi in range(len(ids_q)):
-                order = np.lexsort((ids_c, -sim[qi]))[: min(k, len(ids_c))]
-                keep = order[np.isfinite(sim[qi][order])]
-                if len(keep):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": ids_q[qi],
-                            "neighbor_id": ids_c[keep],
-                            "sim": sim[qi][keep],
-                        }
-                    )
+    def score_batch(pdf, q):
+        mq, nq = q
+        mc = _as_matrix(pdf[vec_col], dims)
+        sim = _ordered_gemm(mq, mc)
+        if metric == "cosine":
+            sim = sim / np.multiply.outer(nq, _ordered_norms(mc))
+        return pdf[id_col].to_numpy(dtype=np.int64), {"sim": sim.T}
 
-    scored = emb.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _scan_topk(
+        emb.select(id_col, vec_col), q_ids, (q_mat, q_norm), score_batch,
+        "sim double", k,
     )
 
 
@@ -475,9 +486,7 @@ def cosine_threshold_pairs(
             mask &= np.less.outer(ids_a, ids_b)
         ai, bi = np.nonzero(mask)
         if not len(ai):
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "sim": []}).astype(
-                {"vec_a": np.int64, "vec_b": np.int64, "sim": np.float64}
-            )
+            return empty
         xa, xb = ids_a[ai], ids_b[bi]
         return pd.DataFrame(
             {
@@ -517,32 +526,37 @@ def mips_threshold_pairs(
 # ------------------------------------------------------------ IVF probe
 
 
+def _id_head(
+    emb: DataFrame, n: int, dims: int, id_col: str, vec_col: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """The rows with id < n — one bounded collect — as (ids, matrix)
+    sorted by id."""
+    pdf = emb.filter(F.col(id_col) < n).select(id_col, vec_col).toPandas()
+    ids = pdf[id_col].to_numpy(dtype=np.int64)
+    order = np.argsort(ids)
+    return ids[order], _as_matrix(pdf[vec_col], dims)[order]
+
+
 def _head_centroids(
     emb: DataFrame,
     n_centroids: int,
     dims: int,
     id_col: str,
     vec_col: str,
-) -> tuple[np.ndarray, np.ndarray]:
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Deterministic id-ordered head-sample coarse quantizer shared by
     the whole IVF family (fixed sample — Lloyd refinement is an
     offline concern that changes centroid quality, not plan shape).
-    Returns (c_ids, c_mat) sorted by centroid id so argmax-first-max
-    ties resolve to the smallest id (the SQL ORDER BY convention)."""
-    cpdf = (
-        emb.filter(F.col(id_col) < n_centroids)
-        .select(id_col, vec_col)
-        .toPandas()
-    )
-    if len(cpdf) == 0:
+    Returns (c_ids, c_mat, c_norm) sorted by centroid id so
+    argmax-first-max ties resolve to the smallest id (the SQL ORDER BY
+    convention)."""
+    c_ids, c_mat = _id_head(emb, n_centroids, dims, id_col, vec_col)
+    if len(c_ids) == 0:
         raise ValueError(
             f"no centroid rows: filter {id_col} < {n_centroids} matched "
             "nothing (ids not starting at 0?) — supply a corpus whose id "
             "head exists, or use the trained-KMeans variant"
         )
-    order = np.argsort(cpdf[id_col].to_numpy(dtype=np.int64))
-    c_ids = cpdf[id_col].to_numpy(dtype=np.int64)[order]
-    c_mat = _as_matrix(cpdf[vec_col], dims)[order]
     c_norm = _ordered_norms(c_mat)
     bad = ~(np.isfinite(c_norm) & (c_norm > 0.0))
     if bad.any():
@@ -560,7 +574,49 @@ def _head_centroids(
             "drop or re-embed these rows, or use the trained-KMeans "
             "variant"
         )
-    return c_ids, c_mat
+    return c_ids, c_mat, c_norm
+
+
+def _cell_cosines(mx: np.ndarray, cents: tuple) -> np.ndarray:
+    """Cosine of each row of ``mx`` to each (c_ids, c_mat, c_norm)
+    centroid. Centroids are id-sorted, so argmax's first maximum is
+    the smallest centroid id (SQL ORDER BY sim DESC, cid ASC)."""
+    _, c_mat, c_norm = cents
+    return _ordered_gemm(mx, c_mat) / np.multiply.outer(_ordered_norms(mx), c_norm)
+
+
+def _raw_cells(
+    ids: np.ndarray, vecs: pd.Series, mx: np.ndarray, cents: tuple
+) -> dict:
+    """Encode step that keeps the raw vector: (id, vector, angular
+    cell) — the exact-scoring IVF kernels and SemDeDup's cells."""
+    best = np.argmax(_cell_cosines(mx, cents), axis=1)
+    return {"neighbor_id": ids, "v": vecs, "cluster": cents[0][best]}
+
+
+def _encode_stream(
+    emb: DataFrame, bc, dims: int, id_col: str, vec_col: str, encode, schema: str
+) -> DataFrame:
+    """One streamed ``mapInPandas`` pass of the corpus through
+    ``encode(ids, vecs, matrix, model)`` against the broadcast model
+    ``bc`` — raw vectors are read once, no shuffle."""
+
+    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        model = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            vecs = pdf[vec_col]
+            ids = pdf[id_col].to_numpy(dtype=np.int64)
+            yield pd.DataFrame(encode(ids, vecs, _as_matrix(vecs, dims), model))
+
+    return emb.select(id_col, vec_col).mapInPandas(assign, schema)
+
+
+def _probe_table(spark, rows: list[tuple[int, int]]) -> DataFrame:
+    """(query_id, cluster) probe rows as a (possibly empty) frame."""
+    probes = spark.createDataFrame(rows or [(-1, -1)], "query_id long, cluster long")
+    return probes if rows else probes.filter(F.lit(False))
 
 
 def _angular_probes(
@@ -586,19 +642,82 @@ def _angular_probes(
     last; ties resolve by cid). A MIXED NaN/finite column — the one
     shape where numpy's NaN-last and the engines' orders could ever
     disagree — cannot reach this sort."""
-    probe_rows: list[tuple[int, int]] = []
-    if len(q_ids):
-        q_norm = _ordered_norms(q_mat)
-        qsim = _ordered_gemm(q_mat, c_mat) / np.multiply.outer(q_norm, c_norm)
-        for i in range(len(q_ids)):
-            top = np.lexsort((c_ids, -qsim[i]))[:n_probe]
-            probe_rows.extend((int(q_ids[i]), int(c_ids[j])) for j in top)
-    probes = spark.createDataFrame(
-        probe_rows or [(-1, -1)], "query_id long, cluster long"
+    qsim = _cell_cosines(q_mat, (c_ids, c_mat, c_norm))
+    return _probe_table(
+        spark,
+        [
+            (int(q_ids[i]), int(c_ids[j]))
+            for i in range(len(q_ids))
+            for j in np.lexsort((c_ids, -qsim[i]))[:n_probe]
+        ],
     )
-    if not probe_rows:
-        probes = probes.filter(F.lit(False))
-    return probes
+
+
+def _rank_topk(scored: DataFrame, k: int, sim_col: str = "sim") -> DataFrame:
+    """Global top-k per query over per-batch candidates: the
+    ``row_number`` window under (sim desc, neighbor id asc)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(sim_col), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .orderBy("query_id", "rank")
+    )
+
+
+def _ivf_pipeline(
+    emb: DataFrame, query_filter: Column, cents: tuple, k: int, n_probe: int,
+    dims: int, id_col: str, vec_col: str, encode, code_schema: str, payload,
+    score_rows, score_schema: str, sim_col: str = "sim", probes=_angular_probes,
+) -> DataFrame:
+    """The one IVF plan. ``encode(ids, vecs, matrix, cents)`` streams
+    the corpus once against the broadcast quantizer ``cents`` = (c_ids,
+    c_mat, c_norm) into ``code_schema`` rows (neighbor_id, cluster,
+    codes); the queries are collected once and ``payload(q_mat)`` is
+    broadcast; ``probes(spark, q_ids, q_mat, *cents, n_probe)`` is the
+    (query_id, cluster) table broadcast-joined to the codes, self-matches
+    dropped; ``score_rows(pdf, qi, payload, cents)`` returns the
+    ``score_schema`` columns of a candidate batch (``qi`` = each row's
+    query position in the payload), cut to ≤ |Q|·k rows per batch; the
+    rank window keeps the global top-k by ``sim_col``."""
+    spark = emb.sparkSession
+    bc_c = spark.sparkContext.broadcast(cents)
+    assigned = _encode_stream(emb, bc_c, dims, id_col, vec_col, encode, code_schema)
+
+    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
+    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
+    q_mat = _as_matrix(qpdf[vec_col], dims)
+    probe_df = probes(spark, q_ids, q_mat, *cents, n_probe)
+    bc_q = spark.sparkContext.broadcast((q_ids, payload(q_mat)))
+
+    cand = (
+        F.broadcast(probe_df)
+        .join(assigned, "cluster")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+    )
+
+    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids_q, qp = bc_q.value
+        qpos = {int(q): i for i, q in enumerate(ids_q)}
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            qid = pdf["query_id"].to_numpy(dtype=np.int64)
+            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
+            qi = np.asarray([qpos[q] for q in qid.tolist()])
+            cols = score_rows(pdf, qi, qp, bc_c.value)
+            keep = _batch_topk_cut(qid, nid, cols[sim_col], k)
+            yield pd.DataFrame(
+                {
+                    "query_id": qid[keep],
+                    "neighbor_id": nid[keep],
+                    **{c: v[keep] for c, v in cols.items()},
+                }
+            )
+
+    scored = cand.mapInPandas(
+        score, f"query_id long, neighbor_id long, {score_schema}"
+    )
+    return _rank_topk(scored, k, sim_col)
 
 
 def ann_ivf_topk(
@@ -637,105 +756,38 @@ def ann_ivf_topk(
     alternative to ``cosine_threshold_pairs`` alongside
     ``ann_lsh_pairs``.
     """
-    c_ids, c_mat = _head_centroids(emb, n_centroids, dims, id_col, vec_col)
+    cents = _head_centroids(emb, n_centroids, dims, id_col, vec_col)
     return _ivf_flow(
-        emb, query_filter, c_ids, c_mat, k, n_probe, dims, id_col,
-        vec_col, metric,
+        emb, query_filter, cents, k, n_probe, dims, id_col, vec_col, metric
     )
 
 
 def _ivf_flow(
-    emb: DataFrame,
-    query_filter: Column,
-    c_ids: np.ndarray,
-    c_mat: np.ndarray,
-    k: int,
-    n_probe: int,
-    dims: int,
-    id_col: str,
-    vec_col: str,
-    metric: str = "cosine",
+    emb: DataFrame, query_filter: Column, cents: tuple, k: int, n_probe: int,
+    dims: int, id_col: str, vec_col: str, metric: str = "cosine",
 ) -> DataFrame:
-    """Shared IVF assign→probe→score pipeline, parameterized by the
-    coarse-quantizer centroids (fixed head sample or a trained model —
-    the plan is identical either way) and the candidate-scoring
-    ``metric`` ("cosine" | "dot" — assignment/probing are always
-    angular; see ``ann_ivf_topk``)."""
+    """Exact-scoring IVF over any coarse quantizer (head sample or
+    trained model — the plan is identical): raw vectors ride the probe
+    join; candidates score by ``metric`` ("cosine" | "dot"; assignment
+    and probing stay angular, see ``ann_ivf_topk``)."""
     if metric not in ("cosine", "dot"):
         raise ValueError(f"_ivf_flow: unknown metric {metric!r}")
-    spark = emb.sparkSession
-    c_norm = _ordered_norms(c_mat)
-    bc_c = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_c, mc, nc = bc_c.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            nx = _ordered_norms(mx)
-            sim = _ordered_gemm(mx, mc) / np.multiply.outer(nx, nc)
-            # argmax takes the first maximum — centroids are id-sorted,
-            # so ties resolve to the smallest centroid id (= the SQL
-            # ORDER BY sim DESC, cid ASC convention)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "v": pdf[vec_col],
-                    "cluster": ids_c[np.argmax(sim, axis=1)],
-                }
-            )
+    def score(pdf, qi, q, cents):
+        q_mat, q_norm = q
+        mx = _as_matrix(pdf["v"], dims)
+        sim = _ordered_rowdot(q_mat[qi], mx)
+        if metric == "cosine":
+            sim = sim / (q_norm[qi] * _ordered_norms(mx))
+        return {"sim": sim}
 
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign, "neighbor_id long, v array<float>, cluster long"
-    )
-
-    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = _as_matrix(qpdf[vec_col], dims)
-    q_norm = _ordered_norms(q_mat) if len(q_ids) else np.empty(0)
-    probes = _angular_probes(spark, q_ids, q_mat, c_ids, c_mat, c_norm, n_probe)
-    bc_q = spark.sparkContext.broadcast(
-        {int(q_ids[i]): (q_mat[i], float(q_norm[i])) for i in range(len(q_ids))}
-    )
-
-    cand = (
-        F.broadcast(probes)
-        .join(assigned, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmap = bc_q.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf["v"], dims)
-            qm = np.stack([qmap[q][0] for q in pdf["query_id"]])
-            sim = _ordered_rowdot(qm, mx)
-            if metric == "cosine":
-                nx = _ordered_norms(mx)
-                qn = np.asarray([qmap[q][1] for q in pdf["query_id"]])
-                sim = sim / (qn * nx)
-            qid = pdf["query_id"].to_numpy(dtype=np.int64)
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            # per-batch ≤ Q·k cut (r13): same discipline as the
-            # bruteforce/PQ/ADC kernels — see _batch_topk_cut
-            keep = _batch_topk_cut(qid, nid, sim, k)
-            yield pd.DataFrame(
-                {
-                    "query_id": qid[keep],
-                    "neighbor_id": nid[keep],
-                    "sim": sim[keep],
-                }
-            )
-
-    scored = cand.mapInPandas(score, "query_id long, neighbor_id long, sim double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _ivf_pipeline(
+        emb, query_filter, cents, k, n_probe, dims, id_col, vec_col,
+        encode=_raw_cells,
+        code_schema="neighbor_id long, v array<float>, cluster long",
+        payload=lambda q_mat: (q_mat, _ordered_norms(q_mat)),
+        score_rows=score,
+        score_schema="sim double",
     )
 
 
@@ -764,20 +816,22 @@ def kmeans_ivf_topk(
     (the one query class SURVEY.md exempts from SQL oracles, like the
     forecast fits).
     """
+    c_mat = _kmeans_centers(emb, F.col(vec_col), n_centroids, max_iter, seed)
+    cents = (np.arange(len(c_mat), dtype=np.int64), c_mat, _ordered_norms(c_mat))
+    return _ivf_flow(emb, query_filter, cents, k, n_probe, dims, id_col, vec_col)
+
+
+def _kmeans_centers(
+    src: DataFrame, vec: Column, k: int, max_iter: int, seed: int
+) -> np.ndarray:
+    """MLlib KMeans (distributed Lloyd) centers of an array column, as
+    a float64 matrix."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    train = emb.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(
-        k=n_centroids, maxIter=max_iter, seed=seed, featuresCol="features"
-    ).fit(train)
-    c_mat = np.stack([np.asarray(c) for c in model.clusterCenters()]).astype(
-        np.float64
-    )
-    c_ids = np.arange(len(c_mat), dtype=np.int64)
-    return _ivf_flow(emb, query_filter, c_ids, c_mat, k, n_probe, dims, id_col, vec_col)
+    train = src.select(array_to_vector(vec.cast("array<double>")).alias("features"))
+    model = KMeans(k=k, maxIter=max_iter, seed=seed, featuresCol="features").fit(train)
+    return np.stack([np.asarray(c) for c in model.clusterCenters()]).astype(np.float64)
 
 
 def cluster_assign_stats(
@@ -801,40 +855,17 @@ def cluster_assign_stats(
     invariant: counts plus min/max of similarities (no float sums), so
     the DuckDB oracle matches bit-exactly.
     """
-    spark = emb.sparkSession
-    cpdf = (
-        emb.filter(F.col(id_col) < n_centroids).select(id_col, vec_col).toPandas()
+    bc = emb.sparkSession.sparkContext.broadcast(
+        _head_centroids(emb, n_centroids, dims, id_col, vec_col)
     )
-    if len(cpdf) == 0:
-        raise ValueError(
-            f"no centroid rows: filter {id_col} < {n_centroids} matched "
-            "nothing (ids not starting at 0?) — supply a corpus whose id "
-            "head exists, or use the trained-KMeans variant"
-        )
-    c_order = np.argsort(cpdf[id_col].to_numpy(dtype=np.int64))
-    c_ids = cpdf[id_col].to_numpy(dtype=np.int64)[c_order]
-    c_mat = _as_matrix(cpdf[vec_col], dims)[c_order]
-    c_norm = _ordered_norms(c_mat)
-    bc = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
 
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_c, mc, nc = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            nx = _ordered_norms(mx)
-            sim = _ordered_gemm(mx, mc) / np.multiply.outer(nx, nc)
-            best = np.argmax(sim, axis=1)  # ties -> smallest centroid id
-            yield pd.DataFrame(
-                {
-                    "cluster": ids_c[best],
-                    "sim": sim[np.arange(len(best)), best],
-                }
-            )
+    def encode(ids, vecs, mx, cents):
+        sim = _cell_cosines(mx, cents)
+        best = np.argmax(sim, axis=1)  # ties -> smallest centroid id
+        return {"cluster": cents[0][best], "sim": sim[np.arange(len(best)), best]}
 
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign, "cluster long, sim double"
+    assigned = _encode_stream(
+        emb, bc, dims, id_col, vec_col, encode, "cluster long, sim double"
     )
     return (
         assigned.groupBy("cluster")
@@ -1004,13 +1035,6 @@ def kcenter_select(
             last = m[best]
     else:
 
-        def dot(a, b):
-            return F.aggregate(
-                F.zip_with(a, b, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-
         def dist_to(cvec):
             lit = F.array(*[F.lit(float(x)) for x in cvec])
             return (
@@ -1133,6 +1157,63 @@ def _cap_hot_buckets(bands: DataFrame, max_bucket: int | None) -> DataFrame:
     )
 
 
+def _srp_bands(sig: DataFrame, **tags: Column) -> DataFrame:
+    """(vid, *tags, band, bv): every ``srp_signatures`` row exploded
+    into its SRP_BANDS half-signature buckets."""
+    return sig.select(
+        F.col("vec_id_sig").alias("vid"),
+        *[c.alias(n) for n, c in tags.items()],
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(i).alias("band"),
+                        F.shiftright(F.col("srp"), SRP_BAND_BITS * i)
+                        .bitwiseAND(SRP_BAND_MASK)
+                        .alias("bv"),
+                    )
+                    for i in range(SRP_BANDS)
+                ]
+            )
+        ).alias("e"),
+    ).select("vid", *tags, "e.band", "e.bv")
+
+
+def _verify_pairs(
+    emb: DataFrame, cands: DataFrame, dims: int, threshold: float,
+    id_col: str, vec_col: str, cosine: bool,
+) -> DataFrame:
+    """Exact verify of LSH candidate pairs (vec_a, vec_b): vectors
+    rejoin once per candidate; a row-paired kernel keeps cosine (or raw
+    dot) ≥ threshold."""
+    va = emb.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"))
+    vb = emb.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"))
+    paired = cands.join(va, "vec_a").join(vb, "vec_b")
+
+    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ma = _as_matrix(pdf["va"], dims)
+            mb = _as_matrix(pdf["vb"], dims)
+            sim = _ordered_rowdot(ma, mb)
+            if cosine:
+                sim = sim / (_ordered_norms(ma) * _ordered_norms(mb))
+            keep = sim >= threshold
+            if keep.any():
+                yield pd.DataFrame(
+                    {
+                        "vec_a": pdf["vec_a"].to_numpy(dtype=np.int64)[keep],
+                        "vec_b": pdf["vec_b"].to_numpy(dtype=np.int64)[keep],
+                        "sim": sim[keep],
+                    }
+                )
+
+    return paired.mapInPandas(
+        verify, "vec_a long, vec_b long, sim double"
+    ).orderBy("vec_a", "vec_b")
+
+
 def ann_lsh_pairs(
     emb: DataFrame,
     dims: int,
@@ -1171,23 +1252,7 @@ def ann_lsh_pairs(
     Catalyst filter here would be pushed into the hash join's non-equi
     condition and evaluated interpreted).
     """
-    sig = srp_signatures(emb, dims, id_col, vec_col)
-    bands = sig.select(
-        F.col("vec_id_sig").alias("vid"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright(F.col("srp"), SRP_BAND_BITS * i)
-                        .bitwiseAND(SRP_BAND_MASK)
-                        .alias("bv"),
-                    )
-                    for i in range(SRP_BANDS)
-                ]
-            )
-        ).alias("e"),
-    ).select("vid", "e.band", "e.bv")
+    bands = _srp_bands(srp_signatures(emb, dims, id_col, vec_col))
     bands = _cap_hot_buckets(bands, max_bucket)
     cands = (
         bands.groupBy("band", "bv")
@@ -1198,32 +1263,7 @@ def ann_lsh_pairs(
         .filter(F.col("vec_a") < F.col("vec_b"))
         .distinct()
     )
-    va = emb.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"))
-    vb = emb.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"))
-    paired = cands.join(va, "vec_a").join(vb, "vec_b")
-
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ma = _as_matrix(pdf["va"], dims)
-            mb = _as_matrix(pdf["vb"], dims)
-            sim = _ordered_rowdot(ma, mb) / (
-                _ordered_norms(ma) * _ordered_norms(mb)
-            )
-            keep = sim >= threshold
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "vec_a": pdf["vec_a"].to_numpy(dtype=np.int64)[keep],
-                        "vec_b": pdf["vec_b"].to_numpy(dtype=np.int64)[keep],
-                        "sim": sim[keep],
-                    }
-                )
-
-    return paired.mapInPandas(
-        verify, "vec_a long, vec_b long, sim double"
-    ).orderBy("vec_a", "vec_b")
+    return _verify_pairs(emb, cands, dims, threshold, id_col, vec_col, True)
 
 
 def mips_lsh_pairs(
@@ -1263,7 +1303,6 @@ def mips_lsh_pairs(
     vector re-join only for surviving candidates; no n² stage
     anywhere. Degenerate all-zero corpus (M = 0) yields NaN embeds and
     no verified pairs for τ > 0 — dots are all zero."""
-    spark = emb.sparkSession  # noqa: F841 — symmetry with siblings
     v64 = _vec(F.col(vec_col))
     m_row = emb.select(F.max(F.sqrt(dot(v64, v64))).alias("_m"))
     base = (
@@ -1291,27 +1330,10 @@ def mips_lsh_pairs(
         F.concat(F.col("u"), F.array(F.lit(0.0), F.col("s"))).alias("ev"),
     )
 
-    def banded(sig: DataFrame, side: int) -> DataFrame:
-        return sig.select(
-            F.col("vec_id_sig").alias("vid"),
-            F.lit(side).alias("side"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("band"),
-                            F.shiftright(F.col("srp"), SRP_BAND_BITS * i)
-                            .bitwiseAND(SRP_BAND_MASK)
-                            .alias("bv"),
-                        )
-                        for i in range(SRP_BANDS)
-                    ]
-                )
-            ).alias("e"),
-        ).select("vid", "side", "e.band", "e.bv")
-
-    bands = banded(srp_signatures(qside, dims + 2, "vid", "ev"), 0).unionByName(
-        banded(srp_signatures(pside, dims + 2, "vid", "ev"), 1)
+    bands = _srp_bands(
+        srp_signatures(qside, dims + 2, "vid", "ev"), side=F.lit(0)
+    ).unionByName(
+        _srp_bands(srp_signatures(pside, dims + 2, "vid", "ev"), side=F.lit(1))
     )
     # hot-bucket guard (r13): bucket size here counts Q-rows + P-rows
     # together — the explode below is |Q|×|P| ≤ (size/2)², so capping
@@ -1341,30 +1363,16 @@ def mips_lsh_pairs(
         )
         .distinct()
     )
-    va = emb.select(F.col(id_col).alias("vec_a"), F.col(vec_col).alias("va"))
-    vb = emb.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("vb"))
-    paired = cands.join(va, "vec_a").join(vb, "vec_b")
+    return _verify_pairs(emb, cands, dims, threshold, id_col, vec_col, False)
 
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ma = _as_matrix(pdf["va"], dims)
-            mb = _as_matrix(pdf["vb"], dims)
-            sim = _ordered_rowdot(ma, mb)
-            keep = sim >= threshold
-            if keep.any():
-                yield pd.DataFrame(
-                    {
-                        "vec_a": pdf["vec_a"].to_numpy(dtype=np.int64)[keep],
-                        "vec_b": pdf["vec_b"].to_numpy(dtype=np.int64)[keep],
-                        "sim": sim[keep],
-                    }
-                )
 
-    return paired.mapInPandas(
-        verify, "vec_a long, vec_b long, sim double"
-    ).orderBy("vec_a", "vec_b")
+def _sq8(m: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Symmetric int8 quantizer per row: scale = max|v| / 127 and
+    float64 codes floor(v/scale + 0.5) (explicit round-half-up; a zero
+    row gives scale 0 and zero codes)."""
+    scale = np.abs(m).max(axis=1) / 127.0
+    safe = np.where(scale == 0.0, 1.0, scale)
+    return scale, np.floor(m / safe[:, None] + 0.5)
 
 
 def quantize_embeddings(
@@ -1396,10 +1404,8 @@ def quantize_embeddings(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            m = _as_matrix(pdf[vec_col], dims)
-            scale = np.abs(m).max(axis=1) / 127.0
-            safe = np.where(scale == 0.0, 1.0, scale)
-            q = np.floor(m / safe[:, None] + 0.5).astype(np.int32)
+            scale, q = _sq8(_as_matrix(pdf[vec_col], dims))
+            q = q.astype(np.int32)
             out = {
                 id_col: pdf[id_col].to_numpy(dtype=np.int64),
                 "scale": scale,
@@ -1431,11 +1437,9 @@ def quantization_error_stats(
             if len(pdf) == 0:
                 continue
             m = _as_matrix(pdf[vec_col], dims)
-            scale = np.abs(m).max(axis=1) / 127.0
-            safe = np.where(scale == 0.0, 1.0, scale)
-            q = np.floor(m / safe[:, None] + 0.5)
-            recon = q * safe[:, None]
-            err = np.abs(recon - m).max(axis=1)
+            scale, q = _sq8(m)
+            # q is 0 wherever scale is 0, so q·scale is the reconstruction
+            err = np.abs(q * scale[:, None] - m).max(axis=1)
             yield pd.DataFrame(
                 {id_col: pdf[id_col].to_numpy(dtype=np.int64), "max_err": err,
                  "scale": scale}
@@ -1500,62 +1504,27 @@ def ann_int8_mips_topk(
     # family (ADVICE r12). The selected rows are then quantized
     # locally; scale is per-vector, so quantizing the subset yields
     # bit-identical codes to filtering the quantized corpus.
-    qpdf = quantize_embeddings(
-        emb.filter(query_filter), dims, id_col, vec_col
-    ).toPandas()
+    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
     q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_scales = qpdf["scale"].to_numpy(dtype=np.float64)
-    q_mat = (
-        np.stack(qpdf["qvec"].to_numpy()).astype(np.int64)
-        if len(q_ids)
-        else np.empty((0, dims), dtype=np.int64)
-    )
-    spark = emb.sparkSession
-    bc = spark.sparkContext.broadcast((q_ids, q_scales, q_mat))
+    q_scales, q_mat = _sq8(_as_matrix(qpdf[vec_col], dims))
+    q_mat = q_mat.astype(np.int32).astype(np.int64)  # as the corpus codes
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, sq, qm = bc.value
-        if len(ids_q) == 0:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nid = pdf[id_col].to_numpy(dtype=np.int64)
-            ns = pdf["scale"].to_numpy(dtype=np.float64)
-            nm = (
-                _unpack_codes(pdf["qcode"], dims)
-                if packed
-                else np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            )
-            d = nm @ qm.T  # B×Q, exact: |entries| ≤ 127²·dims < 2^53
-            # pinned order: (scale_q · scale_x) first, then · dot —
-            # the oracle SQL parenthesizes identically
-            sim = (ns[:, None] * sq[None, :]) * d.astype(np.float64)
-            sim[np.equal.outer(nid, ids_q)] = -np.inf  # self-match
-            for qi in range(len(ids_q)):
-                order = np.lexsort((nid, -sim[:, qi]))[: min(k, len(nid))]
-                keep = order[np.isfinite(sim[order, qi])]
-                if len(keep):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": ids_q[qi],
-                            "neighbor_id": nid[keep],
-                            "int_dot": d[keep, qi],
-                            "sim": sim[keep, qi],
-                        }
-                    )
+    def score_batch(pdf, q):
+        sq, qm = q
+        ns = pdf["scale"].to_numpy(dtype=np.float64)
+        nm = (
+            _unpack_codes(pdf["qcode"], dims)
+            if packed
+            else np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
+        )
+        d = nm @ qm.T  # B×Q, exact: |entries| ≤ 127²·dims < 2^53
+        # pinned order: (scale_q · scale_x) first, then · dot —
+        # the oracle SQL parenthesizes identically
+        sim = (ns[:, None] * sq[None, :]) * d.astype(np.float64)
+        return pdf[id_col].to_numpy(dtype=np.int64), {"int_dot": d, "sim": sim}
 
-    scored = q8.mapInPandas(
-        score,
-        "query_id long, neighbor_id long, int_dot long, sim double",
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _scan_topk(
+        q8, q_ids, (q_scales, q_mat), score_batch, "int_dot long, sim double", k
     )
 
 
@@ -1568,7 +1537,6 @@ def ivf_sq8_mips_topk(
     dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    packed: bool = False,
 ) -> DataFrame:
     """IVF-SQ8 maximum-inner-product top-k (r13): the other standard
     FAISS deployment shape (``IVF…,SQ8`` with METRIC_INNER_PRODUCT) —
@@ -1603,115 +1571,37 @@ def ivf_sq8_mips_topk(
     ``query_filter`` (the family contract — filters may reference the
     embedding column) and quantized locally; per-vector scale makes
     subset quantization bit-identical."""
-    spark = emb.sparkSession
-    c_ids, c_mat = _head_centroids(emb, n_centroids, dims, id_col, vec_col)
-    c_norm = _ordered_norms(c_mat)
-    bc_c = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
 
-    def assign_quantize(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        ids_c, mc, nc = bc_c.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            nx = _ordered_norms(mx)
-            csim = _ordered_gemm(mx, mc) / np.multiply.outer(nx, nc)
-            # argmax takes the first maximum — centroids are id-sorted,
-            # so ties resolve to the smallest centroid id (the SQL
-            # ORDER BY sim DESC, cid ASC convention)
-            scale = np.abs(mx).max(axis=1) / 127.0
-            safe = np.where(scale == 0.0, 1.0, scale)
-            q = np.floor(mx / safe[:, None] + 0.5).astype(np.int32)
-            out = {
-                "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
-                "cluster": ids_c[np.argmax(csim, axis=1)],
-                "scale": scale,
-            }
-            # packed: 1 byte/dim binary codes — this is the column
-            # that actually RIDES the probe join, so the 4× width cut
-            # lands on the only code-bearing data path of the plan
-            if packed:
-                out["qcode"] = _pack_codes(q)
-            else:
-                out["qvec"] = list(q)
-            yield pd.DataFrame(out)
-
-    code_field = "qcode binary" if packed else "qvec array<int>"
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign_quantize,
-        f"neighbor_id long, cluster long, scale double, {code_field}",
-    )
-
-    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = _as_matrix(qpdf[vec_col], dims)
-    probes = _angular_probes(spark, q_ids, q_mat, c_ids, c_mat, c_norm, n_probe)
-    # queries quantized locally with the identical kernel arithmetic
-    q_scale = (
-        np.abs(q_mat).max(axis=1) / 127.0
-        if len(q_ids)
-        else np.empty(0, dtype=np.float64)
-    )
-    q_safe = np.where(q_scale == 0.0, 1.0, q_scale)
-    q_codes = (
-        np.floor(q_mat / q_safe[:, None] + 0.5).astype(np.int64)
-        if len(q_ids)
-        else np.empty((0, dims), dtype=np.int64)
-    )
-    bc_q = spark.sparkContext.broadcast(
-        {
-            int(q_ids[i]): (q_codes[i], float(q_scale[i]))
-            for i in range(len(q_ids))
+    def encode(ids, vecs, mx, cents):
+        scale, q = _sq8(mx)
+        best = np.argmax(_cell_cosines(mx, cents), axis=1)
+        return {
+            "neighbor_id": ids,
+            "cluster": cents[0][best],
+            "scale": scale,
+            "qvec": list(q.astype(np.int32)),
         }
-    )
 
-    cand = (
-        F.broadcast(probes)
-        .join(assigned, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
+    def score(pdf, qi, q, cents):
+        q_scale, q_codes = q
+        nm = np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
+        qm = q_codes[qi].astype(np.int64)
+        d = np.einsum("ij,ij->i", nm, qm)  # exact: int64 partials
+        # pinned order: (scale_x · scale_q) first, then · dot —
+        # the oracle SQL parenthesizes identically
+        ns = pdf["scale"].to_numpy(dtype=np.float64)
+        return {"int_dot": d, "sim": (ns * q_scale[qi]) * d.astype(np.float64)}
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmap = bc_q.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            nm = (
-                _unpack_codes(pdf["qcode"], dims)
-                if packed
-                else np.stack(pdf["qvec"].to_numpy()).astype(np.int64)
-            )
-            ns = pdf["scale"].to_numpy(dtype=np.float64)
-            qm = np.stack([qmap[q][0] for q in pdf["query_id"]])
-            qs = np.asarray([qmap[q][1] for q in pdf["query_id"]])
-            d = np.einsum("ij,ij->i", nm, qm)  # exact: int64 partials
-            # pinned order: (scale_x · scale_q) first, then · dot —
-            # the oracle SQL parenthesizes identically
-            sim = (ns * qs) * d.astype(np.float64)
-            qid = pdf["query_id"].to_numpy(dtype=np.int64)
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            keep = _batch_topk_cut(qid, nid, sim, k)  # ≤ Q·k per batch
-            yield pd.DataFrame(
-                {
-                    "query_id": qid[keep],
-                    "neighbor_id": nid[keep],
-                    "int_dot": d[keep],
-                    "sim": sim[keep],
-                }
-            )
-
-    scored = cand.mapInPandas(
-        score, "query_id long, neighbor_id long, int_dot long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _ivf_pipeline(
+        emb, query_filter,
+        _head_centroids(emb, n_centroids, dims, id_col, vec_col),
+        k, n_probe, dims, id_col, vec_col,
+        encode=encode,
+        code_schema="neighbor_id long, cluster long, scale double, qvec array<int>",
+        # queries quantized locally with the identical kernel arithmetic
+        payload=_sq8,
+        score_rows=score,
+        score_schema="int_dot long, sim double",
     )
 
 
@@ -1724,7 +1614,6 @@ def ivf_sq8r_mips_topk(
     dims: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    packed: bool = False,
 ) -> DataFrame:
     """IVF-SQ8 MIPS top-k with RESIDUAL encoding (r13): the FAISS
     ``by_residual`` convention — each cell stores int8 codes of the
@@ -1758,99 +1647,38 @@ def ivf_sq8r_mips_topk(
     IVF indexes to residual encoding) at the cost of one centroid
     lookup per candidate at score time (the centroid matrix rides
     the same broadcast as the query rows)."""
-    spark = emb.sparkSession
-    c_ids, c_mat = _head_centroids(emb, n_centroids, dims, id_col, vec_col)
-    c_norm = _ordered_norms(c_mat)
-    bc_c = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
 
-    def assign_encode(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        ids_c, mc, nc = bc_c.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            nx = _ordered_norms(mx)
-            csim = _ordered_gemm(mx, mc) / np.multiply.outer(nx, nc)
-            a = np.argmax(csim, axis=1)  # first max = smallest cid
-            r = mx - mc[a]  # exact: one elementwise double subtract
-            scale = np.abs(r).max(axis=1) / 127.0
-            safe = np.where(scale == 0.0, 1.0, scale)
-            codes = np.floor(r / safe[:, None] + 0.5).astype(np.int32)
-            out = {
-                "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
-                "cluster": ids_c[a],
-                "scale": scale,
-            }
-            if packed:
-                out["code"] = _pack_codes(codes)
-            else:
-                out["codes"] = list(codes)
-            yield pd.DataFrame(out)
+    def encode(ids, vecs, mx, cents):
+        best = np.argmax(_cell_cosines(mx, cents), axis=1)
+        # r = x − c(x): exact, one elementwise double subtract
+        scale, codes = _sq8(mx - cents[1][best])
+        return {
+            "neighbor_id": ids,
+            "cluster": cents[0][best],
+            "scale": scale,
+            "codes": list(codes.astype(np.int32)),
+        }
 
-    code_field = "code binary" if packed else "codes array<int>"
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign_encode,
-        f"neighbor_id long, cluster long, scale double, {code_field}",
-    )
+    def score(pdf, qi, q_mat, cents):
+        c_ids, c_mat, _ = cents
+        crows = c_mat[np.searchsorted(c_ids, pdf["cluster"].to_numpy(dtype=np.int64))]
+        codes = np.stack(pdf["codes"].to_numpy()).astype(np.float64)
+        ns = pdf["scale"].to_numpy(dtype=np.float64)
+        qm = q_mat[qi]
+        # pinned order: q·c + scale · (q·codes) — the oracle SQL
+        # parenthesizes identically; both dots are left folds
+        return {"sim": _ordered_rowdot(qm, crows) + ns * _ordered_rowdot(qm, codes)}
 
-    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = _as_matrix(qpdf[vec_col], dims)
-    probes = _angular_probes(spark, q_ids, q_mat, c_ids, c_mat, c_norm, n_probe)
-    # asymmetric ADC: queries broadcast RAW (never quantized)
-    bc_q = spark.sparkContext.broadcast(
-        {int(q_ids[i]): q_mat[i] for i in range(len(q_ids))}
-    )
-
-    cand = (
-        F.broadcast(probes)
-        .join(assigned, "cluster")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        qmap = bc_q.value
-        ids_c, mc, _ = bc_c.value
-        row_of = {int(c): i for i, c in enumerate(ids_c)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            qm = np.stack([qmap[q] for q in pdf["query_id"]])
-            crows = mc[[row_of[int(c)] for c in pdf["cluster"]]]
-            codes = (
-                _unpack_codes(pdf["code"], dims).astype(np.float64)
-                if packed
-                else np.stack(pdf["codes"].to_numpy()).astype(np.float64)
-            )
-            ns = pdf["scale"].to_numpy(dtype=np.float64)
-            # pinned order: q·c + scale · (q·codes) — the oracle SQL
-            # parenthesizes identically; both dots are left folds
-            sim = _ordered_rowdot(qm, crows) + ns * _ordered_rowdot(
-                qm, codes
-            )
-            qid = pdf["query_id"].to_numpy(dtype=np.int64)
-            nid = pdf["neighbor_id"].to_numpy(dtype=np.int64)
-            keep = _batch_topk_cut(qid, nid, sim, k)  # ≤ Q·k per batch
-            yield pd.DataFrame(
-                {
-                    "query_id": qid[keep],
-                    "neighbor_id": nid[keep],
-                    "sim": sim[keep],
-                }
-            )
-
-    scored = cand.mapInPandas(
-        score, "query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _ivf_pipeline(
+        emb, query_filter,
+        _head_centroids(emb, n_centroids, dims, id_col, vec_col),
+        k, n_probe, dims, id_col, vec_col,
+        encode=encode,
+        code_schema="neighbor_id long, cluster long, scale double, codes array<int>",
+        # asymmetric ADC: queries broadcast RAW (never quantized)
+        payload=lambda q_mat: q_mat,
+        score_rows=score,
+        score_schema="sim double",
     )
 
 
@@ -1895,17 +1723,13 @@ def pq_codebooks(
     if dims % m != 0:
         raise ValueError(f"dims={dims} not divisible by m={m} subspaces")
     dsub = dims // m
-    cpdf = (
-        emb.filter(F.col(id_col) < n_codes).select(id_col, vec_col).toPandas()
-    )
-    if len(cpdf) < n_codes:
+    head_ids, head = _id_head(emb, n_codes, dims, id_col, vec_col)
+    if len(head_ids) < n_codes:
         raise ValueError(
             f"codebook head needs {n_codes} rows with {id_col} < {n_codes}, "
-            f"got {len(cpdf)} — ids not starting at 0? use train=True with "
+            f"got {len(head_ids)} — ids not starting at 0? use train=True with "
             "a filter that exists, or renumber"
         )
-    order = np.argsort(cpdf[id_col].to_numpy(dtype=np.int64))
-    head = _as_matrix(cpdf[vec_col], dims)[order]
     if metric == "cosine":
         head = _unit_rows(head)
     books = np.stack(
@@ -1913,28 +1737,14 @@ def pq_codebooks(
     )
     if not train:
         return books
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     normed = (
         _l2_normalized(emb, dims, id_col, vec_col)
         if metric == "cosine"
         else emb.select(id_col, vec_col)
     )
     for j in range(m):
-        sub = normed.select(
-            array_to_vector(
-                F.slice(F.col(vec_col), j * dsub + 1, dsub).cast(
-                    "array<double>"
-                )
-            ).alias("features")
-        )
-        model = KMeans(
-            k=n_codes, maxIter=max_iter, seed=seed + j, featuresCol="features"
-        ).fit(sub)
-        centers = np.stack(
-            [np.asarray(c) for c in model.clusterCenters()]
-        ).astype(np.float64)
+        sub = F.slice(F.col(vec_col), j * dsub + 1, dsub)
+        centers = _kmeans_centers(normed, sub, n_codes, max_iter, seed + j)
         if centers.shape[0] < n_codes:
             # KMeans can converge to fewer than k distinct centers on
             # small or duplicate-heavy corpora; pad the missing slots
@@ -1971,6 +1781,32 @@ def _l2_normalized(
     )
 
 
+def _pq_assign(x: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """Nearest codeword per subspace in L2 → (n, m) int32 codes via
+    argmin (||c||² - 2x·c); first min = smallest index."""
+    m, _, dsub = books.shape
+    codes = np.empty((len(x), m), dtype=np.int32)
+    for j in range(m):
+        c_sq = _ordered_rowdot(books[j], books[j])
+        xj = x[:, j * dsub : (j + 1) * dsub]
+        d = c_sq[None, :] - 2.0 * _ordered_gemm(xj, books[j])
+        codes[:, j] = np.argmin(d, axis=1)
+    return codes
+
+
+def _adc_tables(q: np.ndarray, books: np.ndarray) -> np.ndarray:
+    """T[q, j, c] = q_j · books[j, c] — the ADC lookup tables,
+    Q×m×n_codes."""
+    dsub = books.shape[2]
+    return np.stack(
+        [
+            _ordered_gemm(q[:, j * dsub : (j + 1) * dsub], books[j])
+            for j in range(len(books))
+        ],
+        axis=1,
+    )
+
+
 def pq_encode(
     emb: DataFrame,
     codebooks: np.ndarray,
@@ -1995,21 +1831,13 @@ def pq_encode(
     bc = spark.sparkContext.broadcast(codebooks)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        books = bc.value
-        # ||c||² per (subspace, codeword) — argmin ||x-c||² = argmin
-        # (||c||² - 2x·c); computed once per task, fixed j-order
-        c_sq = np.stack([_ordered_rowdot(books[j], books[j]) for j in range(m)])
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             mx = _as_matrix(pdf[vec_col], dims)
             if metric == "cosine":
                 mx = _unit_rows(mx)
-            codes = np.empty((len(mx), m), dtype=np.int32)
-            for j in range(m):
-                xj = mx[:, j * dsub : (j + 1) * dsub]
-                d = c_sq[j][None, :] - 2.0 * _ordered_gemm(xj, books[j])
-                codes[:, j] = np.argmin(d, axis=1)  # first min = smallest idx
+            codes = _pq_assign(mx, bc.value)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].to_numpy(dtype=np.int64),
@@ -2056,58 +1884,24 @@ def pq_topk(
         raise ValueError(f"pq_topk: unknown metric {metric!r}")
     m, n_codes, dsub = codebooks.shape
     dims = m * dsub
-    spark = emb.sparkSession
     qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
     q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
     q_mat = _as_matrix(qpdf[vec_col], dims)
     if metric == "cosine":
         q_mat = _unit_rows(q_mat)
-    # T[q, j, c] = q_j · c[j, c] — the ADC lookup tables, Q×m×n_codes
-    tables = np.stack(
-        [_ordered_gemm(q_mat[:, j * dsub : (j + 1) * dsub], codebooks[j]) for j in range(m)],
-        axis=1,
-    )
-    bc_q = spark.sparkContext.broadcast((q_ids, tables))
-    codes = pq_encode(emb, codebooks, id_col, vec_col, metric)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, tabs = bc_q.value
-        if len(ids_q) == 0:
-            return
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.stack(pdf["codes"].to_numpy())  # B×m int
-            nid = pdf[id_col].to_numpy(dtype=np.int64)
-            # sim[b, q] = Σ_j tabs[q, j, cm[b, j]] — fixed j-order fold
-            sim = np.zeros((len(cm), len(ids_q)), dtype=np.float64)
-            for j in range(m):
-                sim += tabs[:, j, :][:, cm[:, j]].T
-            sim[np.equal.outer(nid, ids_q)] = -np.inf  # self-match
-            # per-batch candidate cut (same contract as the exact scan:
-            # ≤ Q·k rows leave each task, ties resolved sim desc/id asc)
-            for qi in range(len(ids_q)):
-                order = np.lexsort((nid, -sim[:, qi]))[: min(k, len(nid))]
-                keep = order[np.isfinite(sim[order, qi])]
-                if len(keep):
-                    yield pd.DataFrame(
-                        {
-                            "query_id": ids_q[qi],
-                            "neighbor_id": nid[keep],
-                            "approx_sim": sim[keep, qi],
-                        }
-                    )
+    def score_batch(pdf, tabs):
+        cm = np.stack(pdf["codes"].to_numpy())  # B×m int
+        # sim[b, q] = Σ_j tabs[q, j, cm[b, j]] — fixed j-order fold
+        sim = np.zeros((len(cm), len(tabs)), dtype=np.float64)
+        for j in range(m):
+            sim += tabs[:, j, :][:, cm[:, j]].T
+        return pdf[id_col].to_numpy(dtype=np.int64), {"approx_sim": sim}
 
-    scored = codes.mapInPandas(
-        score, "query_id long, neighbor_id long, approx_sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
+    return _scan_topk(
+        pq_encode(emb, codebooks, id_col, vec_col, metric), q_ids,
+        _adc_tables(q_mat, codebooks), score_batch, "approx_sim double", k,
+        "approx_sim",
     )
 
 
@@ -2165,149 +1959,81 @@ def ivfadc_topk(
     spark = emb.sparkSession
 
     # centroids + residual-codebook sample: one bounded head collect
-    head_pdf = (
-        emb.filter(F.col(id_col) < n_centroids + n_codes)
-        .select(id_col, vec_col)
-        .toPandas()
-    )
-    if len(head_pdf) < n_centroids + n_codes:
+    head_ids, head_raw = _id_head(emb, n_centroids + n_codes, dims, id_col, vec_col)
+    if len(head_ids) < n_centroids + n_codes:
         raise ValueError(
             f"need {n_centroids + n_codes} head rows with {id_col} < "
-            f"{n_centroids + n_codes}, got {len(head_pdf)} — ids not "
+            f"{n_centroids + n_codes}, got {len(head_ids)} — ids not "
             "starting at 0?"
         )
-    order = np.argsort(head_pdf[id_col].to_numpy(dtype=np.int64))
-    head_raw = _as_matrix(head_pdf[vec_col], dims)[order]
+
+    def space(x):
+        # dot mode: vectors stay raw — ranking by x·c_unit is the same
+        # angular order (‖x‖ scales every cell score equally), and the
+        # base term q·c(x) must carry the query's true magnitude
+        return _unit_rows(x) if metric == "cosine" else x
+
     # coarse quantizer is ALWAYS unit-norm (angular cells); the
-    # residual sample matches the encode space: unit for cosine, raw
-    # for dot
+    # residual sample matches the encode space
     c_mat = _unit_rows(head_raw[:n_centroids])
-    sample = (
-        _unit_rows(head_raw[n_centroids:])
-        if metric == "cosine"
-        else head_raw[n_centroids:]
-    )
+    sample = space(head_raw[n_centroids:])
     # residuals of the sample after coarse assignment (first-argmax)
     cells = np.argmax(_ordered_gemm(sample, c_mat), axis=1)
     resid = sample - c_mat[cells]
     books = np.stack(
         [resid[:, j * dsub : (j + 1) * dsub] for j in range(m)]
     )
-    bc = spark.sparkContext.broadcast((c_mat, books))
-
-    def assign_encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cm, bks = bc.value
-        c_sq = np.stack([_ordered_rowdot(bks[j], bks[j]) for j in range(m)])
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            if metric == "cosine":
-                mx = _unit_rows(mx)
-            cell = np.argmax(_ordered_gemm(mx, cm), axis=1)
-            r = mx - cm[cell]
-            codes = np.empty((len(mx), m), dtype=np.int32)
-            for j in range(m):
-                rj = r[:, j * dsub : (j + 1) * dsub]
-                d = c_sq[j][None, :] - 2.0 * _ordered_gemm(rj, bks[j])
-                codes[:, j] = np.argmin(d, axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "cell": cell.astype(np.int64),
-                    "codes": list(codes),
-                }
-            )
-
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign_encode, "neighbor_id long, cell long, codes array<int>"
+    cents = (
+        np.arange(n_centroids, dtype=np.int64), c_mat, _ordered_norms(c_mat)
     )
+    bc_b = spark.sparkContext.broadcast(books)
 
-    qpdf = emb.filter(query_filter).select(id_col, vec_col).toPandas()
-    q_ids = qpdf[id_col].to_numpy(dtype=np.int64)
-    q_mat = _as_matrix(qpdf[vec_col], dims)
-    if metric == "cosine" and len(q_ids):
-        q_mat = _unit_rows(q_mat)
-    # dot mode: q stays raw — probe ranking by q·c_unit is the same
-    # angular order (‖q‖ scales every cell score equally), and the
-    # base term q·c(x) must carry the query's true magnitude
-    probe_rows = []
-    base_sim = {}  # (query_id, cell) -> q·c
-    if len(q_ids):
-        qc = _ordered_gemm(q_mat, c_mat)
-        for i in range(len(q_ids)):
-            top = np.lexsort((np.arange(n_centroids), -qc[i]))[:n_probe]
-            for c in top:
-                probe_rows.append((int(q_ids[i]), int(c)))
-                base_sim[(int(q_ids[i]), int(c))] = float(qc[i, c])
-    probes = spark.createDataFrame(
-        probe_rows or [(-1, -1)], "query_id long, cell long"
-    )
-    if not probe_rows:
-        probes = probes.filter(F.lit(False))
-    tables = (
-        np.stack(
+    def encode(ids, vecs, mx, cents):
+        mx = space(mx)
+        cell = np.argmax(_ordered_gemm(mx, cents[1]), axis=1)
+        codes = _pq_assign(mx - cents[1][cell], bc_b.value)
+        return {
+            "neighbor_id": ids,
+            "cluster": cell.astype(np.int64),
+            "codes": list(codes),
+        }
+
+    def probes(spark, q_ids, q_mat, c_ids, c_mat, c_norm, n_probe):
+        # unnormalized ranking q·c_unit (c_norm unused): the same cell
+        # order as the encode side's argmax
+        qc = _ordered_gemm(space(q_mat), c_mat)
+        return _probe_table(
+            spark,
             [
-                _ordered_gemm(q_mat[:, j * dsub : (j + 1) * dsub], books[j])
-                for j in range(m)
+                (int(q_ids[i]), int(c_ids[c]))
+                for i in range(len(q_ids))
+                for c in np.lexsort((c_ids, -qc[i]))[:n_probe]
             ],
-            axis=1,
         )
-        if len(q_ids)
-        else np.empty((0, m, n_codes))
-    )
-    bc_q = spark.sparkContext.broadcast((q_ids, tables, base_sim))
 
-    cand = F.broadcast(probes).join(assigned, "cell").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
+    def payload(q_mat):
+        # residual lookup tables and the per-(query, cell) base term q·c
+        qs = space(q_mat)
+        return _adc_tables(qs, books), _ordered_gemm(qs, c_mat)
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, tabs, base = bc_q.value
-        qpos = {int(q): i for i, q in enumerate(ids_q)}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm_ = np.stack(pdf["codes"].to_numpy())
-            qi = np.asarray([qpos[int(q)] for q in pdf["query_id"]])
-            sim = np.asarray(
-                [
-                    base[(int(q), int(c))]
-                    for q, c in zip(pdf["query_id"], pdf["cell"])
-                ],
-                dtype=np.float64,
-            )
-            for j in range(m):
-                sim += tabs[qi, j, cm_[:, j]]
-            out = pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(dtype=np.int64),
-                    "neighbor_id": pdf["neighbor_id"].to_numpy(dtype=np.int64),
-                    "approx_sim": sim,
-                }
-            )
-            # per-batch ≤ Q·k cut, ties sim desc / id asc
-            parts = []
-            for q, grp in out.groupby("query_id", sort=True):
-                idx = np.lexsort(
-                    (grp["neighbor_id"].to_numpy(), -grp["approx_sim"].to_numpy())
-                )[: min(k, len(grp))]
-                parts.append(grp.iloc[idx])
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
+    def score(pdf, qi, q, cents):
+        tabs, qc = q
+        codes = np.stack(pdf["codes"].to_numpy())
+        sim = qc[qi, pdf["cluster"].to_numpy(dtype=np.int64)]
+        for j in range(m):
+            sim += tabs[qi, j, codes[:, j]]
+        return {"approx_sim": sim}
 
-    scored = cand.mapInPandas(
-        score, "query_id long, neighbor_id long, approx_sim double"
+    return _ivf_pipeline(
+        emb, query_filter, cents, k, n_probe, dims, id_col, vec_col,
+        encode=encode,
+        code_schema="neighbor_id long, cluster long, codes array<int>",
+        payload=payload,
+        score_rows=score,
+        score_schema="approx_sim double",
+        sim_col="approx_sim",
+        probes=probes,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_sim"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .orderBy("query_id", "rank")
-    )
-
 
 # -------------------------------------- sparse-vector (term) similarity
 
@@ -2639,39 +2365,15 @@ def semantic_cell_pairs(
     spark = emb.sparkSession
     if n_centroids is None:
         n_centroids = auto_centroids(emb.count(), target_cell_rows)
-    cpdf = (
-        emb.filter(F.col(id_col) < n_centroids).select(id_col, vec_col).toPandas()
+    bc = spark.sparkContext.broadcast(
+        _head_centroids(emb, n_centroids, dims, id_col, vec_col)
     )
-    if len(cpdf) == 0:
-        raise ValueError(
-            f"no centroid rows: filter {id_col} < {n_centroids} matched "
-            "nothing (ids not starting at 0?) — supply a corpus whose id "
-            "head exists, or use the trained-KMeans variant"
-        )
-    c_order = np.argsort(cpdf[id_col].to_numpy(dtype=np.int64))
-    c_ids = cpdf[id_col].to_numpy(dtype=np.int64)[c_order]
-    c_mat = _as_matrix(cpdf[vec_col], dims)[c_order]
-    c_norm = _ordered_norms(c_mat)
-    bc = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_c, mc, nc = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mx = _as_matrix(pdf[vec_col], dims)
-            nx = _ordered_norms(mx)
-            sim = _ordered_gemm(mx, mc) / np.multiply.outer(nx, nc)
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col].to_numpy(dtype=np.int64),
-                    "v": pdf[vec_col],
-                    "cluster": ids_c[np.argmax(sim, axis=1)],
-                }
-            )
-
-    assigned = emb.select(id_col, vec_col).mapInPandas(
-        assign, "id long, v array<float>, cluster long"
+    assigned = _encode_stream(
+        emb, bc, dims, id_col, vec_col, _raw_cells,
+        "neighbor_id long, v array<float>, cluster long",
+    )
+    empty = pd.DataFrame({"vec_a": [], "vec_b": [], "sim": []}).astype(
+        {"vec_a": np.int64, "vec_b": np.int64, "sim": np.float64}
     )
 
     def cell_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2683,11 +2385,9 @@ def semantic_cell_pairs(
                 "n_centroids (finer quantizer) or max_cell_rows explicitly."
             )
         if n < 2:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "sim": []}).astype(
-                {"vec_a": np.int64, "vec_b": np.int64, "sim": np.float64}
-            )
-        order = np.argsort(pdf["id"].to_numpy(dtype=np.int64))
-        ids = pdf["id"].to_numpy(dtype=np.int64)[order]
+            return empty
+        order = np.argsort(pdf["neighbor_id"].to_numpy(dtype=np.int64))
+        ids = pdf["neighbor_id"].to_numpy(dtype=np.int64)[order]
         m = _as_matrix(pdf["v"], dims)[order]
         nrm = _ordered_norms(m)
         out_a, out_b, out_s = [], [], []
@@ -2707,9 +2407,7 @@ def semantic_cell_pairs(
                     out_b.append(ids[j])
                     out_s.append(sim[i - i0][j])
         if not out_a:
-            return pd.DataFrame({"vec_a": [], "vec_b": [], "sim": []}).astype(
-                {"vec_a": np.int64, "vec_b": np.int64, "sim": np.float64}
-            )
+            return empty
         return pd.DataFrame(
             {
                 "vec_a": np.concatenate(out_a),

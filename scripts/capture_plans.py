@@ -1,15 +1,23 @@
-"""Capture .explain('formatted') for declared queries into plans/<tag>/.
+"""Capture .explain('formatted') for declared queries into plans/<round>/.
 
 Usage: python scripts/capture_plans.py <tag> [query ...]
-Writes plans/r14/<query>_<tag>.txt for each named query (default: all
-declared queries). Plan capture is driver-side only — no job runs —
-except for queries whose construction itself runs eager work (index
-lifecycle builds etc.), which execute that part as usual.
+Writes plans/<round>/<query>_<tag>.txt for each named query (default:
+all declared queries; <round> is $SPARK_GRAFT_PLANS_ROUND, default r15).
+Plan capture is driver-side only — no job runs — except for queries
+whose construction itself runs eager work (index lifecycle builds etc.),
+which execute that part as usual.
+
+The run-specific parts of a plan are masked as it is written: expression
+ids (``#123``), exchange ``plan_id=…``, RDD ids (``RDD[44]``) and the
+checkout path. Two captures of identical plans are therefore identical
+files, and ``diff -r`` of two capture directories is the plan-identity
+check.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -18,11 +26,23 @@ from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark import get_
 import __spark_entry__ as entry_mod  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 OUT_DIR = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "plans",
-    os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r15"),
+    ROOT, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r15")
 )
+_MASKS = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+]
+
+
+def mask(plan: str) -> str:
+    """Plan text with the ids and paths that differ run to run masked."""
+    plan = plan.replace(ROOT, "<repo>")
+    for pat, sub in _MASKS:
+        plan = pat.sub(sub, plan)
+    return plan
 
 
 def main() -> None:
@@ -49,7 +69,7 @@ def main() -> None:
             continue
         path = os.path.join(OUT_DIR, f"{name}_{tag}.txt")
         with open(path, "w") as fh:
-            fh.write(plan)
+            fh.write(mask(plan))
         print(f"wrote {path}")
     if failed:
         raise SystemExit(f"failed: {failed}")

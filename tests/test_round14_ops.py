@@ -89,6 +89,13 @@ def test_degenerate_centroid_head_refused(spark):
                 emb, F.col("vec_id") < 8, k=5, n_centroids=16,
                 n_probe=4, dims=dims,
             )
+    # the kernels that only assign (no probe) share the same head and
+    # refuse it too: an all-NaN cosine column would otherwise win every
+    # argmax and pull the corpus into the degenerate row's cell
+    with pytest.raises(ValueError, match="degenerate centroid head"):
+        S.cluster_assign_stats(emb, n_centroids=16, dims=dims).collect()
+    with pytest.raises(ValueError, match="degenerate centroid head"):
+        S.semantic_cell_pairs(emb, n_centroids=8, dims=dims).collect()
     # NaN component inside the head is refused the same way
     nan_rows = [(i, r[1][:]) for i, r in enumerate(rows)]
     nan_rows[3] = (3, [float("nan")] * dims)
@@ -207,23 +214,18 @@ def test_pack_unpack_identity():
 def test_packed_code_layout_bit_identical(spark):
     # packed=True changes ONLY the storage layout of the code column
     # (array<int> -> 1-byte-per-dim binary); every scored row must be
-    # bit-identical, so the packed variants inherit the array-layout
-    # entries' hash-exact oracles by identity
+    # bit-identical, so the packed variant inherits the array-layout
+    # entry's hash-exact oracle by identity
     from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.operators import (
         similarity as S,
     )
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     flt = F.col("vec_id") < 8
-    for kern, kwargs in [
-        (S.ann_int8_mips_topk, {}),
-        (S.ivf_sq8_mips_topk, {"n_centroids": 16, "n_probe": 4}),
-        (S.ivf_sq8r_mips_topk, {"n_centroids": 16, "n_probe": 4}),
-    ]:
-        plain = kern(emb, flt, k=5, **kwargs).collect()
-        packed = kern(emb, flt, k=5, packed=True, **kwargs).collect()
-        assert len(plain) > 0
-        assert [tuple(r) for r in packed] == [tuple(r) for r in plain], kern
+    plain = S.ann_int8_mips_topk(emb, flt, k=5).collect()
+    packed = S.ann_int8_mips_topk(emb, flt, k=5, packed=True).collect()
+    assert len(plain) > 0
+    assert [tuple(r) for r in packed] == [tuple(r) for r in plain]
 
 
 def test_quantize_embeddings_packed_schema_and_width(spark):
