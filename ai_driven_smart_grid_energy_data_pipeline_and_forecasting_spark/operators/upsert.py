@@ -159,12 +159,17 @@ def _clear_work_dirs(spark: SparkSession, path: str) -> None:
             fs.delete(p, True)
 
 
-def _publish_staged(spark: SparkSession, path: str, n_partition_cols: int) -> list[str]:
+def _publish_staged(
+    spark: SparkSession, path: str, n_partition_cols: int,
+    replaced: Sequence[str] = (),
+) -> list[str]:
     """Swap staged partition directories into the live tree: per leaf
     partition, rename live→``_trash`` then staged→live (two metadata
-    ops, no data movement on rename-capable filesystems). Split out as
-    a seam so the crash-injection test can kill between write and
-    publish. Returns the published partition dir names."""
+    ops, no data movement on rename-capable filesystems). A
+    ``replaced`` leaf with no staged twin lost every row: its live dir
+    goes to ``_trash`` and nothing replaces it. Split out as a seam so
+    the crash-injection test can kill between write and publish.
+    Returns the published partition dir names."""
     fs, jvm = _hadoop_fs(spark, path)
     HPath = jvm.org.apache.hadoop.fs.Path
     staged_root = f"{path}/_staging/data"
@@ -173,14 +178,15 @@ def _publish_staged(spark: SparkSession, path: str, n_partition_cols: int) -> li
         for rel in _leaf_dirs(fs, jvm, staged_root)
         if rel.count("=") >= n_partition_cols
     }
-    for rel in sorted(leaves):
+    for rel in sorted(leaves | set(replaced)):
         live = HPath(f"{path}/{rel}")
         if fs.exists(live):
             trash = HPath(f"{path}/_trash/{rel}")
             fs.mkdirs(trash.getParent())
             _rename_or_die(fs, live, trash)
-        fs.mkdirs(live.getParent())
-        _rename_or_die(fs, HPath(f"{staged_root}/{rel}"), live)
+        if rel in leaves:
+            fs.mkdirs(live.getParent())
+            _rename_or_die(fs, HPath(f"{staged_root}/{rel}"), live)
     _clear_work_dirs(spark, path)
     return sorted(leaves)
 
@@ -191,6 +197,7 @@ def _staged_overwrite(
     df: DataFrame,
     partition_by: Sequence[str],
     recovered: bool = False,
+    replaced: Sequence[str] = (),
 ) -> int:
     """Crash-safe partition overwrite (VERDICT r2 #3 / r3 #6): write the
     new fileset under ``<path>/_staging`` — underscore-prefixed, so
@@ -206,7 +213,8 @@ def _staged_overwrite(
     Writing to staging instead of overwriting in place also removes the
     read-own-input hazard, so callers no longer need the eager
     ``localCheckpoint`` materialization this module used to carry — one
-    full pass over the merge output saved per call."""
+    full pass over the merge output saved per call. ``replaced`` leaf
+    dirs without rows in ``df`` are removed (``_publish_staged``)."""
     # callers that already ran recovery at entry (merge_upsert,
     # compact_partitions — they must, for read-plan freshness) skip the
     # duplicate multi-request FS probe (review r5)
@@ -215,15 +223,14 @@ def _staged_overwrite(
     staged = f"{path}/_staging/data"
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(staged)
     # A zero-row df stages only _SUCCESS (ADVICE r4): reading that back
-    # throws UNABLE_TO_INFER_SCHEMA, and there is nothing to publish —
-    # the old in-place path was a no-op for empty batches, so this one
-    # must be too (module contract: re-run idempotency).
+    # throws UNABLE_TO_INFER_SCHEMA, and the publish then only removes
+    # ``replaced`` dirs — a no-op for a plain empty batch, as the
+    # module contract (re-run idempotency) requires.
     fs, jvm = _hadoop_fs(spark, path)
-    if not _has_parquet_files(fs, jvm, staged):
-        _clear_work_dirs(spark, path)
-        return 0
-    n = spark.read.parquet(staged).count()  # metadata-only row count
-    _publish_staged(spark, path, len(partition_by))
+    n = 0
+    if _has_parquet_files(fs, jvm, staged):
+        n = spark.read.parquet(staged).count()  # metadata-only row count
+    _publish_staged(spark, path, len(partition_by), replaced)
     return n
 
 
@@ -259,7 +266,7 @@ def merge_upsert(
     # captured earlier would hold stale file references (observed as
     # FileNotFoundException at execution time)
     _clear_work_dirs(spark, target_path)
-    updates = updates.withColumn("_src", F.lit(1))
+    existing = updates.limit(0)  # a new table: the optimizer drops this side
     if os.path.exists(target_path):
         # ALWAYS mergeSchema on the existing read: once a table has been
         # evolved it is mixed-schema on disk, and a plain read would
@@ -268,22 +275,13 @@ def merge_upsert(
         # (nondeterministic data loss). With the union of footers, a
         # default merge against an evolved table instead fails loudly at
         # unionByName, which is the guardrail this flag is about.
-        existing = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(target_path)
-            .withColumn("_src", F.lit(0))
-        )
-        # prune to touched partitions: tiny distinct list, broadcast semi join
+        # Pruned to touched partitions: tiny distinct list, broadcast semi join.
         touched = updates.select(*partition_by).distinct()
-        existing = existing.join(F.broadcast(touched), list(partition_by), "left_semi")
-        merged = existing.unionByName(
-            updates, allowMissingColumns=allow_schema_evolution
+        existing = (
+            spark.read.option("mergeSchema", "true").parquet(target_path)
+            .join(F.broadcast(touched), list(partition_by), "left_semi")
         )
-    else:
-        merged = updates
-    out = latest_per_group(
-        merged, keys=list(keys), order_col=order_col, tiebreak=["_src"]
-    ).drop("_src")
+    out = merge_frames(existing, updates, keys, order_col, allow_schema_evolution)
     return _staged_overwrite(spark, target_path, out, partition_by, recovered=True)
 
 

@@ -137,7 +137,8 @@ def incremental_silver_refresh(
     bronze delta, then recompute ONLY the ``(site, hour)`` groups the
     delta touches — the 100 TB alternative to re-running the full
     clean (a delta touching 0.01% of groups reads/writes 0.01% of the
-    table, modulo partition granularity).
+    table, modulo partition granularity). This is the one Silver write
+    path; ``stream_to_silver`` calls it once per micro-batch.
 
     Semantics a plain keyed merge cannot give: group *deletion*. If an
     update invalidates every surviving row of an hour (range rules /
@@ -146,70 +147,45 @@ def incremental_silver_refresh(
     insert), so the result is row-identical to a full recompute — the
     test asserts exactly that equivalence.
 
-    IO profile: bronze read pruned to touched sites (partition prune)
-    then touched hours (broadcast semi join); silver rewrite is a
-    dynamic partition overwrite of touched sites only. On Delta this
-    whole function is ``MERGE WHEN MATCHED/NOT MATCHED BY SOURCE
-    DELETE`` — the call signature is the contract. A site whose every
-    group empties leaves a stale partition dir under dynamic overwrite
-    (an empty frame overwrites nothing), so those dirs are removed
-    explicitly — transactional table formats subsume this.
+    IO profile: one small job collects the touched site list; bronze
+    is read pruned to those sites (partition filter), then to touched
+    hours (broadcast semi join). Silver's touched sites are rewritten as
+    kept ∪ recomputed through ``upsert._staged_overwrite`` (staged write,
+    rename publish: a crash leaves the old snapshot readable, a re-run
+    converges), and a touched site left with no rows leaves the table in
+    the same publish. On Delta this whole function is ``MERGE WHEN
+    MATCHED/NOT MATCHED BY SOURCE DELETE`` — the call signature is the
+    contract.
 
-    Returns rows now present in the refreshed groups.
+    Returns rows now present in the refreshed sites.
     """
     import os
-    import shutil
 
-    from ..operators.upsert import merge_upsert
+    from ..operators.upsert import _clear_work_dirs, _staged_overwrite, merge_upsert
+    from ..operators.versioned import _escape_part_val
 
-    merge_upsert(
-        spark, bronze_path, bronze_delta, keys=["site", "ts_utc"],
-        order_col="ingested_at",
-    )
-    touched = (
-        bronze_delta.select(
-            "site", F.date_trunc("hour", F.col("ts_utc")).alias("ts_hour")
-        ).distinct()
-    )
-    sites = touched.select("site").distinct()
-    bronze = spark.read.parquet(bronze_path)
+    merge_upsert(spark, bronze_path, bronze_delta, keys=["site", "ts_utc"],
+                 order_col="ingested_at")
+    hour = F.date_trunc("hour", F.col("ts_utc"))
+    touched = bronze_delta.select("site", hour.alias("ts_utc")).distinct()
+    sites = [r.site for r in touched.select("site").distinct().collect()]
+    in_sites = F.col("site").isin(sites)
     cand = (
-        bronze.join(F.broadcast(sites), "site", "left_semi")
-        .withColumn("_g", F.date_trunc("hour", F.col("ts_utc")))
-        .join(
-            F.broadcast(touched.withColumnRenamed("ts_hour", "_g")),
-            ["site", "_g"],
-            "left_semi",
-        )
+        spark.read.parquet(bronze_path).filter(in_sites).withColumn("_g", hour)
+        .join(F.broadcast(touched.withColumnRenamed("ts_utc", "_g")),
+              ["site", "_g"], "left_semi")
         .drop("_g")
     )
-    recomputed = clean_to_hourly(cand)
-
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    touched_as_silver_key = touched.withColumnRenamed("ts_hour", "ts_utc")
+    out = clean_to_hourly(cand)
+    # recover a crashed writer before planning the silver read (its
+    # roll-forward renames the partition dirs that read would list)
+    _clear_work_dirs(spark, silver_path)
     if os.path.exists(silver_path):
-        pruned = spark.read.parquet(silver_path).join(
-            F.broadcast(sites), "site", "left_semi"
+        kept = spark.read.parquet(silver_path).filter(in_sites).join(
+            F.broadcast(touched), ["site", "ts_utc"], "left_anti"
         )
-        kept = pruned.join(
-            F.broadcast(touched_as_silver_key), ["site", "ts_utc"], "left_anti"
-        )
-        out = kept.unionByName(recomputed).localCheckpoint(eager=True)
-    else:
-        out = recomputed.localCheckpoint(eager=True)
-    n = out.count()
-    out.write.mode("overwrite").partitionBy("site").parquet(silver_path)
-
-    # stale-partition cleanup: touched sites that ended with zero rows.
-    # The emptied set is derived as an anti-join and ONLY that set is
-    # collected — bounded by the count of partitions being deleted (the
-    # dir removal itself is inherently a driver-side FS op), not by the
-    # touched-key cardinality (VERDICT r4 wrong #3).
-    emptied = sites.join(
-        out.select("site").distinct(), "site", "left_anti"
-    ).collect()
-    for r in emptied:
-        d = os.path.join(silver_path, f"site={r['site']}")
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    return n
+        out = kept.unionByName(out)
+    return _staged_overwrite(
+        spark, silver_path, out, ["site"], recovered=True,
+        replaced=[f"site={_escape_part_val(s)}" for s in sites],
+    )

@@ -13,10 +13,14 @@ function of (reference, batch N contents), so a replayed batch
 rewrites its own ``batch_id=N`` partition byte-identically —
 per-partition replacement IS the idempotency here, no pointer needed
 (contrast ``agg_stream``, whose state is cumulative). The replacement
-is a staged-rename publish so a polling reader never sees a partition
-half-written. Reference rates are recomputed per batch from the
-(usually small, pre-aggregated) reference frame; cache it for long
-streams.
+goes through ``upsert._staged_overwrite``, the one partition-replace
+path every package writer shares (staged write, rename publish, crash
+recovery by the next writer), so a polling reader never sees a
+partition half-written — a missing or partial drift row is a silently
+muted alarm. One writer per report directory, as for every table
+(SCALE.md "Write concurrency"). Reference rates are recomputed per
+batch from the (usually small, pre-aggregated) reference frame; cache
+it for long streams.
 
 Scale: per batch, two partial-agg shuffles on the category key and a
 tiny write — the monitor adds no corpus-sized state and composes with
@@ -29,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.drift import categorical_drift
+from ..operators.upsert import _staged_overwrite
 from .agg_stream import bind_checkpoint
 
 
@@ -48,26 +53,11 @@ def stream_drift_monitor(
     bind_checkpoint(report_path, checkpoint)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        import os
-        import shutil
-
-        # staged-rename publish: a reader polling the report dir must
-        # never see batch N's partition half-written (a missing/partial
-        # drift row is a silently muted alarm). Underscore-prefixed
-        # work dirs are invisible to parquet readers; the residual is
-        # the brief between-renames window, same as the upsert sinks
-        # (SCALE.md "Write concurrency").
         rep = categorical_drift(reference, batch, cat_col, threshold=threshold)
-        staged = os.path.join(report_path, "_staging", str(batch_id))
-        live = os.path.join(report_path, f"batch_id={batch_id}")
-        trash = os.path.join(report_path, "_trash", str(batch_id))
-        rep.write.mode("overwrite").parquet(staged)
-        shutil.rmtree(trash, ignore_errors=True)
-        if os.path.exists(live):
-            os.makedirs(os.path.dirname(trash), exist_ok=True)
-            os.rename(live, trash)
-        os.rename(staged, live)
-        shutil.rmtree(trash, ignore_errors=True)
+        _staged_overwrite(
+            batch.sparkSession, report_path,
+            rep.withColumn("batch_id", F.lit(batch_id)), ["batch_id"],
+        )
 
     return (
         stream.writeStream.foreachBatch(sink)

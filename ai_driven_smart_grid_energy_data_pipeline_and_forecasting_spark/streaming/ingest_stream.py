@@ -146,35 +146,23 @@ def stream_to_silver(
     checkpoint_dir: str,
     ingested_at=None,
 ) -> StreamingQuery:
-    """The full streaming medallion loop in one query: payload stream →
-    bronze MERGE → silver clean chain → silver MERGE, all inside one
-    ``foreachBatch`` so both tiers commit per micro-batch and replays
-    are observable no-ops at both levels (the reference's re-run
-    contract, ``README.md:36``, extended to the tier it never built).
-
-    The silver pass recleans only the sites present in the batch —
-    the same blast radius as the bronze merge's partition pruning."""
-    from ..plans.silver import clean_to_hourly
+    """The full streaming medallion loop in one query: each micro-batch
+    is parsed and handed to ``incremental_silver_refresh`` inside
+    ``foreachBatch`` — bronze MERGE, then delete-then-insert of every
+    touched (site, hour) Silver group — so both tiers commit per
+    micro-batch and replays are observable no-ops at both levels (the
+    reference's re-run contract, ``README.md:36``, extended to the tier
+    it never built). A later file that invalidates an hour an earlier
+    one kept removes that hour from Silver, exactly as a full
+    ``clean_to_hourly`` of Bronze would."""
+    from ..plans.silver import incremental_silver_refresh
 
     def sink(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
             return
-        spark = batch.sparkSession
-        bronze = payloads_to_bronze(batch, ingested_at)
-        merge_upsert(
-            spark, bronze_path, bronze,
-            keys=["site", "ts_utc"], order_col="ingested_at",
-        )
-        # prune to the batch's sites via broadcast semi-join — no driver
-        # collect, so a batch touching millions of keys still plans as
-        # one broadcast of the distinct-site frame (VERDICT r4 wrong #3)
-        touched = bronze.select("site").distinct()
-        bronze_now = spark.read.parquet(bronze_path).join(
-            F.broadcast(touched), "site", "left_semi"
-        )
-        merge_upsert(
-            spark, silver_path, clean_to_hourly(bronze_now),
-            keys=["site", "ts_utc"], order_col="ts_utc",
+        incremental_silver_refresh(
+            batch.sparkSession, bronze_path, silver_path,
+            payloads_to_bronze(batch, ingested_at),
         )
 
     return (

@@ -140,6 +140,43 @@ def test_stream_to_silver_end_to_end(spark, tmp_path):
     assert before == after
 
 
+def test_stream_to_silver_deletes_invalidated_hour(spark, tmp_path):
+    # a later file sets an hour the first file kept to an invalid GHI:
+    # the hour must leave Silver, exactly as a full clean of Bronze drops it
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.silver import (
+        clean_to_hourly,
+    )
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.streaming.ingest_stream import (
+        stream_to_silver,
+    )
+
+    drop = tmp_path / "drop_inval"
+    bronze, silver, ckpt = (str(tmp_path / n) for n in ("bronze", "silver", "ckpt"))
+    bad = {
+        "properties": {
+            "parameter": {
+                "ALLSKY_SFC_SW_DWN": {"2025010101": -5.0},
+                "T2M": {"2025010101": 2.0},
+                "WS10M": {"2025010101": 4.0},
+            }
+        }
+    }
+    for name, payload, ingested_at in (
+        ("a.json", PAYLOAD, "2025-01-02 00:00:00"),
+        ("b.json", bad, "2025-01-02 06:00:00"),
+    ):
+        _drop_file(drop, name, payload=payload)
+        stream_to_silver(
+            read_payload_stream(spark, str(drop)), bronze, silver, ckpt,
+            ingested_at=ingested_at,
+        ).awaitTermination(120)
+    cols = ["site", "ts_utc", "ghi_wm2", "temp_c", "wind_mps"]
+    got = sorted(map(tuple, spark.read.parquet(silver).select(cols).collect()))
+    want = sorted(map(tuple, clean_to_hourly(spark.read.parquet(bronze)).collect()))
+    assert got == want
+    assert len(got) == 1 and got[0][2] == 100.0
+
+
 def test_stream_distinct_users_within_sketch_tolerance(spark, tmp_path):
     import datetime as dt
 
