@@ -22,11 +22,15 @@ shuffle, and each fit is O(n) in its own series only.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .gold import _series
 
 FORECAST_SCHEMA = T.StructType(
     [
@@ -44,92 +48,98 @@ FORECAST_SCHEMA = T.StructType(
 SEASON = 24
 
 
-def sarimax_forecast(
-    features: DataFrame, horizons: list[int] | None = None
+def _grouped_forecast(
+    features: DataFrame, model: str, fit: Callable
 ) -> DataFrame:
-    """MART_FEATURES → MART_FORECAST rows, model='sarimax' (statsmodels
-    when available, numpy seasonal-AR surrogate otherwise).
-
-    The fit helpers are nested inside the UDF on purpose: cloudpickle
-    serializes module-level functions *by reference*, which requires
-    every executor's Python worker to be able to import this package —
-    not guaranteed outside the repo checkout. Nested functions pickle
-    by value, making the UDF self-contained.
-    """
-    horizons = horizons or [1, 6, 24, 48]
-    hset = set(horizons)
-    season = SEASON
-    schema_cols = [f.name for f in FORECAST_SCHEMA.fields]
-
-    long = features.select(
-        "site", "ts_utc", F.col("pv_est_mwh").alias("pv"), F.col("wind_est_mwh").alias("wind")
-    ).unpivot(["site", "ts_utc"], ["pv", "wind"], "var", "y")
+    """The one ``applyInPandas`` shell: per (site, var) series,
+    ``fit(y)`` returns ``({h: yhat}, σ)`` — or None for a series too
+    short to fit — and each horizon becomes a ±1.96σ MART_FORECAST row."""
+    cols = [f.name for f in FORECAST_SCHEMA.fields]
 
     def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-
-        def fit_predict_numpy(y):
-            # seasonal AR via OLS on [lag1, lag24, 1]; recursive multi-step
-            n = len(y)
-            if n <= season + 1:
-                return None
-            X = np.column_stack(
-                [y[season - 1 : n - 1], y[: n - season], np.ones(n - season)]
-            )
-            t = y[season:]
-            coef, *_ = np.linalg.lstsq(X, t, rcond=None)
-            resid = t - X @ coef
-            sigma = float(np.std(resid)) if len(resid) > 1 else 0.0
-            hist = list(y)
-            preds = {}
-            for h in range(1, max(hset) + 1):
-                nxt = coef[0] * hist[-1] + coef[1] * hist[-season] + coef[2]
-                nxt = max(float(nxt), 0.0)
-                hist.append(nxt)
-                if h in hset:
-                    preds[h] = nxt
-            return preds, sigma
-
-        def fit_predict_sarimax(y):
-            try:
-                from statsmodels.tsa.statespace.sarimax import SARIMAX
-            except ImportError:
-                return None
-            model = SARIMAX(
-                np.asarray(y), order=(1, 0, 0), seasonal_order=(1, 0, 0, season),
-                enforce_stationarity=False, enforce_invertibility=False,
-            )
-            res = model.fit(disp=False)
-            mean = res.get_forecast(steps=max(hset)).predicted_mean
-            sigma = float(np.std(res.resid)) if len(res.resid) > 1 else 0.0
-            return {h: max(float(mean[h - 1]), 0.0) for h in hset}, sigma
-
         pdf = pdf.sort_values("ts_utc")
-        y = pdf["y"].astype(float).to_numpy()
+        fitted = fit(pdf["y"].astype(float).to_numpy())
+        if fitted is None:
+            return pd.DataFrame(columns=cols)
+        preds, sigma = fitted
         site = pdf["site"].iloc[0]
         var = pdf["var"].iloc[0]
         origin = pdf["ts_utc"].iloc[-1]
-        fitted = fit_predict_sarimax(y) or fit_predict_numpy(y)
-        if fitted is None:
-            return pd.DataFrame(columns=[f.name for f in FORECAST_SCHEMA.fields])
-        preds, sigma = fitted
-        rows = []
-        for h, yhat in sorted(preds.items()):
-            rows.append(
+        return pd.DataFrame(
+            [
                 {
                     "site": site,
                     "ts_utc": origin + pd.Timedelta(hours=h),
-                    "model": "sarimax",
+                    "model": model,
                     "var": var,
                     "horizon_h": h,
                     "yhat": yhat,
                     "yhat_lower": max(yhat - 1.96 * sigma, 0.0),
                     "yhat_upper": yhat + 1.96 * sigma,
                 }
-            )
-        return pd.DataFrame(rows)
+                for h, yhat in sorted(preds.items())
+            ]
+        )
 
-    return long.groupBy("site", "var").applyInPandas(fit_group, FORECAST_SCHEMA)
+    return _series(features).groupBy("site", "var").applyInPandas(
+        fit_group, FORECAST_SCHEMA
+    )
+
+
+def sarimax_forecast(
+    features: DataFrame, horizons: list[int] | None = None
+) -> DataFrame:
+    """MART_FEATURES → MART_FORECAST rows, model='sarimax' (statsmodels
+    when available, numpy seasonal-AR surrogate otherwise).
+
+    ``fit`` is nested here and ``_grouped_forecast``'s UDF is a
+    closure on purpose: cloudpickle serializes module-level functions
+    *by reference*, which requires every executor's Python worker to
+    be able to import this package — not guaranteed outside the repo
+    checkout. Nested functions and closures pickle by value, making
+    the UDF self-contained; neither may call a module-level function.
+    """
+    horizons = horizons or [1, 6, 24, 48]
+    hset = set(horizons)
+    season = SEASON
+
+    def fit(y):
+        import numpy as np
+
+        try:
+            from statsmodels.tsa.statespace.sarimax import SARIMAX
+        except ImportError:
+            pass
+        else:
+            res = SARIMAX(
+                np.asarray(y), order=(1, 0, 0), seasonal_order=(1, 0, 0, season),
+                enforce_stationarity=False, enforce_invertibility=False,
+            ).fit(disp=False)
+            mean = res.get_forecast(steps=max(hset)).predicted_mean
+            sigma = float(np.std(res.resid)) if len(res.resid) > 1 else 0.0
+            return {h: max(float(mean[h - 1]), 0.0) for h in hset}, sigma
+        # seasonal AR via OLS on [lag1, lag24, 1]; recursive multi-step
+        n = len(y)
+        if n <= season + 1:
+            return None
+        X = np.column_stack(
+            [y[season - 1 : n - 1], y[: n - season], np.ones(n - season)]
+        )
+        t = y[season:]
+        coef, *_ = np.linalg.lstsq(X, t, rcond=None)
+        resid = t - X @ coef
+        sigma = float(np.std(resid)) if len(resid) > 1 else 0.0
+        hist = list(y)
+        preds = {}
+        for h in range(1, max(hset) + 1):
+            nxt = coef[0] * hist[-1] + coef[1] * hist[-season] + coef[2]
+            nxt = max(float(nxt), 0.0)
+            hist.append(nxt)
+            if h in hset:
+                preds[h] = nxt
+        return preds, sigma
+
+    return _grouped_forecast(features, "sarimax", fit)
 
 
 def mllib_forecast(
@@ -161,16 +171,7 @@ def mllib_forecast(
     # The hourly series is orders of magnitude smaller than its input
     # (one row per site×var×hour), so this is the standard iterative-ML
     # trade: checkpoint the training frame, not the raw scan.
-    long = (
-        features.select(
-            "site",
-            "ts_utc",
-            F.col("pv_est_mwh").alias("pv"),
-            F.col("wind_est_mwh").alias("wind"),
-        )
-        .unpivot(["site", "ts_utc"], ["pv", "wind"], "var", "y")
-        .localCheckpoint(eager=True)
-    )
+    long = _series(features).localCheckpoint(eager=True)
     w = Window.partitionBy("site", "var").orderBy("ts_utc")
 
     out = None
@@ -245,14 +246,12 @@ def holt_winters_forecast(
     season = SEASON
     a_, b_, g_ = float(alpha), float(beta), float(gamma)
 
-    def fit_group(pdf: pd.DataFrame) -> pd.DataFrame:
+    def fit(y):
         import numpy as np
 
-        pdf = pdf.sort_values("ts_utc")
-        y = pdf["y"].astype(float).to_numpy()
         n = len(y)
         if n < 2 * season:
-            return pd.DataFrame(columns=[f.name for f in FORECAST_SCHEMA.fields])
+            return None
         # standard init: first-season mean level, cross-season trend,
         # first-season deviations as the seasonal state
         level = float(np.mean(y[:season]))
@@ -270,30 +269,12 @@ def holt_winters_forecast(
             seas[i % season] = g_ * (y[i] - new_level) + (1 - g_) * s
             level = new_level
         sigma = float(np.std(np.asarray(resid))) if len(resid) > 1 else 0.0
-        site = pdf["site"].iloc[0]
-        var = pdf["var"].iloc[0]
-        origin = pdf["ts_utc"].iloc[-1]
-        rows = []
-        for h in hset:
-            yhat = max(level + h * trend + seas[(n - 1 + h) % season], 0.0)
-            rows.append(
-                {
-                    "site": site,
-                    "ts_utc": origin + pd.Timedelta(hours=h),
-                    "model": "holt_winters",
-                    "var": var,
-                    "horizon_h": h,
-                    "yhat": yhat,
-                    "yhat_lower": max(yhat - 1.96 * sigma, 0.0),
-                    "yhat_upper": yhat + 1.96 * sigma,
-                }
-            )
-        return pd.DataFrame(rows)
+        return {
+            h: max(level + h * trend + seas[(n - 1 + h) % season], 0.0)
+            for h in hset
+        }, sigma
 
-    long = features.select(
-        "site", "ts_utc", F.col("pv_est_mwh").alias("pv"), F.col("wind_est_mwh").alias("wind")
-    ).unpivot(["site", "ts_utc"], ["pv", "wind"], "var", "y")
-    return long.groupBy("site", "var").applyInPandas(fit_group, FORECAST_SCHEMA)
+    return _grouped_forecast(features, "holt_winters", fit)
 
 
 def count_decomposition(

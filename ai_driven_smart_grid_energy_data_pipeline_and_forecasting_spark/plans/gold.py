@@ -16,6 +16,8 @@ the reference never specified them, only their schema/constraints.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -28,6 +30,55 @@ PV_AREA_M2 = 10_000.0
 AIR_DENSITY = 1.225
 ROTOR_AREA_M2 = 5_000.0
 WIND_CP = 0.4
+# the seasonal-naive members of the leaderboard family: (lag hours, name)
+_SNAIVE = ((24, "snaive_24"), (168, "snaive_168"))
+
+
+def _series(features: DataFrame) -> DataFrame:
+    """MART_FEATURES → the long (site, ts_utc, var, y) series every
+    forecaster reads, var ∈ {pv, wind}."""
+    return features.select(
+        "site", "ts_utc", F.col("pv_est_mwh").alias("pv"), F.col("wind_est_mwh").alias("wind")
+    ).unpivot(["site", "ts_utc"], ["pv", "wind"], "var", "y")
+
+
+def _lagged(long: DataFrame, lag_h: int) -> DataFrame:
+    """Seasonal-naive forecasts: each actual re-stamped ``lag_h`` hours
+    later as ``yhat``. A TIME lag: a gap drops a forecast, never shifts."""
+    later = F.col("ts_utc") + F.expr(f"INTERVAL {int(lag_h)} HOURS")
+    return long.select("site", "var", later.alias("ts_utc"), F.col("y").alias("yhat"))
+
+
+def _det_mean(c):
+    """Group mean of ``c`` as an EXACT decimal(30,15) sum over the row
+    count — bit-identical on every engine and partitioning."""
+    return F.sum(c.cast("decimal(30,15)")).cast("double") / F.count(F.lit(1))
+
+
+def _folds(j: DataFrame, long: DataFrame, n_folds: int, horizon_h: int) -> DataFrame:
+    """Tag the rows of ``j`` with their backtest ``fold`` (1..n_folds,
+    oldest first), keeping only the last ``n_folds·horizon_h`` hours
+    before the series' global max hour (one broadcast row)."""
+    # window index back from the anchor: k = 0 is the newest window
+    # (origin_max−H, origin_max]
+    k = F.floor(
+        (F.unix_timestamp("_mx") - F.unix_timestamp("ts_utc"))
+        / F.lit(3600 * int(horizon_h))
+    )
+    return (
+        j.crossJoin(F.broadcast(long.agg(F.max("ts_utc").alias("_mx"))))
+        .withColumn("_k", k)
+        .filter((F.col("_k") >= 0) & (F.col("_k") < n_folds))
+        .withColumn("fold", (F.lit(n_folds) - F.col("_k")).cast("int"))
+    )
+
+
+def _check_folds(n_folds: int, horizon_h: int) -> None:
+    """The fold-protocol guard every backtest-driven function shares."""
+    if n_folds < 1:
+        raise ValueError(f"n_folds must be >= 1, got {n_folds}")
+    if horizon_h < 1:
+        raise ValueError(f"horizon_h must be >= 1, got {horizon_h}")
 
 
 def mart_features(fact: DataFrame) -> DataFrame:
@@ -80,9 +131,7 @@ def seasonal_naive_forecast(
     lag/stddev window — Catalyst reuses the window exchange.
     """
     horizons = horizons or [1, 6, 24, 48]
-    long = features.select(
-        "site", "ts_utc", F.col("pv_est_mwh").alias("pv"), F.col("wind_est_mwh").alias("wind")
-    ).unpivot(["site", "ts_utc"], ["pv", "wind"], "var", "y")
+    long = _series(features)
 
     w = Window.partitionBy("site", "var").orderBy("ts_utc")
     # residual scale from the season-lag differences seen so far
@@ -134,10 +183,7 @@ def forecast_accuracy(forecast: DataFrame, features: DataFrame) -> DataFrame:
     final agg; at 100 TB both sides are partitioned by site so the join
     co-locates.
     """
-    actual = features.select(
-        "site", "ts_utc", F.col("pv_est_mwh").alias("pv"), F.col("wind_est_mwh").alias("wind")
-    ).unpivot(["site", "ts_utc"], ["pv", "wind"], "var", "y")
-    j = forecast.join(actual, ["site", "ts_utc", "var"])
+    j = forecast.join(_series(features), ["site", "ts_utc", "var"])
     err = F.col("yhat") - F.col("y")
     return (
         j.groupBy("model", "var", "horizon_h")
@@ -207,52 +253,85 @@ def rolling_backtest(
             "a longer horizon would read actuals past the fold origin "
             "(train-on-test leakage)"
         )
-    if n_folds < 1:
-        raise ValueError(f"n_folds must be >= 1, got {n_folds}")
-    long = features.select(
-        "site",
-        "ts_utc",
-        F.col("pv_est_mwh").alias("pv"),
-        F.col("wind_est_mwh").alias("wind"),
-    ).unpivot(["site", "ts_utc"], ["pv", "wind"], "var", "y")
-    mx = long.agg(F.max("ts_utc").alias("_mx"))
-    lagged = long.select(
-        "site",
-        "var",
-        (
-            F.col("ts_utc") + F.expr(f"INTERVAL {int(season_h)} HOURS")
-        ).alias("ts_utc"),
-        F.col("y").alias("yhat"),
-    )
-    j = long.join(lagged, ["site", "var", "ts_utc"]).crossJoin(
-        F.broadcast(mx)
-    )
-    # window index back from the anchor: k = 0 is the newest window
-    # (origin_max−H, origin_max]; fold numbers run oldest-first 1..F
-    k = F.floor(
-        (F.unix_timestamp("_mx") - F.unix_timestamp("ts_utc"))
-        / F.lit(3600 * int(horizon_h))
-    )
+    _check_folds(n_folds, horizon_h)
+    long = _series(features)
+    j = long.join(_lagged(long, season_h), ["site", "var", "ts_utc"])
     err = F.col("yhat") - F.col("y")
-    dec = lambda c: c.cast("decimal(30,15)")  # noqa: E731 — exact sum carrier
-    n_ = F.count(F.lit(1))
     return (
-        j.withColumn("_k", k)
-        .filter((F.col("_k") >= 0) & (F.col("_k") < n_folds))
-        .withColumn("fold", (F.lit(n_folds) - F.col("_k")).cast("int"))
+        _folds(j, long, n_folds, horizon_h)
         .groupBy("site", "var", "fold")
         .agg(
-            n_.alias("n"),
-            F.round(
-                F.sum(dec(F.abs(err))).cast("double") / n_, 4
-            ).alias("mae"),
-            F.round(
-                F.sqrt(F.sum(dec(err * err)).cast("double") / n_), 4
-            ).alias("rmse"),
-            F.round(F.sum(dec(err)).cast("double") / n_, 4).alias("bias"),
+            F.count(F.lit(1)).alias("n"),
+            F.round(_det_mean(F.abs(err)), 4).alias("mae"),
+            F.round(F.sqrt(_det_mean(err * err)), 4).alias("rmse"),
+            F.round(_det_mean(err), 4).alias("bias"),
         )
         .orderBy("site", "var", "fold")
     )
+
+
+def _leaderboard(
+    features: DataFrame, n_folds: int, horizon_h: int
+) -> tuple[DataFrame, DataFrame]:
+    """``model_leaderboard``'s plan plus the checkpointed series it
+    scored, so ``champion_forecast`` forecasts from the same pin."""
+    _check_folds(n_folds, horizon_h)
+    long = _series(features).localCheckpoint(eager=True)
+    test = _folds(long, long, n_folds, horizon_h)
+    # seasonal-naive members: the same TIME-join convention as
+    # rolling_backtest (gaps drop, never shift)
+    fcs = [
+        test.join(_lagged(long, lag_h), ["site", "var", "ts_utc"]).select(
+            "site", "var", "fold", "y", "yhat",
+            F.lit(name).alias("model"),
+        )
+        for lag_h, name in _SNAIVE
+    ]
+    # climatology member: per-fold expanding hour-of-day mean with
+    # train cutoff at the fold origin (integer-seconds arithmetic —
+    # exact on both engines)
+    folds = F.broadcast(
+        long.sparkSession.range(1, int(n_folds) + 1).select(
+            F.col("id").cast("int").alias("fold")
+        )
+    )
+    train = (
+        long.crossJoin(F.broadcast(long.agg(F.max("ts_utc").alias("_mx"))))
+        .crossJoin(folds)
+        .filter(
+            F.unix_timestamp("ts_utc")
+            <= F.unix_timestamp("_mx")
+            - (F.lit(int(n_folds) + 1) - F.col("fold"))
+            * F.lit(3600 * int(horizon_h))
+        )
+        .groupBy("site", "var", F.hour("ts_utc").alias("hod"), "fold")
+        .agg(_det_mean(F.col("y")).alias("yhat"))
+    )
+    fcs.append(
+        test.withColumn("hod", F.hour("ts_utc"))
+        .join(train, ["site", "var", "hod", "fold"])
+        .select(
+            "site", "var", "fold", "y", "yhat",
+            F.lit("hod_mean").alias("model"),
+        )
+    )
+    err = F.col("yhat") - F.col("y")
+    per_fold = reduce(DataFrame.unionByName, fcs).groupBy(
+        "site", "var", "model", "fold"
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.round(_det_mean(F.abs(err)), 4).alias("mae"),
+    )
+    board = per_fold.groupBy("site", "var", "model").agg(
+        F.count(F.lit(1)).cast("int").alias("folds_evaluated"),
+        F.sum("n").alias("total_n"),
+        F.round(_det_mean(F.col("mae")), 4).alias("mean_mae"),
+    )
+    w = Window.partitionBy("site", "var").orderBy("mean_mae", "model")
+    return (
+        board.withColumn("rank", F.row_number().over(w).cast("int"))
+        .orderBy("site", "var", "rank")
+    ), long
 
 
 def model_leaderboard(
@@ -301,101 +380,7 @@ def model_leaderboard(
     the raw fact scan — ~10 scans of a 100 TB table for one
     leaderboard; checkpointing pins the sites·hours·2-row frame and
     every branch reads that instead (plan-audited: one fact scan)."""
-    if n_folds < 1:
-        raise ValueError(f"n_folds must be >= 1, got {n_folds}")
-    spark = features.sparkSession
-    long = features.select(
-        "site",
-        "ts_utc",
-        F.col("pv_est_mwh").alias("pv"),
-        F.col("wind_est_mwh").alias("wind"),
-    ).unpivot(
-        ["site", "ts_utc"], ["pv", "wind"], "var", "y"
-    ).localCheckpoint(eager=True)
-    mx = long.agg(F.max("ts_utc").alias("_mx"))
-    k = F.floor(
-        (F.unix_timestamp("_mx") - F.unix_timestamp("ts_utc"))
-        / F.lit(3600 * int(horizon_h))
-    )
-    test = (
-        long.crossJoin(F.broadcast(mx))
-        .withColumn("_k", k)
-        .filter((F.col("_k") >= 0) & (F.col("_k") < n_folds))
-        .withColumn("fold", (F.lit(n_folds) - F.col("_k")).cast("int"))
-    )
-    # seasonal-naive members: the same TIME-join convention as
-    # rolling_backtest (gaps drop, never shift)
-    fcs = []
-    for lag_h, name in ((24, "snaive_24"), (168, "snaive_168")):
-        lagged = long.select(
-            "site",
-            "var",
-            (
-                F.col("ts_utc") + F.expr(f"INTERVAL {int(lag_h)} HOURS")
-            ).alias("ts_utc"),
-            F.col("y").alias("yhat"),
-        )
-        fcs.append(
-            test.join(lagged, ["site", "var", "ts_utc"]).select(
-                "site", "var", "fold", "y", "yhat",
-                F.lit(name).alias("model"),
-            )
-        )
-    # climatology member: per-fold expanding hour-of-day mean with
-    # train cutoff at the fold origin (integer-seconds arithmetic —
-    # exact on both engines)
-    folds = F.broadcast(
-        spark.range(1, int(n_folds) + 1).select(
-            F.col("id").cast("int").alias("fold")
-        )
-    )
-    dec = lambda c: c.cast("decimal(30,15)")  # noqa: E731 — exact sums
-    train = (
-        long.crossJoin(F.broadcast(mx))
-        .crossJoin(folds)
-        .filter(
-            F.unix_timestamp("ts_utc")
-            <= F.unix_timestamp("_mx")
-            - (F.lit(int(n_folds) + 1) - F.col("fold"))
-            * F.lit(3600 * int(horizon_h))
-        )
-        .groupBy("site", "var", F.hour("ts_utc").alias("hod"), "fold")
-        .agg(
-            (
-                F.sum(dec(F.col("y"))).cast("double") / F.count(F.lit(1))
-            ).alias("yhat")
-        )
-    )
-    fcs.append(
-        test.withColumn("hod", F.hour("ts_utc"))
-        .join(train, ["site", "var", "hod", "fold"])
-        .select(
-            "site", "var", "fold", "y", "yhat",
-            F.lit("hod_mean").alias("model"),
-        )
-    )
-    allfc = fcs[0]
-    for f_ in fcs[1:]:
-        allfc = allfc.unionByName(f_)
-    err = F.col("yhat") - F.col("y")
-    per_fold = allfc.groupBy("site", "var", "model", "fold").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(
-            F.sum(dec(F.abs(err))).cast("double") / F.count(F.lit(1)), 4
-        ).alias("mae"),
-    )
-    board = per_fold.groupBy("site", "var", "model").agg(
-        F.count(F.lit(1)).cast("int").alias("folds_evaluated"),
-        F.sum("n").alias("total_n"),
-        F.round(
-            F.sum(dec(F.col("mae"))).cast("double") / F.count(F.lit(1)), 4
-        ).alias("mean_mae"),
-    )
-    w = Window.partitionBy("site", "var").orderBy("mean_mae", "model")
-    return (
-        board.withColumn("rank", F.row_number().over(w).cast("int"))
-        .orderBy("site", "var", "rank")
-    )
+    return _leaderboard(features, n_folds, horizon_h)[0]
 
 
 def champion_forecast(
@@ -420,57 +405,35 @@ def champion_forecast(
     computed declaratively and the champion join keeps one model's
     rows per series; total candidate volume is
     sites·vars·horizon_h·3 rows before the champion cut, so there is
-    nothing to prune at scale. The unpivoted series is
-    ``localCheckpoint``ed like the leaderboard's (Catalyst does not
-    share subplans across union branches — without it the forward
-    branches re-scan the raw fact table per model).
+    nothing to prune at scale. The forward branches read the
+    leaderboard's own ``localCheckpoint``ed series, so one call pays
+    one checkpoint (Catalyst does not share subplans across union
+    branches — without the pin each branch re-scans the raw fact
+    table per model).
 
     Output: (site, var, ts_utc, model, yhat) with yhat rounded to 6
     decimals (the ``forecast_baseline`` family convention), ordered
     by site, var, ts_utc."""
-    spark = features.sparkSession
-    board = model_leaderboard(features, n_folds, horizon_h)
+    board, long = _leaderboard(features, n_folds, horizon_h)
     champ = board.filter(F.col("rank") == 1).select("site", "var", "model")
-    long = features.select(
-        "site",
-        "ts_utc",
-        F.col("pv_est_mwh").alias("pv"),
-        F.col("wind_est_mwh").alias("wind"),
-    ).unpivot(
-        ["site", "ts_utc"], ["pv", "wind"], "var", "y"
-    ).localCheckpoint(eager=True)
-    mx = long.agg(F.max("ts_utc").alias("_mx"))
     future = (
-        spark.range(1, int(horizon_h) + 1)
+        long.sparkSession.range(1, int(horizon_h) + 1)
         .select(F.col("id").cast("int").alias("h"))
-        .crossJoin(F.broadcast(mx))
+        .crossJoin(F.broadcast(long.agg(F.max("ts_utc").alias("_mx"))))
         .select("h", F.expr("timestampadd(HOUR, h, _mx)").alias("ts_utc"))
     )
-    fcs = []
-    for lag_h, name in ((24, "snaive_24"), (168, "snaive_168")):
-        lagged = long.select(
-            "site",
-            "var",
-            (
-                F.col("ts_utc") + F.expr(f"INTERVAL {int(lag_h)} HOURS")
-            ).alias("ts_utc"),
-            F.col("y").alias("yhat"),
+    fcs = [
+        _lagged(long, lag_h)
+        .join(F.broadcast(future.select("ts_utc")), "ts_utc")
+        .select(
+            "site", "var", "ts_utc", "yhat",
+            F.lit(name).alias("model"),
         )
-        fcs.append(
-            lagged.join(F.broadcast(future.select("ts_utc")), "ts_utc")
-            .select(
-                "site", "var", "ts_utc", "yhat",
-                F.lit(name).alias("model"),
-            )
-        )
-    dec = lambda c: c.cast("decimal(30,15)")  # noqa: E731 — exact sums
+        for lag_h, name in _SNAIVE
+    ]
     clim = long.groupBy(
         "site", "var", F.hour("ts_utc").alias("hod")
-    ).agg(
-        (F.sum(dec(F.col("y"))).cast("double") / F.count(F.lit(1))).alias(
-            "yhat"
-        )
-    )
+    ).agg(_det_mean(F.col("y")).alias("yhat"))
     fcs.append(
         F.broadcast(future)
         .withColumn("hod", F.hour("ts_utc"))
@@ -480,11 +443,9 @@ def champion_forecast(
             F.lit("hod_mean").alias("model"),
         )
     )
-    allfc = fcs[0]
-    for f_ in fcs[1:]:
-        allfc = allfc.unionByName(f_)
     return (
-        allfc.join(champ, ["site", "var", "model"])
+        reduce(DataFrame.unionByName, fcs)
+        .join(champ, ["site", "var", "model"])
         .select(
             "site", "var", "ts_utc", "model",
             F.round("yhat", 6).alias("yhat"),
@@ -602,11 +563,7 @@ def conformal_eval(
     acceptable because groups are few and the windows carry only
     rank/count; at larger group cardinality the split boundary and q
     would come from a pre-aggregated quantile table instead."""
-    actual = features.select(
-        "site", "ts_utc", F.col("pv_est_mwh").alias("pv"),
-        F.col("wind_est_mwh").alias("wind"),
-    ).unpivot(["site", "ts_utc"], ["pv", "wind"], "var", "y")
-    pts = forecast.join(actual, ["site", "ts_utc", "var"]).select(
+    pts = forecast.join(_series(features), ["site", "ts_utc", "var"]).select(
         "model", "var", "horizon_h", "site", "ts_utc",
         F.abs(F.col("yhat") - F.col("y")).alias("_ar"),
     )

@@ -181,8 +181,11 @@ def incremental_silver_refresh(
     # roll-forward renames the partition dirs that read would list)
     _clear_work_dirs(spark, silver_path)
     if os.path.exists(silver_path):
-        kept = spark.read.parquet(silver_path).filter(in_sites).join(
-            F.broadcast(touched), ["site", "ts_utc"], "left_anti"
+        # declared schema: a directory left empty by an all-invalid first
+        # refresh has no parquet footer to infer one from
+        kept = (
+            spark.read.schema(out.schema).parquet(silver_path).filter(in_sites)
+            .join(F.broadcast(touched), ["site", "ts_utc"], "left_anti")
         )
         out = kept.unionByName(out)
     return _staged_overwrite(

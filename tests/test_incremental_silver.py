@@ -141,6 +141,25 @@ def test_new_site_and_new_hour_insert(spark, paths):
     assert key("delta", 4) in got and key("beta", 5) in got
 
 
+def test_refresh_after_all_invalid_first_refresh(spark, tmp_path):
+    # a first refresh whose only row is invalid leaves an empty silver
+    # directory; the next refresh must still read it (no parquet file
+    # to infer a schema from) and match a full recompute
+    bronze_path = str(tmp_path / "bronze")
+    silver_path = str(tmp_path / "silver")
+    bad = spark.createDataFrame(
+        [("alpha", ts(0), -1.0, 10.0, 5.0, None, ING0)], RAW_WEATHER
+    )
+    incremental_silver_refresh(spark, bronze_path, silver_path, bad)
+    good = spark.createDataFrame(
+        [("alpha", ts(1), 110.0, 11.0, 5.5, None, ING1)], RAW_WEATHER
+    )
+    incremental_silver_refresh(spark, bronze_path, silver_path, good)
+    got = _silver(spark, silver_path)
+    assert got == _full(spark, bronze_path)
+    assert list(got) == [key("alpha", 1)]
+
+
 def test_refresh_is_idempotent(spark, paths):
     bronze_path, silver_path = paths
     delta = spark.createDataFrame(

@@ -535,106 +535,6 @@ def test_hot_bucket_cap_oracle_parity_when_firing(spark):
     )
 
 
-# -------------------------------------- rolling-origin backtest (r13)
-
-
-def _hourly_feats(spark, rows):
-    """rows: (site, ts_iso_hour, pv, wind) -> features frame."""
-    df = spark.createDataFrame(
-        rows, "site string, ts_utc string, pv_est_mwh double, wind_est_mwh double"
-    )
-    from pyspark.sql import functions as F
-
-    return df.withColumn("ts_utc", F.to_timestamp("ts_utc"))
-
-
-def test_backtest_leakage_free_and_fold_isolation(spark):
-    # the leakage contract, tested adversarially: perturbing actuals
-    # INSIDE the newest test window must change fold 4's metrics and
-    # NOTHING else — earlier folds never see data after their origin,
-    # and (because horizon <= season) their forecasts never read it
-    # either. A leaky implementation (row-lag over a series containing
-    # the perturbed tail, or train-window overlap) fails this.
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        rolling_backtest,
-    )
-
-    base_rows = [
-        ("s1", f"2024-01-{d:02d} {h:02d}:00:00", float(10 + h), float(5 + h))
-        for d in range(1, 8)
-        for h in range(24)
-    ]
-    feats = _hourly_feats(spark, base_rows)
-    before = {
-        (r["site"], r["var"], r["fold"]): (r["n"], r["mae"], r["rmse"], r["bias"])
-        for r in rolling_backtest(feats, n_folds=4).collect()
-    }
-    assert len(before) == 2 * 4  # one site, two vars, four folds
-    # perturb ONLY the last day's pv values (the fold-4 test window)
-    perturbed = [
-        (s, ts, pv + (100.0 if ts.startswith("2024-01-07") else 0.0), w)
-        for s, ts, pv, w in base_rows
-    ]
-    after = {
-        (r["site"], r["var"], r["fold"]): (r["n"], r["mae"], r["rmse"], r["bias"])
-        for r in rolling_backtest(
-            _hourly_feats(spark, perturbed), n_folds=4
-        ).collect()
-    }
-    for key in before:
-        site, var, fold = key
-        if var == "pv" and fold == 4:
-            assert after[key] != before[key], key
-        else:
-            assert after[key] == before[key], key
-
-
-def test_backtest_gap_honesty_and_seasonal_exactness(spark):
-    # a missing hour yields NO forecast row for the orphaned target
-    # (time join, not row lag): drop one hour from the seasonal-lag
-    # source day and the matched count n drops by exactly 1 in the
-    # corresponding fold, while a row-lag would have silently shifted
-    # every later forecast. Also: on a perfectly 24h-periodic series
-    # the seasonal-naive backtest error is exactly zero.
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        rolling_backtest,
-    )
-
-    periodic = [
-        ("s1", f"2024-01-{d:02d} {h:02d}:00:00", float(h), float(h) / 2)
-        for d in range(1, 8)
-        for h in range(24)
-    ]
-    out = rolling_backtest(_hourly_feats(spark, periodic), n_folds=4).toPandas()
-    assert (out["mae"] == 0.0).all() and (out["rmse"] == 0.0).all()
-    assert (out["n"] == 24).all()
-    # drop the seasonal source of fold 4's first hour (day 6, 00:00):
-    # fold 4 (day 7) loses exactly that one matched point; fold 3
-    # (day 6) also loses its 00:00 ACTUAL row — n drops by 1 in both,
-    # folds 1-2 untouched
-    gapped = [r for r in periodic if r[1] != "2024-01-06 00:00:00"]
-    out2 = rolling_backtest(_hourly_feats(spark, gapped), n_folds=4).toPandas()
-    n_by_fold = dict(
-        zip(zip(out2["var"], out2["fold"]), out2["n"])
-    )
-    assert n_by_fold[("pv", 4)] == 23 and n_by_fold[("pv", 3)] == 23
-    assert n_by_fold[("pv", 1)] == 24 and n_by_fold[("pv", 2)] == 24
-
-
-def test_backtest_guards(spark):
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        rolling_backtest,
-    )
-
-    feats = _hourly_feats(
-        spark, [("s1", "2024-01-01 00:00:00", 1.0, 1.0)]
-    )
-    with pytest.raises(ValueError, match="leakage"):
-        rolling_backtest(feats, n_folds=2, horizon_h=48, season_h=24)
-    with pytest.raises(ValueError, match="n_folds"):
-        rolling_backtest(feats, n_folds=0)
-
-
 # --------------------------------------------- hypothesis differentials
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402

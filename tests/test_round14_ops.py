@@ -247,162 +247,6 @@ def test_quantize_embeddings_packed_schema_and_width(spark):
     assert [tuple(r) for r in qa.collect()] == [tuple(r) for r in qb.collect()]
 
 
-# ------------------------------ forecast model leaderboard (r14)
-
-
-def _hourly_feats(spark, rows):
-    """rows: (site, ts_iso_hour, pv, wind) -> features frame."""
-    df = spark.createDataFrame(
-        rows,
-        "site string, ts_utc string, pv_est_mwh double, wind_est_mwh double",
-    )
-    return df.withColumn("ts_utc", F.to_timestamp("ts_utc"))
-
-
-def _series(spark, fn, days=14):
-    rows = [
-        (
-            "s1",
-            f"2024-01-{d:02d} {h:02d}:00:00",
-            float(fn(d - 1, h)),
-            float(fn(d - 1, h)),
-        )
-        for d in range(1, days + 1)
-        for h in range(24)
-    ]
-    return _hourly_feats(spark, rows)
-
-
-def test_leaderboard_guard_and_schema(spark):
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        model_leaderboard,
-    )
-
-    with pytest.raises(ValueError, match="n_folds"):
-        model_leaderboard(_series(spark, lambda d, h: 1.0), n_folds=0)
-    out = model_leaderboard(_series(spark, lambda d, h: 1.0))
-    assert out.columns == [
-        "site", "var", "model", "folds_evaluated", "total_n",
-        "mean_mae", "rank",
-    ]
-
-
-def test_leaderboard_daily_drift_picks_snaive24(spark):
-    # y = hour + day: snaive_24 is off by exactly 1 everywhere, the
-    # weekly naive by 7, the climatology by the distance to the train
-    # mean (several days) — the daily naive must champion BOTH vars
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        model_leaderboard,
-    )
-
-    out = model_leaderboard(
-        _series(spark, lambda d, h: h + d)
-    ).toPandas()
-    champs = out[out["rank"] == 1]
-    assert set(champs["model"]) == {"snaive_24"}
-    assert (champs["mean_mae"] == 1.0).all()
-    # all three models evaluated all four folds on this 14-day series
-    assert (out["folds_evaluated"] == 4).all()
-    assert set(out["model"]) == {"snaive_24", "snaive_168", "hod_mean"}
-
-
-def test_leaderboard_weekly_pattern_picks_snaive168(spark):
-    # y = day-of-week: the weekly naive reproduces it exactly (MAE 0)
-    # while the daily naive is off whenever consecutive days differ
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        model_leaderboard,
-    )
-
-    out = model_leaderboard(
-        _series(spark, lambda d, h: d % 7)
-    ).toPandas()
-    champs = out[out["rank"] == 1]
-    assert set(champs["model"]) == {"snaive_168"}
-    assert (champs["mean_mae"] == 0.0).all()
-    sn24 = out[out["model"] == "snaive_24"]
-    assert (sn24["mean_mae"] > 0).all()
-
-
-def test_leaderboard_tie_breaks_by_model_name(spark):
-    # constant series: every model is exact, mean_mae 0.0 across the
-    # board — rank 1 must be the alphabetically first model name
-    # (hod_mean), pinning the name-deterministic tie rule the oracle
-    # relies on
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        model_leaderboard,
-    )
-
-    out = model_leaderboard(
-        _series(spark, lambda d, h: 2.5)
-    ).toPandas()
-    assert (out["mean_mae"] == 0.0).all()
-    champs = out[out["rank"] == 1]
-    assert set(champs["model"]) == {"hod_mean"}
-
-
-def test_leaderboard_hod_mean_train_cutoff_no_leakage(spark):
-    # adversarial leakage check with exact numbers: a 100-unit spike
-    # at hour 5 of the LAST day (fold 4's test window). The hod_mean
-    # train cutoff for fold 4 is the fold ORIGIN (max_ts - 24 h), so
-    # the spike day is excluded from its own climatology: ŷ(hour 5)
-    # stays 1.0 and fold-4 MAE is exactly 100/24; a leaky cutoff
-    # (train through the test window) would pull the hour-5 mean off
-    # 1.0 and break the closed-form value. Earlier folds see a flat
-    # series, so mean_mae = round((100/24)/4, 4) = 1.0417 — for
-    # hod_mean AND snaive_24 (whose lag-24 forecast is equally
-    # uncontaminated).
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        model_leaderboard,
-    )
-
-    out = model_leaderboard(
-        _series(
-            spark,
-            lambda d, h: 101.0 if (d == 13 and h == 5) else 1.0,
-        )
-    ).toPandas()
-    for model in ("hod_mean", "snaive_24"):
-        got = out[(out["model"] == model) & (out["var"] == "pv")]
-        assert list(got["mean_mae"]) == [1.0417], (model, got)
-
-
-def test_champion_forecast_forwards_the_winner(spark):
-    # daily drift: champion is snaive_24 (proven above); the forward
-    # forecast must be y(t - 24 h) for every one of the next 24 hours
-    # — closed form: day-14 hour-h actual is h + 13, so the day-15
-    # forecast repeats it
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        champion_forecast,
-    )
-
-    out = champion_forecast(
-        _series(spark, lambda d, h: h + d)
-    ).toPandas()
-    assert set(out["model"]) == {"snaive_24"}
-    pv = out[out["var"] == "pv"].sort_values("ts_utc")
-    assert len(pv) == 24
-    # series ends Jan 14 23:00 -> future window is Jan 15 00:00-23:00
-    assert [t.hour for t in pv["ts_utc"]] == list(range(24))
-    assert all(t.day == 15 for t in pv["ts_utc"])
-    got = {t.hour: y for t, y in zip(pv["ts_utc"], pv["yhat"])}
-    assert got == {h: float(h + 13) for h in range(24)}
-
-
-def test_champion_forecast_constant_series_climatology(spark):
-    # constant series: tie -> hod_mean champion; its climatology mean
-    # is exactly the constant for all 24 future hours
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        champion_forecast,
-    )
-
-    out = champion_forecast(
-        _series(spark, lambda d, h: 2.5)
-    ).toPandas()
-    assert set(out["model"]) == {"hod_mean"}
-    assert len(out) == 2 * 24
-    assert (out["yhat"] == 2.5).all()
-
-
 def test_batch_topk_cut_matches_reference_order_property():
     # pure-numpy property test (no Spark round-trip, so examples are
     # cheap): against a reference ranking that literally spells the
@@ -455,113 +299,6 @@ def test_batch_topk_cut_matches_reference_order_property():
 
     import math
 
-    check()
-
-
-# A feature-source prefix over a registered `feats` table, spliced
-# onto the REGISTERED oracle's CTE chain (split off after
-# _PSEUDO_FEATURES_CTE) — the model family under differential test is
-# literally the registered SQL, not a restatement that could desync.
-_FEATS_PREFIX = """
-WITH s AS (
-  SELECT site, CAST(ts_utc AS TIMESTAMP) AS ts_utc,
-         pv_est_mwh, wind_est_mwh
-  FROM feats
-),
-long AS (
-  SELECT site, ts_utc, 'pv' AS var, pv_est_mwh AS y FROM s
-  UNION ALL
-  SELECT site, ts_utc, 'wind' AS var, wind_est_mwh AS y FROM s
-)
-"""
-
-
-def _champion_twin_sql(name: str) -> str:
-    oracle = entry_mod.oracle_sql()[name]
-    prefix = entry_mod._PSEUDO_FEATURES_CTE
-    assert oracle.startswith(prefix)
-    return _FEATS_PREFIX + oracle[len(prefix):]
-
-
-@pytest.mark.slow
-def test_leaderboard_hypothesis_differential(spark):
-    # adversarial differential over random series the constructed
-    # cases can't cover: gappy hours (the TIME-join drop semantics),
-    # tie-saturated values (rank boundaries land ON equal mean_mae
-    # constantly), series too short for snaive_168 or even for any
-    # fold, and non-dyadic values exercising the decimal(30,15)
-    # quantization — Spark kernel vs the registered SQL chain in
-    # DuckDB, value-by-value, for BOTH champion entries.
-    import math
-
-    import duckdb
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
-        champion_forecast,
-        model_leaderboard,
-    )
-
-    vals = st.sampled_from([0.0, 1.0, 1.0, 2.5, -1.0, 0.1])
-
-    @settings(
-        max_examples=6,
-        deadline=None,
-        suppress_health_check=[HealthCheck.too_slow],
-    )
-    @given(
-        days=st.integers(2, 10),
-        drop=st.sets(st.integers(0, 239), max_size=60),
-        seed_vals=st.lists(vals, min_size=8, max_size=8),
-        two_sites=st.booleans(),
-    )
-    def check(days, drop, seed_vals, two_sites):
-        rows = []
-        for s in ["a", "b"] if two_sites else ["a"]:
-            for i in range(days * 24):
-                if i in drop:
-                    continue  # hour gap: joins must DROP, never shift
-                d, h = divmod(i, 24)
-                rows.append(
-                    (
-                        s,
-                        f"2024-01-{d + 1:02d} {h:02d}:00:00",
-                        seed_vals[(i + (7 if s == "b" else 0)) % 8],
-                        seed_vals[(i + 3) % 8],
-                    )
-                )
-        feats = _hourly_feats(spark, rows)
-        con = duckdb.connect()
-        con.register(
-            "feats",
-            feats.toPandas(),
-        )
-        for name, fn in [
-            ("forecast_champion", model_leaderboard),
-            ("forecast_champion_forward", champion_forecast),
-        ]:
-            got = fn(feats).toPandas()
-            want = con.execute(_champion_twin_sql(name)).fetchdf()
-            want.columns = [c.strip('"') for c in want.columns]
-            assert list(got.columns) == list(want.columns), name
-            assert len(got) == len(want), (name, len(got), len(want))
-            for c in got.columns:
-                for x, y in zip(got[c], want[c]):
-                    if isinstance(x, float) or isinstance(y, float):
-                        assert (
-                            (pd_isna(x) and pd_isna(y))
-                            or math.isclose(
-                                float(x), float(y),
-                                rel_tol=1e-9, abs_tol=1e-9,
-                            )
-                        ), (name, c, x, y)
-                    else:
-                        assert x == y, (name, c, x, y)
-
-    import pandas as _pd
-
-    pd_isna = _pd.isna
     check()
 
 
