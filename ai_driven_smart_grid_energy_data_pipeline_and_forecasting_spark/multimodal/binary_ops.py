@@ -19,7 +19,8 @@ more than a batch of media in memory at once.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -661,6 +662,98 @@ def resize_images(
     ).mapInPandas(run, out_schema)
 
 
+# ------------------------------------------------ codec round-trip audits
+
+
+def _h32(s: str) -> int:
+    """The engine-portable md5 hash the audit oracles recompute: the
+    first 8 hex digits of ``md5(s)`` as an int."""
+    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+
+def _doc_audit(
+    docs: DataFrame,
+    n_docs: int,
+    schema: str,
+    kernel: Callable[[int], list[tuple]],
+) -> DataFrame:
+    """The one audit shell: ``kernel(doc_id)`` returns the output rows
+    (tuples in ``schema``'s column order) of each distinct doc id below
+    ``n_docs``.
+
+    Plan: per-row independent kernel work over a pruned id set —
+    ``mapInPandas``, no shuffle, one Arrow batch of doc ids in memory
+    per task; at scale the same kernel maps over binary media columns
+    partition-parallel (the audit form exists so the byte path sits
+    inside the standard correctness gate)."""
+    if n_docs < 1:
+        raise ValueError(f"n_docs must be >= 1, got {n_docs}")
+    names = [col.split()[0] for col in schema.split(",")]
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [r for doc_id in pdf["doc_id"] for r in kernel(int(doc_id))],
+                columns=names,
+            )
+
+    return (
+        docs.filter(F.col("doc_id") < n_docs)
+        .select("doc_id")
+        .distinct()
+        .mapInPandas(run, schema)
+    )
+
+
+def _raster_audit(
+    docs: DataFrame,
+    n_docs: int,
+    width: int,
+    height: int,
+    roundtrip: Callable[[int], float],
+) -> DataFrame:
+    """An image audit through ``_doc_audit``: ``roundtrip(doc_id)``
+    returns the decoded mean, emitted as (doc_id, width, height,
+    mean_px) in doc-id order."""
+    return (
+        _doc_audit(
+            docs,
+            n_docs,
+            "doc_id long, mean_px double",
+            lambda d: [(d, roundtrip(d))],
+        )
+        .select(
+            "doc_id",
+            F.lit(width).cast("int").alias("width"),
+            F.lit(height).cast("int").alias("height"),
+            "mean_px",
+        )
+        .orderBy("doc_id")
+    )
+
+
+def _tiles(
+    d: int, key: str, width: int, height: int
+) -> list[list[tuple[int, int, int]]]:
+    """A ``width``×``height`` RGB raster of two solid tiles split at
+    ``width // 2``; tile t's channel c is
+    ``h32("<key>_<d>_<t>_<c>") mod 256``."""
+    colors = [
+        tuple(_h32(f"{key}_{d}_{t}_{c}") % 256 for c in range(3))
+        for t in range(2)
+    ]
+    return [
+        [colors[x // (width // 2)] for x in range(width)]
+        for _ in range(height)
+    ]
+
+
+def _rgb_mean(rows: list[list[tuple[int, int, int]]]) -> float:
+    """Mean over every channel sample of a decoded RGB raster."""
+    total = sum(ch for row in rows for px in row for ch in px)
+    return total / (len(rows) * len(rows[0]) * 3)
+
+
 def codec_roundtrip_audit(
     docs: DataFrame, n_docs: int = 32, width: int = 8, height: int = 8
 ) -> DataFrame:
@@ -678,48 +771,22 @@ def codec_roundtrip_audit(
     correctness gate — the codec analog of ``sketch_accuracy_audit``.
     Per-row independent work, no shuffle; one Arrow batch of rasters
     in memory per task."""
-    import hashlib
-
-    n_px = width * height
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                px = [
-                    int(
-                        hashlib.md5(f"px_{d}_{i}".encode()).hexdigest()[:8],
-                        16,
-                    )
-                    % 256
-                    for i in range(n_px)
-                ]
-                rows = [
-                    [(v, v, v) for v in px[y * width : (y + 1) * width]]
-                    for y in range(height)
-                ]
-                feats = decode_stub(
-                    png_encode(rows, filter_type=4), "image"
-                )
-                assert feats[0] == width and feats[1] == height
-                ids.append(d)
-                means.append(feats[3])
-            yield pd.DataFrame({"doc_id": ids, "mean_px": means})
-
-    return (
-        docs.filter(F.col("doc_id") < n_docs)
-        .select("doc_id")
-        .distinct()
-        .mapInPandas(run, "doc_id long, mean_px double")
-        .select(
-            "doc_id",
-            F.lit(width).cast("int").alias("width"),
-            F.lit(height).cast("int").alias("height"),
-            "mean_px",
+    if width < 1 or height < 1:
+        raise ValueError(
+            f"width and height must be >= 1, got {width}x{height}"
         )
-        .orderBy("doc_id")
-    )
+
+    def roundtrip(d: int) -> float:
+        px = [_h32(f"px_{d}_{i}") % 256 for i in range(width * height)]
+        rows = [
+            [(v, v, v) for v in px[y * width : (y + 1) * width]]
+            for y in range(height)
+        ]
+        feats = decode_stub(png_encode(rows, filter_type=4), "image")
+        assert feats[0] == width and feats[1] == height
+        return feats[3]
+
+    return _raster_audit(docs, n_docs, width, height, roundtrip)
 
 
 def gif_roundtrip_audit(docs: DataFrame, n_docs: int = 32) -> DataFrame:
@@ -733,49 +800,25 @@ def gif_roundtrip_audit(docs: DataFrame, n_docs: int = 32) -> DataFrame:
     md5 derivation with no codec — a hash match certifies
     encode → LZW → palette-mapping → feature extraction end to end
     (the PNG audit's discipline on the palettized format)."""
-    import hashlib
-
     from .gif import gif_decode, gif_encode
 
-    def h(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+    def roundtrip(d: int) -> float:
+        pal = [
+            tuple(_h32(f"gc_{d}_{j}_{c}") % 256 for c in range(3))
+            for j in range(16)
+        ]
+        rows = [
+            [pal[_h32(f"gp_{d}_{y * 8 + x}") % 16] for x in range(8)]
+            for y in range(8)
+        ]
+        data = gif_encode(rows)
+        feats = decode_stub(data, "image")  # dispatch certified
+        assert feats[0] == 8.0 and feats[1] == 8.0
+        back = gif_decode(data)[2]
+        assert back == rows, f"GIF decode not pixel-exact (doc {d})"
+        return _rgb_mean(back)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                pal = [
-                    tuple(h(f"gc_{d}_{j}_{c}") % 256 for c in range(3))
-                    for j in range(16)
-                ]
-                rows = [
-                    [pal[h(f"gp_{d}_{y * 8 + x}") % 16] for x in range(8)]
-                    for y in range(8)
-                ]
-                data = gif_encode(rows)
-                feats = decode_stub(data, "image")  # dispatch certified
-                assert feats[0] == 8.0 and feats[1] == 8.0
-                w, hh, back = gif_decode(data)
-                assert back == rows, f"GIF decode not pixel-exact (doc {d})"
-                total = sum(ch for row in back for px in row for ch in px)
-                ids.append(d)
-                means.append(total / (8 * 8 * 3))
-            yield pd.DataFrame({"doc_id": ids, "mean_px": means})
-
-    return (
-        docs.filter(F.col("doc_id") < n_docs)
-        .select("doc_id")
-        .distinct()
-        .mapInPandas(run, "doc_id long, mean_px double")
-        .select(
-            "doc_id",
-            F.lit(8).cast("int").alias("width"),
-            F.lit(8).cast("int").alias("height"),
-            "mean_px",
-        )
-        .orderBy("doc_id")
-    )
+    return _raster_audit(docs, n_docs, 8, 8, roundtrip)
 
 
 def jpeg420_roundtrip_audit(docs: DataFrame, n_docs: int = 32) -> DataFrame:
@@ -793,54 +836,18 @@ def jpeg420_roundtrip_audit(docs: DataFrame, n_docs: int = 32) -> DataFrame:
     certifies the whole MCU-interleave → subsample → upsample →
     color-transform path inside the standard correctness gate, the
     4:2:0 sibling of ``codec_roundtrip_audit``'s PNG leg."""
-    import hashlib
-
     from .jpeg import jpeg_decode, jpeg_encode
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                colors = [
-                    tuple(
-                        int(
-                            hashlib.md5(
-                                f"jt_{d}_{t}_{c}".encode()
-                            ).hexdigest()[:8],
-                            16,
-                        )
-                        % 256
-                        for c in range(3)
-                    )
-                    for t in range(2)
-                ]
-                rows = [
-                    [colors[x // 16] for x in range(32)] for y in range(16)
-                ]
-                data = jpeg_encode(rows, quality=97, subsample=True)
-                feats = decode_stub(data, "image")  # dispatch certified
-                assert feats[0] == 32.0 and feats[1] == 16.0
-                w, h, back = jpeg_decode(data)
-                assert back == rows, f"4:2:0 decode not sample-exact (doc {d})"
-                total = sum(ch for row in back for px in row for ch in px)
-                ids.append(d)
-                means.append(total / (32 * 16 * 3))
-            yield pd.DataFrame({"doc_id": ids, "mean_px": means})
+    def roundtrip(d: int) -> float:
+        rows = _tiles(d, "jt", 32, 16)
+        data = jpeg_encode(rows, quality=97, subsample=True)
+        feats = decode_stub(data, "image")  # dispatch certified
+        assert feats[0] == 32.0 and feats[1] == 16.0
+        back = jpeg_decode(data)[2]
+        assert back == rows, f"4:2:0 decode not sample-exact (doc {d})"
+        return _rgb_mean(back)
 
-    return (
-        docs.filter(F.col("doc_id") < n_docs)
-        .select("doc_id")
-        .distinct()
-        .mapInPandas(run, "doc_id long, mean_px double")
-        .select(
-            "doc_id",
-            F.lit(32).cast("int").alias("width"),
-            F.lit(16).cast("int").alias("height"),
-            "mean_px",
-        )
-        .orderBy("doc_id")
-    )
+    return _raster_audit(docs, n_docs, 32, 16, roundtrip)
 
 
 def jpeg_progressive_audit(docs: DataFrame, n_docs: int = 32) -> DataFrame:
@@ -859,59 +866,19 @@ def jpeg_progressive_audit(docs: DataFrame, n_docs: int = 32) -> DataFrame:
     codec. A hash match certifies spectral-selection encode →
     multi-scan entropy decode → dequantize/IDCT → upsample → color
     transform inside the standard correctness gate."""
-    import hashlib
-
     from .jpeg import jpeg_decode, jpeg_encode
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                colors = [
-                    tuple(
-                        int(
-                            hashlib.md5(
-                                f"jp_{d}_{t}_{c}".encode()
-                            ).hexdigest()[:8],
-                            16,
-                        )
-                        % 256
-                        for c in range(3)
-                    )
-                    for t in range(2)
-                ]
-                rows = [
-                    [colors[x // 16] for x in range(32)] for y in range(16)
-                ]
-                data = jpeg_encode(
-                    rows, quality=97, subsample=True, progressive=True
-                )
-                assert data.find(b"\xFF\xC2") > 0, "stream is not SOF2"
-                assert data.count(b"\xFF\xDA") >= 7, "missing scans"
-                w, h, back = jpeg_decode(data)
-                assert (w, h) == (32, 16)
-                assert back == rows, (
-                    f"progressive decode not sample-exact (doc {d})"
-                )
-                total = sum(ch for row in back for px in row for ch in px)
-                ids.append(d)
-                means.append(total / (32 * 16 * 3))
-            yield pd.DataFrame({"doc_id": ids, "mean_px": means})
+    def roundtrip(d: int) -> float:
+        rows = _tiles(d, "jp", 32, 16)
+        data = jpeg_encode(rows, quality=97, subsample=True, progressive=True)
+        assert data.find(b"\xFF\xC2") > 0, "stream is not SOF2"
+        assert data.count(b"\xFF\xDA") >= 7, "missing scans"
+        w, h, back = jpeg_decode(data)
+        assert (w, h) == (32, 16)
+        assert back == rows, f"progressive decode not sample-exact (doc {d})"
+        return _rgb_mean(back)
 
-    return (
-        docs.filter(F.col("doc_id") < n_docs)
-        .select("doc_id")
-        .distinct()
-        .mapInPandas(run, "doc_id long, mean_px double")
-        .select(
-            "doc_id",
-            F.lit(32).cast("int").alias("width"),
-            F.lit(16).cast("int").alias("height"),
-            "mean_px",
-        )
-        .orderBy("doc_id")
-    )
+    return _raster_audit(docs, n_docs, 32, 16, roundtrip)
 
 
 def jpeg12_audit(docs: DataFrame, n_docs: int = 32) -> DataFrame:
@@ -930,65 +897,25 @@ def jpeg12_audit(docs: DataFrame, n_docs: int = 32) -> DataFrame:
     quantization → full-category Huffman entropy → SOF1 parse →
     native-precision reconstruction inside the standard gate — the
     ``jpeg_progressive_audit`` discipline on the precision axis."""
-    import hashlib
-
     from .jpeg import jpeg_decode, jpeg_encode
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                vals = [
-                    (
-                        int(
-                            hashlib.md5(
-                                f"jp12_{d}_{t}".encode()
-                            ).hexdigest()[:8],
-                            16,
-                        )
-                        % 2048
-                    )
-                    * 2
-                    for t in range(2)
-                ]
-                rows = [
-                    [vals[x // 16] for x in range(32)] for y in range(16)
-                ]
-                data = jpeg_encode(
-                    rows, quality=97, grayscale=True, precision=12
-                )
-                assert data.find(b"\xFF\xC1") > 0, "stream is not SOF1"
-                assert data.find(b"\xFF\xC0") < 0, "8-bit fallback"
-                i = data.find(b"\xFF\xDB")
-                assert data[i + 4] >> 4 == 1, "DQT is not 16-bit"
-                w, h, back = jpeg_decode(data)
-                assert (w, h) == (32, 16)
-                got = [[px[0] for px in row] for row in back]
-                assert got == rows, (
-                    f"12-bit decode not sample-exact (doc {d})"
-                )
-                ids.append(d)
-                # mean from the DECODED raster (the oracle recomputes
-                # it from the derivation — the hash match is the gate)
-                means.append(
-                    sum(s for row in got for s in row) / (32.0 * 16.0)
-                )
-            yield pd.DataFrame({"doc_id": ids, "mean_px": means})
+    def roundtrip(d: int) -> float:
+        vals = [(_h32(f"jp12_{d}_{t}") % 2048) * 2 for t in range(2)]
+        rows = [[vals[x // 16] for x in range(32)] for _ in range(16)]
+        data = jpeg_encode(rows, quality=97, grayscale=True, precision=12)
+        assert data.find(b"\xFF\xC1") > 0, "stream is not SOF1"
+        assert data.find(b"\xFF\xC0") < 0, "8-bit fallback"
+        i = data.find(b"\xFF\xDB")
+        assert data[i + 4] >> 4 == 1, "DQT is not 16-bit"
+        w, h, back = jpeg_decode(data)
+        assert (w, h) == (32, 16)
+        got = [[px[0] for px in row] for row in back]
+        assert got == rows, f"12-bit decode not sample-exact (doc {d})"
+        # mean from the DECODED raster (the oracle recomputes it from
+        # the derivation — the hash match is the gate)
+        return sum(s for row in got for s in row) / (32.0 * 16.0)
 
-    return (
-        docs.filter(F.col("doc_id") < n_docs)
-        .select("doc_id")
-        .distinct()
-        .mapInPandas(run, "doc_id long, mean_px double")
-        .select(
-            "doc_id",
-            F.lit(32).cast("int").alias("width"),
-            F.lit(16).cast("int").alias("height"),
-            "mean_px",
-        )
-        .orderBy("doc_id")
-    )
+    return _raster_audit(docs, n_docs, 32, 16, roundtrip)
 
 
 def jpeg411_audit(docs: DataFrame, n_docs: int = 32) -> DataFrame:
@@ -1006,61 +933,21 @@ def jpeg411_audit(docs: DataFrame, n_docs: int = 32) -> DataFrame:
     means codec-free from the md5 derivation. A hash match certifies
     the 6-blocks-per-MCU interleave, the 4×1 box average, and the
     factor-4 replication upsample inside the standard gate."""
-    import hashlib
-
     from .jpeg import jpeg_decode, jpeg_encode
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, means = [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                tiles = [
-                    tuple(
-                        int(
-                            hashlib.md5(
-                                f"jp411_{d}_{t}_{c}".encode()
-                            ).hexdigest()[:8],
-                            16,
-                        )
-                        % 256
-                        for c in range(3)
-                    )
-                    for t in range(2)
-                ]
-                rows = [
-                    [tiles[x // 32] for x in range(64)] for y in range(8)
-                ]
-                data = jpeg_encode(rows, quality=97, subsample="411")
-                i = data.find(b"\xFF\xC0")
-                assert i > 0 and data[i + 2 + 2 + 6 + 1] == 0x41, (
-                    "stream does not declare 4:1:1 luma sampling"
-                )
-                w, h, back = jpeg_decode(data)
-                assert (w, h) == (64, 8)
-                assert back == rows, (
-                    f"4:1:1 decode not sample-exact (doc {d})"
-                )
-                ids.append(d)
-                means.append(
-                    sum(ch for row in back for px in row for ch in px)
-                    / (64.0 * 8.0 * 3.0)
-                )
-            yield pd.DataFrame({"doc_id": ids, "mean_px": means})
-
-    return (
-        docs.filter(F.col("doc_id") < n_docs)
-        .select("doc_id")
-        .distinct()
-        .mapInPandas(run, "doc_id long, mean_px double")
-        .select(
-            "doc_id",
-            F.lit(64).cast("int").alias("width"),
-            F.lit(8).cast("int").alias("height"),
-            "mean_px",
+    def roundtrip(d: int) -> float:
+        rows = _tiles(d, "jp411", 64, 8)
+        data = jpeg_encode(rows, quality=97, subsample="411")
+        i = data.find(b"\xFF\xC0")
+        assert i > 0 and data[i + 2 + 2 + 6 + 1] == 0x41, (
+            "stream does not declare 4:1:1 luma sampling"
         )
-        .orderBy("doc_id")
-    )
+        w, h, back = jpeg_decode(data)
+        assert (w, h) == (64, 8)
+        assert back == rows, f"4:1:1 decode not sample-exact (doc {d})"
+        return _rgb_mean(back)
+
+    return _raster_audit(docs, n_docs, 64, 8, roundtrip)
 
 
 def audio_frame_audit(
@@ -1083,58 +970,28 @@ def audio_frame_audit(
     derivation with no codec, and a hash match certifies
     encode → RIFF parse → PCM destream → framing → feature math end
     to end (the ``gif_roundtrip_audit`` discipline on the audio
-    modality).
+    modality)."""
+    if n_frames < 1 or frame_len < 1:
+        raise ValueError(
+            f"n_frames and frame_len must be >= 1, got {n_frames}, {frame_len}"
+        )
 
-    Plan: per-row independent kernel work over a pruned id set —
-    ``mapInPandas``, no shuffle; at scale the same kernel maps over
-    binary WAV columns partition-parallel (this audit form exists so
-    the byte path sits inside the standard correctness gate)."""
-    import hashlib
+    def frames(d: int) -> list[tuple[int, int, int, int]]:
+        samples = [
+            _h32(f"au_{d}_{i}") % 65536 - 32768
+            for i in range(n_frames * frame_len)
+        ]
+        rate, n_ch, back = wav_decode(wav_encode(samples, framerate=16000))
+        assert n_ch == 1 and back == samples, (
+            f"WAV roundtrip not sample-exact (doc {d})"
+        )
+        out = []
+        for f in range(n_frames):
+            seg = back[f * frame_len : (f + 1) * frame_len]
+            zcr = sum((a < 0) != (b < 0) for a, b in zip(seg, seg[1:]))
+            out.append((d, f, sum(s * s for s in seg), zcr))
+        return out
 
-    def h(s: str) -> int:
-        return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
-
-    n_samples = n_frames * frame_len
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, frames, energies, zcrs = [], [], [], []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                samples = [
-                    h(f"au_{d}_{i}") % 65536 - 32768
-                    for i in range(n_samples)
-                ]
-                rate, n_ch, back = wav_decode(
-                    wav_encode(samples, framerate=16000)
-                )
-                assert n_ch == 1 and back == samples, (
-                    f"WAV roundtrip not sample-exact (doc {d})"
-                )
-                for f in range(n_frames):
-                    seg = back[f * frame_len : (f + 1) * frame_len]
-                    ids.append(d)
-                    frames.append(f)
-                    energies.append(sum(s * s for s in seg))
-                    zcrs.append(
-                        sum(
-                            (a < 0) != (b < 0)
-                            for a, b in zip(seg, seg[1:])
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "frame": frames,
-                    "energy": energies,
-                    "zcr": zcrs,
-                }
-            )
-
-    return (
-        docs.filter(F.col("doc_id") < n_docs)
-        .select("doc_id")
-        .distinct()
-        .mapInPandas(run, "doc_id long, frame long, energy long, zcr long")
-        .orderBy("doc_id", "frame")
-    )
+    return _doc_audit(
+        docs, n_docs, "doc_id long, frame long, energy long, zcr long", frames
+    ).orderBy("doc_id", "frame")

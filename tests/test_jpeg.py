@@ -847,28 +847,6 @@ def test_jpeg_pq1_in_8bit_stream_refused():
         jpeg_decode(patched)
 
 
-def test_jpeg12_audit_matches_python_reference(spark):
-    # the registry kernel against a pure-python recomputation of the
-    # derivation (the driver gate runs the DuckDB twin; this pins the
-    # same numbers without an engine in the loop)
-    import hashlib
-
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.multimodal.binary_ops import (
-        jpeg12_audit,
-    )
-
-    docs = spark.range(0, 40).withColumnRenamed("id", "doc_id")
-    got = {r.doc_id: r.mean_px for r in jpeg12_audit(docs).collect()}
-    assert len(got) == 32  # doc_id < 32 prune
-    for d in range(32):
-        vals = [
-            (int(hashlib.md5(f"jp12_{d}_{t}".encode()).hexdigest()[:8],
-                 16) % 2048) * 2
-            for t in range(2)
-        ]
-        assert got[d] == sum(vals) / 2.0, d
-
-
 # ---------------------------------------------------------------- #
 # r11: generalized chroma layouts (4:2:2 / 4:4:0 encode, 4:1:1 both
 # ways — the factor-4 profile) through the shared _pad_subsample

@@ -1,11 +1,18 @@
 """Multimodal plumbing: binary columns + metadata, mapInPandas feature
 extraction (stubbed codec), relational metadata analytics, frame
-sampling fanout."""
+sampling fanout, and the codec round-trip audits."""
 
 from __future__ import annotations
 
+import hashlib
+import uuid
+from contextlib import contextmanager
+
 import pytest
 
+from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.multimodal import (
+    binary_ops,
+)
 from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.multimodal.binary_ops import (
     FEATURE_DIM,
     MEDIA_SCHEMA,
@@ -400,3 +407,89 @@ def test_png_through_spark_kernels(spark):
     w, h, got = png_decode(bytes(out.content))
     assert (w, h) == (2, 2)
     assert got == [[rows[0][0], rows[0][2]], [rows[2][0], rows[2][2]]]
+
+
+# ------------------------------------------------ codec round-trip audits
+
+
+def _h32(s: str) -> int:
+    return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
+
+
+@contextmanager
+def _jobs_in(spark):
+    """Ids of the Spark jobs launched inside the block, by job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    jobs = []
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_AUDITS = (
+    "codec_roundtrip_audit",
+    "gif_roundtrip_audit",
+    "jpeg420_roundtrip_audit",
+    "jpeg_progressive_audit",
+    "jpeg12_audit",
+    "jpeg411_audit",
+    "audio_frame_audit",
+)
+
+
+@pytest.mark.parametrize(
+    "audit, kwargs",
+    [
+        ("codec_roundtrip_audit", {"width": 0}),
+        ("codec_roundtrip_audit", {"height": 0}),
+        ("codec_roundtrip_audit", {"width": -3}),
+        ("audio_frame_audit", {"frame_len": 0}),
+        ("audio_frame_audit", {"n_frames": 0}),
+        ("audio_frame_audit", {"n_frames": -1}),
+    ]
+    + [(audit, {"n_docs": 0}) for audit in _AUDITS],
+)
+def test_audit_refuses_vacuous_params_before_any_job(spark, audit, kwargs):
+    # a zero-pixel raster, a zero-sample frame or an empty id set would
+    # pass its oracle while certifying nothing: refuse on the driver
+    docs = spark.range(0, 4).withColumnRenamed("id", "doc_id")
+    (param,) = kwargs
+    with _jobs_in(spark) as jobs, pytest.raises(ValueError, match=param):
+        getattr(binary_ops, audit)(docs, **kwargs)
+    assert jobs == []
+
+
+def test_audio_frame_audit_matches_python_reference(spark):
+    docs = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
+    got = {
+        (r.doc_id, r.frame): (r.energy, r.zcr)
+        for r in binary_ops.audio_frame_audit(
+            docs, n_docs=4, n_frames=2, frame_len=8
+        ).collect()
+    }
+    for d in range(4):
+        samples = [_h32(f"au_{d}_{i}") % 65536 - 32768 for i in range(16)]
+        for f in range(2):
+            seg = samples[f * 8 : (f + 1) * 8]
+            want = (
+                sum(s * s for s in seg),
+                sum((a < 0) != (b < 0) for a, b in zip(seg, seg[1:])),
+            )
+            assert got[(d, f)] == want
+
+
+def test_jpeg12_audit_matches_python_reference(spark):
+    # the registry kernel against a pure-python recomputation of the
+    # derivation (the driver gate runs the DuckDB twin; this pins the
+    # same numbers without an engine in the loop)
+    docs = spark.range(0, 40).withColumnRenamed("id", "doc_id")
+    got = {r.doc_id: r.mean_px for r in binary_ops.jpeg12_audit(docs).collect()}
+    assert len(got) == 32  # doc_id < 32 prune
+    for d in range(32):
+        vals = [(_h32(f"jp12_{d}_{t}") % 2048) * 2 for t in range(2)]
+        assert got[d] == sum(vals) / 2.0, d

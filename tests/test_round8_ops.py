@@ -738,32 +738,6 @@ def test_mad_outliers_excludes_null_and_nan(spark):
     assert r.n_rows == 3 and r.median == 2.0
 
 
-# ---------------------------------------------------------------- audio
-
-
-def test_audio_frame_audit_matches_python_reference(spark):
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.multimodal.binary_ops import (
-        audio_frame_audit,
-    )
-
-    docs = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
-    got = {
-        (r.doc_id, r.frame): (r.energy, r.zcr)
-        for r in audio_frame_audit(
-            docs, n_docs=4, n_frames=2, frame_len=8
-        ).collect()
-    }
-    for d in range(4):
-        samples = [_h32(f"au_{d}_{i}") % 65536 - 32768 for i in range(16)]
-        for f in range(2):
-            seg = samples[f * 8 : (f + 1) * 8]
-            want = (
-                sum(s * s for s in seg),
-                sum((a < 0) != (b < 0) for a, b in zip(seg, seg[1:])),
-            )
-            assert got[(d, f)] == want
-
-
 # ---------------------------------------------------------------- CCF
 
 
