@@ -820,7 +820,7 @@ def q_doc_weighted_sample(spark, sf_dir):
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    w = F.size(F.split(F.trim(F.col("text")), " "))
+    w = TX.token_count(F.col("text"))
     sel = weighted_priority_sample(docs, "doc_id", w, n=100)
     return sel.select(
         "doc_id", w.cast("long").alias("n_tokens")
@@ -1123,23 +1123,18 @@ def q_doc_search_bm25(spark, sf_dir):
     return TX.bm25_search(docs, "vector stream merge window", k=20)
 
 
-def q_doc_search_indexed(spark, sf_dir):
-    # End-to-end persisted-retrieval LIFECYCLE (VERDICT r7 Next #8):
-    # persist_search_index over the base shard → append_search_index
-    # for a delta shard → search_index_topk probe. The probe's
-    # fixed-point arithmetic reproduces inline bm25_search over the
-    # FULL corpus bit-exactly (same idf floor, same decimal carriers),
-    # so the one oracle certifies the composed offline/append/online
-    # path, not just its individually-tested pieces. Fixed table
-    # prefix: persist overwrites, so re-invocation is deterministic.
+def _indexed_documents(spark, sf_dir, prefix):
+    # The persisted-retrieval lifecycle both indexed entries probe:
+    # persist_search_index over the base shard (doc_id % 5 != 0), then
+    # append_search_index for the delta shard. A previous SESSION may
+    # have left the warehouse directories behind without catalog
+    # entries (in-memory catalog, shared warehouse dir) —
+    # saveAsTable(overwrite) refuses an orphaned location, so both
+    # halves are cleared first. Fixed prefix per entry: persist
+    # overwrites, so re-invocation is deterministic.
     from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark import fsutil
 
     docs = _t(spark, sf_dir, "documents")
-    prefix = "entry_sidx_lifecycle"
-    # a previous SESSION may have left the warehouse directories behind
-    # without catalog entries (in-memory catalog, shared warehouse dir)
-    # — saveAsTable(overwrite) refuses an orphaned location, so clear
-    # both halves before the lifecycle starts
     wh = spark.conf.get("spark.sql.warehouse.dir")
     for suffix in ("postings", "stats"):
         spark.sql(f"DROP TABLE IF EXISTS {prefix}_{suffix}")
@@ -1150,6 +1145,18 @@ def q_doc_search_indexed(spark, sf_dir):
     delta = docs.filter(F.col("doc_id") % 5 == 0)
     TX.persist_search_index(base, prefix, batch_id="base")
     TX.append_search_index(delta, prefix, batch_id="delta")
+
+
+def q_doc_search_indexed(spark, sf_dir):
+    # End-to-end persisted-retrieval LIFECYCLE (VERDICT r7 Next #8):
+    # persist_search_index over the base shard → append_search_index
+    # for a delta shard → search_index_topk probe. The probe's
+    # fixed-point arithmetic reproduces inline bm25_search over the
+    # FULL corpus bit-exactly (same idf floor, same decimal carriers),
+    # so the one oracle certifies the composed offline/append/online
+    # path, not just its individually-tested pieces.
+    prefix = "entry_sidx_lifecycle"
+    _indexed_documents(spark, sf_dir, prefix)
     return TX.search_index_topk(
         spark, prefix, "vector stream merge window", k=20
     )
@@ -1541,20 +1548,8 @@ def q_doc_search_prf_indexed(spark, sf_dir):
     # bit-identical to inline bm25_prf_search by construction
     # (identity-tested incl. across appends), so the inline entry's
     # chained oracle certifies this path verbatim.
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark import fsutil
-
-    docs = _t(spark, sf_dir, "documents")
     prefix = "entry_prf_idx_lifecycle"
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    for suffix in ("postings", "stats"):
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{suffix}")
-        fsutil.delete(
-            fsutil.join(wh, f"{prefix}_{suffix}"), recursive=True, spark=spark
-        )
-    base = docs.filter(F.col("doc_id") % 5 != 0)
-    delta = docs.filter(F.col("doc_id") % 5 == 0)
-    TX.persist_search_index(base, prefix, batch_id="base")
-    TX.append_search_index(delta, prefix, batch_id="delta")
+    _indexed_documents(spark, sf_dir, prefix)
     return TX.prf_index_topk(
         spark, prefix, "vector stream merge window",
         k=20, fb_docs=10, fb_terms=5,

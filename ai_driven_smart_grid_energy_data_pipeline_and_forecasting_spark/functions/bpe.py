@@ -41,13 +41,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .text import tokens
+
 
 def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, n) over whitespace tokens — the one corpus-scale pass."""
     return (
-        docs.select(
-            F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("word")
-        )
+        docs.select(F.explode(tokens(F.col(text_col))).alias("word"))
         .where(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -407,7 +407,7 @@ def chunk_documents(
             f"need 0 <= overlap < window, got window={window} overlap={overlap}"
         )
     stride = window - overlap
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     n = F.size(toks)
     n_chunks = (
         F.ceil(F.greatest(n - window, F.lit(0)) / F.lit(float(stride))) + 1
@@ -597,6 +597,61 @@ def lexical_diversity(
     )
 
 
+def _adjacent_pairs(toks: Column, x: str, y: str) -> Column:
+    """Every token paired with its successor: an array of
+    ``struct<x, y>`` over a token array — the one positional-bigram
+    builder of the co-occurrence family. The struct field names are the
+    caller's, because the plans print them (``a``/``b`` for the directed
+    bigram counts and the LM, ``x``/``y`` for the canonical edge list)."""
+    return F.zip_with(
+        F.slice(toks, 1, F.size(toks) - 1),
+        F.slice(toks, 2, F.size(toks) - 1),
+        lambda a, b: F.struct(a.alias(x), b.alias(y)),
+    )
+
+
+def _bigram_counts(base: DataFrame, count_col: str) -> DataFrame:
+    """Directed corpus bigram counts ``(a, b, <count_col>)`` over the
+    ``_tk`` token arrays of ``base``: one explode of the positional
+    pairs, one partial-agg groupBy. Docs with < 2 tokens give no pair."""
+    return (
+        base.where(F.size("_tk") >= 2)
+        .select(F.explode(_adjacent_pairs(F.col("_tk"), "a", "b")).alias("p"))
+        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .agg(F.count(F.lit(1)).alias(count_col))
+    )
+
+
+def _canonical_edges(docs, text_col, min_count):
+    """The undirected co-occurrence edge list ``(a, b, w)`` with a < b:
+    adjacent pairs canonicalized to (least, greatest), self-pairs
+    dropped, both directions summed by one partial-agg groupBy, and
+    edges seen fewer than ``min_count`` times pruned."""
+    return (
+        docs.select(tokens(F.col(text_col)).alias("_tk"))
+        .where(F.size("_tk") >= 2)
+        .select(F.explode(_adjacent_pairs(F.col("_tk"), "x", "y")).alias("p"))
+        .select(
+            F.least("p.x", "p.y").alias("a"),
+            F.greatest("p.x", "p.y").alias("b"),
+        )
+        .where(F.col("a") != F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("w"))
+        .where(F.col("w") >= min_count)
+    )
+
+
+def _both_ways(bi: DataFrame) -> DataFrame:
+    """An ``(a, b, w)`` edge list as directed ``(u, v, w)`` rows, one
+    per direction, each carrying the full pair weight."""
+    return bi.select(
+        F.col("a").alias("u"), F.col("b").alias("v"), "w"
+    ).unionByName(
+        bi.select(F.col("b").alias("u"), F.col("a").alias("v"), "w")
+    )
+
+
 def corpus_collocations(
     docs: DataFrame,
     text_col: str = "text",
@@ -622,27 +677,14 @@ def corpus_collocations(
     Python, no windows; counts are BIGINTs and every count is < 2⁵³
     at any realistic corpus size, so the double products round
     identically everywhere."""
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     base = docs.select(toks.alias("_tk"))
     uni = (
         base.select(F.explode("_tk").alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    bi_all = (
-        base.where(F.size("_tk") >= 2)
-        .select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("_tk"), 1, F.size("_tk") - 1),
-                    F.slice(F.col("_tk"), 2, F.size("_tk") - 1),
-                    lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-    )
+    bi_all = _bigram_counts(base, "n_pair")
     # B is the total bigram mass BEFORE the min_count cut (p(ab) =
     # c(ab)/B over the whole corpus; the cut only prunes the output)
     bi = bi_all.where(F.col("n_pair") >= min_count)
@@ -671,6 +713,164 @@ def corpus_collocations(
 
 
 TFIDF_SCALE = 1_000_000
+
+
+def _query_terms(query: str, fn: str) -> list[str]:
+    """The query's distinct whitespace terms, sorted — a driver-side
+    literal list; an empty query is refused in the caller's name."""
+    terms = sorted(set(query.strip().split()))
+    if not terms:
+        raise ValueError(f"{fn} needs a non-empty query")
+    return terms
+
+
+def _check_search(fn, k, k1_scaled=0, b_scaled=0, fb_docs=1, fb_terms=1):
+    """Refuse retrieval parameters outside the domain the fixed-point
+    pipeline is defined on, on the driver before any job: a top-k or
+    feedback size below 1 asks for nothing, and the BM25 overflow bound
+    (every ``div`` quotient below the saturation ceiling) holds only
+    for k1 >= 0 and 0 <= b <= 1."""
+    if k < 1:
+        raise ValueError(f"{fn}: k must be >= 1, got {k}")
+    if k1_scaled < 0 or not 0 <= b_scaled <= TFIDF_SCALE:
+        raise ValueError(
+            f"{fn}: need k1_scaled >= 0 and 0 <= b_scaled <= {TFIDF_SCALE},"
+            f" got k1_scaled={k1_scaled}, b_scaled={b_scaled}"
+        )
+    if fb_docs < 1 or fb_terms < 1:
+        raise ValueError(
+            f"{fn}: fb_docs and fb_terms must be >= 1, got"
+            f" fb_docs={fb_docs}, fb_terms={fb_terms}"
+        )
+
+
+def _idf_tfidf(n: str, df: str) -> str:
+    """The fixed-point TF-IDF idf ``(S·N) div df`` as a SQL fragment
+    over the caller's column names; S·N rides a decimal(38,0) carrier.
+    The tf factor and its cast stay with the caller."""
+    return f"cast({TFIDF_SCALE} as decimal(38,0)) * {n} div {df}"
+
+
+def _topk(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """Top-k ``(id, score)`` by score descending, ties by ascending id
+    (a TakeOrderedAndProject)."""
+    return (
+        scored.orderBy(F.desc("score"), id_col)
+        .limit(k)
+        .select(id_col, "score")
+    )
+
+
+def _tfidf_topk(hits, df_tbl, n, id_col, k, term_score):
+    """The TF-IDF scorer: ``term_score`` of every ``hits`` row against
+    the broadcast per-term ``df_tbl`` and one-row ``n``, summed per doc
+    as an exact decimal, cast back to BIGINT once, then the top-k."""
+    scored = (
+        hits.join(F.broadcast(df_tbl), "t")
+        .crossJoin(F.broadcast(n))
+        .select(id_col, term_score.alias("_term_score"))
+        .groupBy(id_col)
+        .agg(F.sum("_term_score").cast("long").alias("score"))
+    )
+    return _topk(scored, id_col, k)
+
+
+def _bm25_topk(
+    hits, df_tbl, stats, id_col, k, k1_scaled, b_scaled,
+    tf="_tf", dl="_dl", df="_df", n="_n", l="_l",
+):
+    """The one BM25 scorer (formula and overflow argument in
+    ``bm25_search``): the idf table from ``df_tbl`` (t, df) and the
+    one-row ``stats`` (n, l), the fixed-point term score of every
+    ``hits`` row (id, t, tf, dl), the per-doc sum and the top-k.
+
+    The column names are the callers' own — ``_tf``/``_dl``/``_df``/
+    ``_n``/``_l`` inline, the postings' ``tf``/``dl`` and the index
+    stats' ``n``/``l`` in the index probes — so every plan prints the
+    names it printed before the five retrieval paths shared this."""
+    S = TFIDF_SCALE
+    idf_tbl = df_tbl.crossJoin(F.broadcast(stats)).select(
+        "t",
+        F.expr(
+            f"floor({S}L * ln(1 + cast(2*{n} - 2*{df} + 1 as double)"
+            f" / cast(2*{df} + 1 as double)))"
+        ).alias("_idf_s"),
+    )
+    # decimal(38,0) carriers for the wide products; div quotients are
+    # bounded by construction (see bm25_search) so the BIGINT result of
+    # Spark's decimal div cannot wrap
+    norm_s = (
+        f"({S}L - {b_scaled}L"
+        f" + cast({b_scaled} as decimal(38,0)) * {dl} * {n} div {l})"
+    )
+    tf_d = f"cast({tf} as decimal(38,0))"
+    scored = (
+        hits.join(F.broadcast(idf_tbl), "t")
+        .crossJoin(F.broadcast(stats))
+        .select(
+            id_col,
+            F.expr(
+                f"_idf_s * (({tf_d} * {k1_scaled + S}L * {S}L)"
+                f" div ({tf_d} * {S}L"
+                f" + (cast({k1_scaled} as decimal(38,0)) * {norm_s})"
+                f" div {S}L))"
+            ).alias("_term_score"),
+        )
+        .groupBy(id_col)
+        .agg(F.sum("_term_score").alias("score"))
+    )
+    return _topk(scored, id_col, k)
+
+
+def _inline_bm25(docs, keep, k, k1_scaled, b_scaled, text_col, id_col):
+    """BM25 over a raw corpus: the (N, L) scalar pair as one
+    full-corpus aggregate, then the tf/df tables over the (doc,
+    query-term) hit rows, with dl carried through the explode.
+    ``keep`` narrows the exploded ``(id, _dl, t)`` rows to the query
+    terms (an IN literal in ``bm25_search``, a broadcast semi-join in
+    the final round of ``bm25_prf_search``)."""
+    toks = tokens(F.col(text_col))
+    stats = docs.select(toks.alias("_tk")).agg(
+        F.count(F.lit(1)).alias("_n"),
+        F.sum(F.size("_tk")).alias("_l"),
+    )
+    hits = keep(
+        docs.select(
+            F.col(id_col),
+            F.size(toks).alias("_dl"),
+            F.explode(toks).alias("t"),
+        )
+    )
+    # _dl is functionally dependent on the id; grouping by both keeps
+    # it available without a join back to the corpus
+    tf_tbl = hits.groupBy(id_col, "_dl", "t").agg(
+        F.count(F.lit(1)).alias("_tf")
+    )
+    # df from the tf table (one row per (doc, term) pair) — counting
+    # over _tf keeps the subplan un-pruned so ReuseExchange scans the
+    # corpus once for both branches (see tfidf_search)
+    df_tbl = tf_tbl.groupBy("t").agg(
+        F.count(F.when(F.col("_tf") >= 1, 1)).alias("_df")
+    )
+    return _bm25_topk(tf_tbl, df_tbl, stats, id_col, k, k1_scaled, b_scaled)
+
+
+def _prf_expansion(fb_tf, cand_df, n, fb_terms):
+    """The PRF expansion terms as a one-column ``t`` frame: feedback-set
+    tf (``_fbtf``) times the fixed-point corpus idf (candidate ``_df``,
+    one-row ``n`` with ``_n``), the ``fb_terms`` heaviest, ties by term
+    ascending — a total order, shared by the inline and index PRF."""
+    return (
+        fb_tf.join(cand_df, "t")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "t",
+            F.expr(f"_fbtf * ({_idf_tfidf('_n', '_df')})").alias("_w"),
+        )
+        .orderBy(F.desc("_w"), "t")
+        .limit(fb_terms)
+        .select("t")
+    )
 
 
 def tfidf_search(
@@ -705,14 +905,11 @@ def tfidf_search(
     TakeOrderedAndProject. The corpus shuffles only (doc, query-term)
     hit rows — for a q-term query that is ≤ q·N_docs rows, not the
     token stream."""
-    terms = sorted(set(query.strip().split()))
-    if not terms:
-        raise ValueError("tfidf_search needs a non-empty query")
-    toks = F.split(F.trim(F.col(text_col)), " ")
-    hits = (
-        docs.select(F.col(id_col), F.explode(toks).alias("t"))
-        .where(F.col("t").isin(terms))
-    )
+    terms = _query_terms(query, "tfidf_search")
+    _check_search("tfidf_search", k)
+    hits = docs.select(
+        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t")
+    ).where(F.col("t").isin(terms))
     n_docs = docs.select(F.count(F.lit(1)).alias("_n"))
     tf_tbl = hits.groupBy(id_col, "t").agg(F.count(F.lit(1)).alias("_tf"))
     # df from the tf table (one row per (doc, term) pair) rather than a
@@ -726,25 +923,10 @@ def tfidf_search(
     # integer floor division: (SCALE·N) div df — exact end to end; the
     # products ride decimal(38,0) so large-N/large-tf domains refuse to
     # wrap (the sum stays exact decimal, cast back once at the end)
-    idf_scaled = F.expr(
-        f"cast({TFIDF_SCALE} as decimal(38,0)) * _n div _df"
-    )
-    scored = (
-        tf_tbl.join(F.broadcast(df_tbl), "t")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            id_col,
-            (F.col("_tf").cast("decimal(38,0)") * idf_scaled).alias(
-                "_term_score"
-            ),
-        )
-        .groupBy(id_col)
-        .agg(F.sum("_term_score").cast("long").alias("score"))
-    )
-    return (
-        scored.orderBy(F.desc("score"), id_col)
-        .limit(k)
-        .select(id_col, "score")
+    idf_scaled = F.expr(_idf_tfidf("_n", "_df"))
+    return _tfidf_topk(
+        tf_tbl, df_tbl, n_docs, id_col, k,
+        F.col("_tf").cast("decimal(38,0)") * idf_scaled,
     )
 
 
@@ -796,73 +978,16 @@ def bm25_search(
     plus ONE extra full-corpus aggregate for the (N, L) scalar pair
     (broadcast, 1 row). df/idf tables are ≤|query| rows, broadcast;
     top-k is a TakeOrderedAndProject. No windows, no Python."""
-    S = TFIDF_SCALE
-    terms = sorted(set(query.strip().split()))
-    if not terms:
-        raise ValueError("bm25_search needs a non-empty query")
-    toks = F.split(F.trim(F.col(text_col)), " ")
-    stats = docs.select(toks.alias("_tk")).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(F.size("_tk")).alias("_l"),
-    )
-    hits = (
-        docs.select(
-            F.col(id_col),
-            F.size(toks).alias("_dl"),
-            F.explode(toks).alias("t"),
-        )
-        .where(F.col("t").isin(terms))
-    )
-    # _dl is functionally dependent on the id; grouping by both keeps
-    # it available without a join back to the corpus
-    tf_tbl = hits.groupBy(id_col, "_dl", "t").agg(
-        F.count(F.lit(1)).alias("_tf")
-    )
-    # df from the tf table (one row per (doc, term) pair) — counting
-    # over _tf keeps the subplan un-pruned so ReuseExchange scans the
-    # corpus once for both branches (see tfidf_search)
-    df_tbl = tf_tbl.groupBy("t").agg(
-        F.count(F.when(F.col("_tf") >= 1, 1)).alias("_df")
-    )
-    idf_tbl = df_tbl.crossJoin(F.broadcast(stats)).select(
-        "t",
-        F.expr(
-            f"floor({S}L * ln(1 + cast(2*_n - 2*_df + 1 as double)"
-            " / cast(2*_df + 1 as double)))"
-        ).alias("_idf_s"),
-    )
-    # decimal(38,0) carriers for the wide products; div quotients are
-    # bounded by construction (see docstring) so the BIGINT result of
-    # Spark's decimal div cannot wrap
-    norm_s = (
-        f"({S}L - {b_scaled}L"
-        f" + cast({b_scaled} as decimal(38,0)) * _dl * _n div _l)"
-    )
-    scored = (
-        tf_tbl.join(F.broadcast(idf_tbl), "t")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            id_col,
-            F.expr(
-                f"_idf_s * ((cast(_tf as decimal(38,0))"
-                f" * {k1_scaled + S}L * {S}L)"
-                f" div (cast(_tf as decimal(38,0)) * {S}L"
-                f" + (cast({k1_scaled} as decimal(38,0)) * {norm_s})"
-                f" div {S}L))"
-            ).alias("_term_score"),
-        )
-        .groupBy(id_col)
-        .agg(F.sum("_term_score").alias("score"))
-    )
-    return (
-        scored.orderBy(F.desc("score"), id_col)
-        .limit(k)
-        .select(id_col, "score")
+    terms = _query_terms(query, "bm25_search")
+    _check_search("bm25_search", k, k1_scaled, b_scaled)
+    return _inline_bm25(
+        docs, lambda h: h.where(F.col("t").isin(terms)),
+        k, k1_scaled, b_scaled, text_col, id_col,
     )
 
 
 def _search_stats(docs, text_col, batch_id):
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     return docs.select(toks.alias("_tk")).agg(
         F.lit(batch_id).alias("batch_id"),
         F.count(F.lit(1)).alias("n"),
@@ -896,7 +1021,7 @@ def _write_index_batch(
     policy: 2 values per write)."""
     from pyspark.sql import Observation
 
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     obs = Observation()
     base = docs.select(
         F.col(id_col),
@@ -1038,12 +1163,10 @@ def search_index_topk(
     count of (t, doc) posting rows per term, derived from the rows the
     probe reads anyway, and (N, L) is the sum of the per-batch stats
     rows."""
-    S = TFIDF_SCALE
-    terms = sorted(set(query.strip().split()))
-    if not terms:
-        raise ValueError("search_index_topk needs a non-empty query")
+    terms = _query_terms(query, "search_index_topk")
     if mode not in ("bm25", "tfidf"):
         raise ValueError(f"unknown mode {mode!r}: use 'bm25' or 'tfidf'")
+    _check_search("search_index_topk", k, k1_scaled, b_scaled)
     postings = (
         spark.table(f"{table_prefix}_postings")
         .where(F.col("t").isin(terms))
@@ -1055,53 +1178,14 @@ def search_index_topk(
         .distinct()
         .agg(F.sum("n").alias("n"), F.sum("l").alias("l"))
     )
-    id_col = "doc_id"
-    if mode == "tfidf":
-        scored = (
-            postings.join(F.broadcast(df_tbl), "t")
-            .crossJoin(F.broadcast(stats))
-            .select(
-                id_col,
-                F.expr(
-                    f"cast(tf as decimal(38,0))"
-                    f" * (cast({S} as decimal(38,0)) * n div df)"
-                ).alias("_term_score"),
-            )
-            .groupBy(id_col)
-            .agg(F.sum("_term_score").cast("long").alias("score"))
+    if mode == "bm25":
+        return _bm25_topk(
+            postings, df_tbl, stats, "doc_id", k, k1_scaled, b_scaled,
+            tf="tf", dl="dl", df="df", n="n", l="l",
         )
-    else:
-        idf_tbl = df_tbl.crossJoin(F.broadcast(stats)).select(
-            "t",
-            F.expr(
-                f"floor({S}L * ln(1 + cast(2*n - 2*df + 1 as double)"
-                " / cast(2*df + 1 as double)))"
-            ).alias("_idf_s"),
-        )
-        norm_s = (
-            f"({S}L - {b_scaled}L"
-            f" + cast({b_scaled} as decimal(38,0)) * dl * n div l)"
-        )
-        scored = (
-            postings.join(F.broadcast(idf_tbl), "t")
-            .crossJoin(F.broadcast(stats))
-            .select(
-                id_col,
-                F.expr(
-                    f"_idf_s * ((cast(tf as decimal(38,0))"
-                    f" * {k1_scaled + S}L * {S}L)"
-                    f" div (cast(tf as decimal(38,0)) * {S}L"
-                    f" + (cast({k1_scaled} as decimal(38,0)) * {norm_s})"
-                    f" div {S}L))"
-                ).alias("_term_score"),
-            )
-            .groupBy(id_col)
-            .agg(F.sum("_term_score").alias("score"))
-        )
-    return (
-        scored.orderBy(F.desc("score"), id_col)
-        .limit(k)
-        .select(id_col, "score")
+    return _tfidf_topk(
+        postings, df_tbl, stats, "doc_id", k,
+        F.expr(f"cast(tf as decimal(38,0)) * ({_idf_tfidf('n', 'df')})"),
     )
 
 
@@ -1142,10 +1226,8 @@ def prf_index_topk(
     PRF over the full ingested corpus (identity-tested incl. across
     appends), so the inline entry's chained oracle certifies this
     path verbatim."""
-    S = TFIDF_SCALE
-    terms = sorted(set(query.strip().split()))
-    if not terms:
-        raise ValueError("prf_index_topk needs a non-empty query")
+    terms = _query_terms(query, "prf_index_topk")
+    _check_search("prf_index_topk", k, k1_scaled, b_scaled, fb_docs, fb_terms)
     # r14 probe-shape fixes (content-dedup semantics unchanged —
     # ``distinct`` commutes with every filter applied here, so
     # deduplicating AFTER the prune shuffles the pruned rows, not the
@@ -1174,19 +1256,7 @@ def prf_index_topk(
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("_df"))
     )
-    expansion = (
-        fb_tf.join(cand_df, "t")
-        .crossJoin(F.broadcast(stats.select("_n")))
-        .select(
-            "t",
-            F.expr(
-                f"_fbtf * (cast({S} as decimal(38,0)) * _n div _df)"
-            ).alias("_w"),
-        )
-        .orderBy(F.desc("_w"), "t")
-        .limit(fb_terms)
-        .select("t")
-    )
+    expansion = _prf_expansion(fb_tf, cand_df, stats.select("_n"), fb_terms)
     # the final term set is bounded by fb_terms + |query| — collect it
     # (the registry's bounded-collect policy) so round 2 is a
     # bucket-pruned IN-filter read of exactly the expanded terms'
@@ -1197,37 +1267,9 @@ def prf_index_topk(
     all_terms = sorted(set(terms) | {r[0] for r in expansion.collect()})
     hits = postings.where(F.col("t").isin(all_terms)).distinct()
     df_tbl = hits.groupBy("t").agg(F.count(F.lit(1)).alias("_df"))
-    idf_tbl = df_tbl.crossJoin(F.broadcast(stats)).select(
-        "t",
-        F.expr(
-            f"floor({S}L * ln(1 + cast(2*_n - 2*_df + 1 as double)"
-            " / cast(2*_df + 1 as double)))"
-        ).alias("_idf_s"),
-    )
-    norm_s = (
-        f"({S}L - {b_scaled}L"
-        f" + cast({b_scaled} as decimal(38,0)) * dl * _n div _l)"
-    )
-    scored = (
-        hits.join(F.broadcast(idf_tbl), "t")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            "doc_id",
-            F.expr(
-                f"_idf_s * ((cast(tf as decimal(38,0))"
-                f" * {k1_scaled + S}L * {S}L)"
-                f" div (cast(tf as decimal(38,0)) * {S}L"
-                f" + (cast({k1_scaled} as decimal(38,0)) * {norm_s})"
-                f" div {S}L))"
-            ).alias("_term_score"),
-        )
-        .groupBy("doc_id")
-        .agg(F.sum("_term_score").alias("score"))
-    )
-    return (
-        scored.orderBy(F.desc("score"), "doc_id")
-        .limit(k)
-        .select("doc_id", "score")
+    return _bm25_topk(
+        hits, df_tbl, stats, "doc_id", k, k1_scaled, b_scaled,
+        tf="tf", dl="dl",
     )
 
 
@@ -1284,17 +1326,12 @@ def doc_nll_scores(
     ``ccnet_buckets`` terciles. See ``doc_lm_nll`` for the model and
     the fixed-point exactness contract."""
     S = TFIDF_SCALE
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     pairs = docs.select(
         F.col(id_col),
         F.explode(
             F.when(
-                F.size(toks) >= 2,
-                F.zip_with(
-                    F.slice(toks, 1, F.size(toks) - 1),
-                    F.slice(toks, 2, F.size(toks) - 1),
-                    lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-                ),
+                F.size(toks) >= 2, _adjacent_pairs(toks, "a", "b")
             ).otherwise(F.array().cast("array<struct<a:string,b:string>>"))
         ).alias("p"),
     ).select(id_col, F.col("p.a").alias("a"), F.col("p.b").alias("b"))
@@ -1370,44 +1407,24 @@ def corpus_textrank(
     the oracle finite; 5 iterations is far past practical keyword-rank
     stability on co-occurrence graphs.
 
-    Plan: edges build exactly like ``corpus_collocations`` (explode →
-    partial-agg), symmetrized; each iteration is one join of the rank
-    table to the edge list on the source + one partial-agg groupBy on
-    the target — the classic distributed PageRank shape (edge list
-    cached across iterations, rank table re-derived). The w·r product
-    rides a decimal(38,0) carrier; quotients are bounded by the total
-    rank mass N·R. Ties break by token ascending."""
+    Plan: edges are ``_bigram_counts`` (explode → partial-agg, shared
+    with ``corpus_collocations``), symmetrized by ``_both_ways``; each
+    iteration is one join of the rank table to the edge list on the
+    source + one partial-agg groupBy on the target — the classic
+    distributed PageRank shape (edge list cached across iterations,
+    rank table re-derived). The w·r product rides a decimal(38,0)
+    carrier; quotients are bounded by the total rank mass N·R. Ties
+    break by token ascending."""
     S = TFIDF_SCALE
     if not 0 < damping_scaled < S:
         raise ValueError("damping_scaled must be in (0, S)")
-    toks = F.split(F.trim(F.col(text_col)), " ")
-    base = docs.select(toks.alias("_tk"))
-    bi = (
-        base.where(F.size("_tk") >= 2)
-        .select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("_tk"), 1, F.size("_tk") - 1),
-                    F.slice(F.col("_tk"), 2, F.size("_tk") - 1),
-                    lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-                )
-            ).alias("p")
-        )
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= min_count)
-    )
+    bi = _bigram_counts(
+        docs.select(tokens(F.col(text_col)).alias("_tk")), "w"
+    ).where(F.col("w") >= min_count)
     # symmetrize: undirected co-occurrence — each direction carries the
     # full pair weight (self-loops a=b contribute once per direction,
     # consistently with the oracle)
-    edges = (
-        bi.select(F.col("a").alias("u"), F.col("b").alias("v"), "w")
-        .unionByName(
-            bi.select(F.col("b").alias("u"), F.col("a").alias("v"), "w")
-        )
-        .groupBy("u", "v")
-        .agg(F.sum("w").alias("w"))
-    )
+    edges = _both_ways(bi).groupBy("u", "v").agg(F.sum("w").alias("w"))
     wdeg = edges.groupBy("u").agg(F.sum("w").alias("_wu"))
     edges = edges.join(wdeg, "u").localCheckpoint()
     nodes = edges.select(F.col("u").alias("t")).distinct()
@@ -1465,28 +1482,7 @@ def collocation_triangles(
     ``strength`` = the triangle's weakest edge (the bottleneck bond);
     top-k by (strength, lexicographic) is a TakeOrderedAndProject.
     All integers — value-exact SQL oracle."""
-    toks = F.split(F.trim(F.col(text_col)), " ")
-    bi = (
-        docs.select(toks.alias("_tk"))
-        .where(F.size("_tk") >= 2)
-        .select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("_tk"), 1, F.size("_tk") - 1),
-                    F.slice(F.col("_tk"), 2, F.size("_tk") - 1),
-                    lambda a, b: F.struct(a.alias("x"), b.alias("y")),
-                )
-            ).alias("p")
-        )
-        .select(
-            F.least("p.x", "p.y").alias("a"),
-            F.greatest("p.x", "p.y").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= min_count)
-    )
+    bi = _canonical_edges(docs, text_col, min_count)
     e1 = bi.select(F.col("a"), F.col("b"), F.col("w").alias("w_ab"))
     e2 = bi.select(
         F.col("a").alias("b"), F.col("b").alias("c"), F.col("w").alias("w_bc")
@@ -1535,38 +1531,20 @@ def collocation_kcore(
     tests by running one extra round); an unconverged call returns the
     round-n_rounds superset, never something smaller.
 
-    Plan: one explode+groupBy builds the canonical a<b edge list (same
-    kernel as the triangle query); each round is one degree aggregate
-    plus two broadcast-able LEFT SEMI joins on the survivor set, and
-    the edge list is ``localCheckpoint``ed per round so lineage stays
-    constant across rounds (textrank's discipline). Degrees are exact
-    integer counts — value-exact oracle."""
+    Plan: one explode+groupBy builds the canonical a<b edge list
+    (``_canonical_edges``, shared with the triangle query); each round
+    is one degree aggregate plus two broadcast-able LEFT SEMI joins on
+    the survivor set, and the edge list is ``localCheckpoint``ed per
+    round so lineage stays constant across rounds (textrank's
+    discipline). Degrees are exact integer counts — value-exact
+    oracle."""
     if k_core < 1 or n_rounds < 1:
         raise ValueError(
             f"collocation_kcore: k_core and n_rounds must be >= 1, got"
             f" k_core={k_core}, n_rounds={n_rounds}"
         )
-    toks = F.split(F.trim(F.col(text_col)), " ")
     edges = (
-        docs.select(toks.alias("_tk"))
-        .where(F.size("_tk") >= 2)
-        .select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("_tk"), 1, F.size("_tk") - 1),
-                    F.slice(F.col("_tk"), 2, F.size("_tk") - 1),
-                    lambda a, b: F.struct(a.alias("x"), b.alias("y")),
-                )
-            ).alias("p")
-        )
-        .select(
-            F.least("p.x", "p.y").alias("a"),
-            F.greatest("p.x", "p.y").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= min_count)
+        _canonical_edges(docs, text_col, min_count)
         .select("a", "b")
         .localCheckpoint()
     )
@@ -1623,11 +1601,9 @@ def bm25_prf_search(
     of a pushed-down IN literal — same hit-row volume, one broadcast
     more. The feedback docs' term stats come from a broadcast
     semi-join of the corpus explode against the ≤fb_docs id set."""
-    S = TFIDF_SCALE
-    terms = sorted(set(query.strip().split()))
-    if not terms:
-        raise ValueError("bm25_prf_search needs a non-empty query")
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    terms = _query_terms(query, "bm25_prf_search")
+    _check_search("bm25_prf_search", k, k1_scaled, b_scaled, fb_docs, fb_terms)
+    toks = tokens(F.col(text_col))
     top1 = bm25_search(
         docs, query, k=fb_docs, k1_scaled=k1_scaled,
         b_scaled=b_scaled, text_col=text_col, id_col=id_col,
@@ -1651,73 +1627,15 @@ def bm25_prf_search(
         .groupBy("t")
         .agg(F.count(F.lit(1)).alias("_df"))
     )
-    expansion = (
-        fb_tf.join(cand_df, "t")
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "t",
-            F.expr(
-                f"_fbtf * (cast({S} as decimal(38,0)) * _n div _df)"
-            ).alias("_w"),
-        )
-        .orderBy(F.desc("_w"), "t")
-        .limit(fb_terms)
-        .select("t")
-    )
+    expansion = _prf_expansion(fb_tf, cand_df, n_docs, fb_terms)
     term_tbl = expansion.unionByName(
         docs.sparkSession.createDataFrame([(t,) for t in terms], "t string")
     ).distinct()
     # final round: bm25 arithmetic with the data-dependent term set —
     # identical formula to bm25_search, filter as broadcast semi-join
-    stats = docs.select(toks.alias("_tk")).agg(
-        F.count(F.lit(1)).alias("_n"),
-        F.sum(F.size("_tk")).alias("_l"),
-    )
-    hits = (
-        docs.select(
-            F.col(id_col),
-            F.size(toks).alias("_dl"),
-            F.explode(toks).alias("t"),
-        )
-        .join(F.broadcast(term_tbl), "t", "left_semi")
-    )
-    tf_tbl = hits.groupBy(id_col, "_dl", "t").agg(
-        F.count(F.lit(1)).alias("_tf")
-    )
-    df_tbl = tf_tbl.groupBy("t").agg(
-        F.count(F.when(F.col("_tf") >= 1, 1)).alias("_df")
-    )
-    idf_tbl = df_tbl.crossJoin(F.broadcast(stats)).select(
-        "t",
-        F.expr(
-            f"floor({S}L * ln(1 + cast(2*_n - 2*_df + 1 as double)"
-            " / cast(2*_df + 1 as double)))"
-        ).alias("_idf_s"),
-    )
-    norm_s = (
-        f"({S}L - {b_scaled}L"
-        f" + cast({b_scaled} as decimal(38,0)) * _dl * _n div _l)"
-    )
-    scored = (
-        tf_tbl.join(F.broadcast(idf_tbl), "t")
-        .crossJoin(F.broadcast(stats))
-        .select(
-            id_col,
-            F.expr(
-                f"_idf_s * ((cast(_tf as decimal(38,0))"
-                f" * {k1_scaled + S}L * {S}L)"
-                f" div (cast(_tf as decimal(38,0)) * {S}L"
-                f" + (cast({k1_scaled} as decimal(38,0)) * {norm_s})"
-                f" div {S}L))"
-            ).alias("_term_score"),
-        )
-        .groupBy(id_col)
-        .agg(F.sum("_term_score").alias("score"))
-    )
-    return (
-        scored.orderBy(F.desc("score"), id_col)
-        .limit(k)
-        .select(id_col, "score")
+    return _inline_bm25(
+        docs, lambda h: h.join(F.broadcast(term_tbl), "t", "left_semi"),
+        k, k1_scaled, b_scaled, text_col, id_col,
     )
 
 
@@ -1748,7 +1666,7 @@ def doc_frequent_pairs(
     distinct (doc, token) rows; one partial-agg df table; a semi-join
     prune; one self-equi-join on the doc id (a < b); one partial-agg
     pair count; TakeOrderedAndProject."""
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     dt = (
         docs.select(F.col(id_col), F.explode(F.array_distinct(toks)).alias("t"))
     )
@@ -1807,7 +1725,7 @@ def source_distinctive_terms(
     source totals derive from that table (no second corpus pass);
     totals broadcast back; one window per source for the top-k.
     Output: (source, term, tf, ratio), k rows per source."""
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     st = (
         docs.select(F.col(source_col).alias("source"), F.explode(toks).alias("t"))
         .groupBy("source", "t")
@@ -1868,7 +1786,7 @@ def vocab_growth_curve(
     if fractions < 1:
         raise ValueError("vocab_growth_curve needs fractions >= 1")
     b = (h32(F.col(id_col).cast("string")) % fractions).alias("_b")
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     tb = (
         docs.select(b, F.explode(toks).alias("t"))
         .groupBy("_b", "t")
@@ -2006,7 +1924,7 @@ def source_token_kl(
     counts and source/corpus totals all DERIVE from that table (no
     second corpus pass); totals broadcast back; final fold is one
     partial-agg groupBy. Output: one row per source."""
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     st = (
         docs.select(
             F.col(source_col).alias("source"), F.explode(toks).alias("t")
@@ -2074,45 +1992,20 @@ def collocation_communities(
     synchronous variant, documented rather than hidden behind a random
     async schedule).
 
-    Plan: the canonical a<b edge list (same kernel as the triangle and
-    k-core queries) symmetrized once; each round is TWO partial-agg
-    groupBys ((node, label) weight fold, then per-node max) + an
-    equi-join back, with the label table ``localCheckpoint``ed per
-    round (constant lineage, the k-core discipline). Output: the top-k
-    communities by member count (≥ min_size), exact integers."""
+    Plan: the canonical a<b edge list (``_canonical_edges``, shared
+    with the triangle and k-core queries) symmetrized once by
+    ``_both_ways``; each round is TWO partial-agg groupBys ((node,
+    label) weight fold, then per-node max) + an equi-join back, with
+    the label table ``localCheckpoint``ed per round (constant lineage,
+    the k-core discipline). Output: the top-k communities by member
+    count (≥ min_size), exact integers."""
     if n_rounds < 1:
         raise ValueError(
             f"collocation_communities: n_rounds must be >= 1, got {n_rounds}"
         )
-    toks = F.split(F.trim(F.col(text_col)), " ")
-    bi = (
-        docs.select(toks.alias("_tk"))
-        .where(F.size("_tk") >= 2)
-        .select(
-            F.explode(
-                F.zip_with(
-                    F.slice(F.col("_tk"), 1, F.size("_tk") - 1),
-                    F.slice(F.col("_tk"), 2, F.size("_tk") - 1),
-                    lambda a, b: F.struct(a.alias("x"), b.alias("y")),
-                )
-            ).alias("p")
-        )
-        .select(
-            F.least("p.x", "p.y").alias("a"),
-            F.greatest("p.x", "p.y").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.count(F.lit(1)).alias("w"))
-        .where(F.col("w") >= min_count)
-    )
-    edges = (
-        bi.select(F.col("a").alias("u"), F.col("b").alias("v"), "w")
-        .unionByName(
-            bi.select(F.col("b").alias("u"), F.col("a").alias("v"), "w")
-        )
-        .localCheckpoint()
-    )
+    edges = _both_ways(
+        _canonical_edges(docs, text_col, min_count)
+    ).localCheckpoint()
     labels = (
         edges.select(F.col("u").alias("node"))
         .distinct()
@@ -2195,9 +2088,7 @@ def vocab_coverage(
         raise ValueError(f"vocab_coverage: vocab sizes must be >= 1: {vocab_sizes}")
 
     counts = (
-        docs.select(
-            F.explode(F.split(F.trim(F.col(text_col)), " ")).alias("_t")
-        )
+        docs.select(F.explode(tokens(F.col(text_col))).alias("_t"))
         .groupBy("_t")
         .agg(F.count(F.lit(1)).alias("_c"))
     )

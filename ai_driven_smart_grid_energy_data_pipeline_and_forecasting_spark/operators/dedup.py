@@ -150,7 +150,7 @@ def duplicated_spans(
     scales where it exceeds executor storage pass ``False`` and pay
     the second scan instead — the scan is linear; the materialization
     is not free storage."""
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     gram_arr = F.when(
         F.size(toks) >= n,
         F.transform(
@@ -233,7 +233,7 @@ def scrub_spans(
     sp = spans.groupBy(F.col(id_col)).agg(
         F.collect_list(F.struct("span_start", "span_end")).alias("_spans")
     )
-    toks = F.split(F.trim(F.col(text_col)), " ")
+    toks = tokens(F.col(text_col))
     in_any_span = lambda i: F.coalesce(  # noqa: E731
         F.exists(
             "_spans",

@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -44,3 +46,24 @@ def spark():
     s = get_spark("tests", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_in(spark):
+    """``with jobs_in() as jobs:`` collects the ids of the Spark jobs
+    launched inside the block, by job group."""
+
+    @contextmanager
+    def block():
+        sc = spark.sparkContext
+        group = f"jobs-{uuid.uuid4().hex}"
+        jobs = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return block

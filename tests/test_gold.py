@@ -6,8 +6,6 @@ champion forecast)."""
 from __future__ import annotations
 
 import datetime as dt
-import uuid
-from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -337,21 +335,6 @@ def _series(spark, fn, days=14):
     return _hourly_feats(spark, rows)
 
 
-@contextmanager
-def _jobs_in(spark):
-    """Ids of the Spark jobs launched inside the block, by job group."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    jobs = []
-    sc.setJobGroup(group, group)
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_backtest_leakage_free_and_fold_isolation(spark):
     # the leakage contract, tested adversarially: perturbing actuals
     # INSIDE the newest test window must change fold 4's metrics and
@@ -425,7 +408,7 @@ def test_backtest_gap_honesty_and_seasonal_exactness(spark):
     assert n_by_fold[("pv", 1)] == 24 and n_by_fold[("pv", 2)] == 24
 
 
-def test_backtest_guards(spark):
+def test_backtest_guards(spark, jobs_in):
     from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
         rolling_backtest,
     )
@@ -440,12 +423,12 @@ def test_backtest_guards(spark):
     # a non-positive horizon has no fold windows to tile: refused before
     # any Spark job, not a silent single "fold" or a divide-by-zero
     for bad in (0, -24):
-        with _jobs_in(spark) as jobs, pytest.raises(ValueError, match="horizon_h"):
+        with jobs_in() as jobs, pytest.raises(ValueError, match="horizon_h"):
             rolling_backtest(feats, horizon_h=bad)
         assert jobs == []
 
 
-def test_leaderboard_guard_and_schema(spark):
+def test_leaderboard_guard_and_schema(spark, jobs_in):
     from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
         champion_forecast,
         model_leaderboard,
@@ -456,7 +439,7 @@ def test_leaderboard_guard_and_schema(spark):
         model_leaderboard(feats, n_folds=0)
     for fn in (model_leaderboard, champion_forecast):
         for bad in (0, -24):
-            with _jobs_in(spark) as jobs, pytest.raises(ValueError, match="horizon_h"):
+            with jobs_in() as jobs, pytest.raises(ValueError, match="horizon_h"):
                 fn(feats, horizon_h=bad)
             assert jobs == [], fn.__name__
     out = model_leaderboard(feats)
@@ -582,7 +565,7 @@ def test_champion_forecast_constant_series_climatology(spark):
     assert (out["yhat"] == 2.5).all()
 
 
-def test_champion_forecast_pays_one_checkpoint(spark):
+def test_champion_forecast_pays_one_checkpoint(spark, jobs_in):
     # the forward forecast reads the leaderboard's pinned series, so
     # building the plan runs one job: that single eager localCheckpoint
     from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.gold import (
@@ -590,7 +573,7 @@ def test_champion_forecast_pays_one_checkpoint(spark):
     )
 
     feats = _series(spark, lambda d, h: h + d)
-    with _jobs_in(spark) as jobs:
+    with jobs_in() as jobs:
         champion_forecast(feats)
     assert len(jobs) == 1
 

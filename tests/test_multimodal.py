@@ -5,8 +5,6 @@ sampling fanout, and the codec round-trip audits."""
 from __future__ import annotations
 
 import hashlib
-import uuid
-from contextlib import contextmanager
 
 import pytest
 
@@ -416,21 +414,6 @@ def _h32(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
 
 
-@contextmanager
-def _jobs_in(spark):
-    """Ids of the Spark jobs launched inside the block, by job group."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    jobs = []
-    sc.setJobGroup(group, group)
-    try:
-        yield jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
-
-
 _AUDITS = (
     "codec_roundtrip_audit",
     "gif_roundtrip_audit",
@@ -454,12 +437,14 @@ _AUDITS = (
     ]
     + [(audit, {"n_docs": 0}) for audit in _AUDITS],
 )
-def test_audit_refuses_vacuous_params_before_any_job(spark, audit, kwargs):
+def test_audit_refuses_vacuous_params_before_any_job(
+    spark, jobs_in, audit, kwargs
+):
     # a zero-pixel raster, a zero-sample frame or an empty id set would
     # pass its oracle while certifying nothing: refuse on the driver
     docs = spark.range(0, 4).withColumnRenamed("id", "doc_id")
     (param,) = kwargs
-    with _jobs_in(spark) as jobs, pytest.raises(ValueError, match=param):
+    with jobs_in() as jobs, pytest.raises(ValueError, match=param):
         getattr(binary_ops, audit)(docs, **kwargs)
     assert jobs == []
 

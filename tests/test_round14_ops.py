@@ -300,100 +300,3 @@ def test_batch_topk_cut_matches_reference_order_property():
     import math
 
     check()
-
-
-# --------------------------- index-resident PRF retrieval (r14)
-
-
-def _fresh_index(spark, docs, prefix):
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark import (
-        fsutil,
-    )
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.functions import (
-        text as TX,
-    )
-
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    for sfx in ("postings", "stats"):
-        spark.sql(f"DROP TABLE IF EXISTS {prefix}_{sfx}")
-        fsutil.delete(
-            fsutil.join(wh, f"{prefix}_{sfx}"), recursive=True, spark=spark
-        )
-    base = docs.filter(F.col("doc_id") % 5 != 0)
-    delta = docs.filter(F.col("doc_id") % 5 == 0)
-    TX.persist_search_index(base, prefix, batch_id="base")
-    TX.append_search_index(delta, prefix, batch_id="delta")
-    return TX
-
-
-def test_prf_index_identity_and_replay(spark):
-    # the at-scale PRF must reproduce inline bm25_prf_search
-    # BIT-identically over the same ingested corpus — including after
-    # a crash-replayed append (the index family's content-dedup
-    # guard: replayed rows are byte-identical, so sums stay
-    # exactly-once)
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark import (
-        tables,
-    )
-
-    docs = tables.load_table(spark, "documents", SF_DIR)
-    prefix = "t14_prf_idx"
-    TX = _fresh_index(spark, docs, prefix)
-    q = "vector stream merge window"
-    inline = TX.bm25_prf_search(
-        docs, q, k=20, fb_docs=10, fb_terms=5
-    ).collect()
-    idx = TX.prf_index_topk(
-        spark, prefix, q, k=20, fb_docs=10, fb_terms=5
-    ).collect()
-    assert len(inline) == 20
-    assert [tuple(r) for r in idx] == [tuple(r) for r in inline]
-    # crash-replay: append the delta batch AGAIN with the same
-    # batch_id — content dedup must keep every score identical
-    TX.append_search_index(
-        docs.filter(F.col("doc_id") % 5 == 0), prefix, batch_id="delta"
-    )
-    replayed = TX.prf_index_topk(
-        spark, prefix, q, k=20, fb_docs=10, fb_terms=5
-    ).collect()
-    assert [tuple(r) for r in replayed] == [tuple(r) for r in inline]
-    # param sweep: smaller feedback set / different k still identical
-    for fb_docs, fb_terms, k in [(5, 3, 10), (10, 2, 7)]:
-        a = TX.bm25_prf_search(
-            docs, q, k=k, fb_docs=fb_docs, fb_terms=fb_terms
-        ).collect()
-        b = TX.prf_index_topk(
-            spark, prefix, q, k=k, fb_docs=fb_docs, fb_terms=fb_terms
-        ).collect()
-        assert [tuple(r) for r in b] == [tuple(r) for r in a], (fb_docs, k)
-
-
-def test_prf_index_guards_and_scan_profile(spark):
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark import (
-        tables,
-    )
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.functions import (
-        text as TX,
-    )
-
-    with pytest.raises(ValueError, match="non-empty query"):
-        TX.prf_index_topk(spark, "whatever", "   ")
-    # the audit's point, pinned as a test: the indexed PRF plan must
-    # not scan the documents parquet AT ALL (corpus tokenized once at
-    # ingest) — versus 28 scans in the inline plan
-    import contextlib
-    import io
-    import re
-
-    docs = tables.load_table(spark, "documents", SF_DIR)
-    prefix = "t14_prf_scan"
-    _fresh_index(spark, docs, prefix)
-    df = TX.prf_index_topk(spark, prefix, "vector stream merge window")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    doc_scans = len(
-        re.findall(r"Scan parquet[^\n]*documents", plan)
-    )
-    assert doc_scans == 0, plan[:2000]

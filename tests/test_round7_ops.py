@@ -886,41 +886,6 @@ def test_doc_frequent_pairs_apriori(spark):
     assert [(r.a, r.b, r.support) for r in r2] == [("x", "y", 3)]
 
 
-# ------------------------------------------------------------ PRF
-
-
-def test_bm25_prf_bridges_vocabulary_mismatch(spark):
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.functions.text import (
-        bm25_prf_search,
-        bm25_search,
-    )
-
-    # docs about "grid" consistently co-mention "outage"; doc 20 talks
-    # ONLY about outages — plain BM25 can never retrieve it for the
-    # query "grid", PRF expansion can
-    docs = spark.createDataFrame(
-        [
-            (1, "grid outage outage report north"),
-            (2, "grid outage outage summary south"),
-            (3, "grid outage maintenance east"),
-            (20, "outage outage outage blackout west"),
-            (30, "weather sunny calm mild dry"),
-            (31, "market price index stable flat"),
-        ],
-        "doc_id long, text string",
-    )
-    plain = {r.doc_id for r in bm25_search(docs, "grid", k=6).collect()}
-    assert 20 not in plain
-    prf = bm25_prf_search(docs, "grid", k=6, fb_docs=3, fb_terms=2).collect()
-    ids = {r.doc_id for r in prf}
-    assert 20 in ids and {1, 2, 3} <= ids
-    assert 30 not in ids and 31 not in ids
-    import pytest as _pt
-
-    with _pt.raises(ValueError, match="non-empty"):
-        bm25_prf_search(docs, "  ")
-
-
 # ------------------------------------------------------- triangles
 
 
