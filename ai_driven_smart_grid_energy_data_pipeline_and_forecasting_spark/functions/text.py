@@ -2146,7 +2146,7 @@ def vocab_coverage(
         )
         .select("_c", "_k", "_cum_types", "_cum_mass")
     )
-    T, V = F.lit(total_tokens), F.lit(total_types)
+    T = F.lit(total_tokens)
     aggs, names = [], []
     for n, d in coverage:
         # first spectrum group whose cumulative mass reaches

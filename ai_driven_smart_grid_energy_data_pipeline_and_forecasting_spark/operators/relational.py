@@ -569,7 +569,11 @@ def zscore_normalize(
     digit of headroom under the 1e32 / 1e24 carrier caps) — rescale
     the column first if the domain is genuinely that large.
     """
-    vals = df.select(key_col, value_col).where(F.col(value_col).isNotNull())
+    # a NULL key never joins, so its rows are dropped here rather than
+    # meeting the guard below (they reach no output to skew)
+    vals = df.select(key_col, value_col).where(
+        F.col(key_col).isNotNull() & F.col(value_col).isNotNull()
+    )
     v = F.col(value_col)
     moments = vals.groupBy(key_col).agg(
         F.count(F.lit(1)).alias("_n"),
@@ -581,19 +585,22 @@ def zscore_normalize(
     var = (F.col("_s2") - F.col("_s1") * F.col("_s1") / F.col("_n")) / (
         F.col("_n") - 1
     )
-    # guard rides the _sd expression so Catalyst cannot prune it; the
-    # raise_error branch only evaluates for an offending key. Two
-    # bounds (review r7: the per-row cast bound alone is not enough —
-    # in-bound values can still overflow the SUM to NULL silently):
-    # the per-row v² cast (|v| < 1e15) AND the accumulated sums,
-    # conservatively n·vmax² < 1e31 for Σv² (decimal(38,6) holds 1e32)
-    # and n·vmax < 1e23 for Σv (decimal(30,6) holds 1e24).
+    # guard rides the broadcast join key, so Catalyst cannot prune it
+    # whatever the caller projects (a raise_error branch feeding the
+    # join condition is evaluated for every stats row the join reads,
+    # and counting or projecting the result still needs the join); the
+    # branch only raises for an offending key. Two bounds (review r7:
+    # the per-row cast bound alone is not enough — in-bound values can
+    # still overflow the SUM to NULL silently): the per-row v² cast
+    # (|v| < 1e15) AND the accumulated sums, conservatively
+    # n·vmax² < 1e31 for Σv² (decimal(38,6) holds 1e32) and
+    # n·vmax < 1e23 for Σv (decimal(30,6) holds 1e24).
     unsafe = (
         (F.col("_vmax") >= F.lit(1e15))
         | (F.col("_vmax") * F.col("_vmax") * F.col("_n") >= F.lit(1e31))
         | (F.col("_vmax") * F.col("_n") >= F.lit(1e23))
     )
-    sd = F.when(
+    key = F.when(
         unsafe,
         F.raise_error(
             F.concat(
@@ -611,15 +618,15 @@ def zscore_normalize(
                     " variance. Rescale the column first."
                 ),
             )
-        ).cast("double"),
-    ).otherwise(F.when((F.col("_n") > 1) & (var > 0), F.sqrt(var)))
+        ),
+    ).otherwise(F.col(key_col))
     stats = moments.select(
-        key_col,
+        key.alias("_key"),
         mean.alias("_mean"),
-        sd.alias("_sd"),
+        F.when((F.col("_n") > 1) & (var > 0), F.sqrt(var)).alias("_sd"),
     )
     return (
-        vals.join(F.broadcast(stats), key_col)
+        vals.join(F.broadcast(stats), F.col(key_col) == F.col("_key"))
         .select(
             key_col,
             v.alias(value_col),

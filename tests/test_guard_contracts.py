@@ -1,7 +1,8 @@
 """Guard contract for the single-window refusals of ``equidepth_bins``
-and ``skyline_2d``: past ``max_distinct`` the result must raise whatever
-the caller does with it — count it, project any one of its columns, or
-collect it whole. A guard that only some columns reach is pruned away by
+and ``skyline_2d`` (past ``max_distinct``) and the value-domain refusal
+of ``zscore_normalize``: the result must raise whatever the caller does
+with it — count it, project any one of its columns, or collect it
+whole. A guard that only some columns reach is pruned away by
 the others, and the query returns rows silently (``global_rank`` has
 its own file, ``test_global_rank_guards.py``)."""
 from __future__ import annotations
@@ -11,6 +12,7 @@ import pytest
 from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.operators.relational import (
     equidepth_bins,
     skyline_2d,
+    zscore_normalize,
 )
 
 
@@ -28,10 +30,19 @@ def _skyline(spark):
     return skyline_2d(df, "x", "y", max_distinct=5)
 
 
+def _zscore(spark):
+    # one key whose |v| reaches 1e15: v² would overflow the decimal cast
+    df = spark.createDataFrame(
+        [("a", 1e15), ("a", 1.0), ("a", 2.0)], "k string, v double"
+    )
+    return zscore_normalize(df, "k", "v")
+
+
 # name -> (function making the refused result, message)
 CASES = {
     "equidepth_bins": (_equidepth, "distinct values exceed"),
     "skyline_2d": (_skyline, "distinct x values"),
+    "zscore_normalize": (_zscore, "value domain too large"),
 }
 
 

@@ -1,7 +1,7 @@
 """Registry-consistency meta-checks: the driver contract's side lists
 (bench headline, partition-invariance audit) must never drift from the
 queries()/oracle_sql() registry — a name typo in a list silently
-drops a query from its gate."""
+drops a query from its gate. Also the bench's per-entry counter sums."""
 
 from __future__ import annotations
 
@@ -33,209 +33,46 @@ def test_rows_only_queries_are_the_documented_two():
     assert rows_only == ["ann_ivf_trained", "forecast_sarimax"], rows_only
 
 
-def test_bench_drift_normalization(tmp_path):
-    # VERDICT r9 Next #2: the bench must emit the drift-normalized
-    # round-over-round comparison itself instead of leaving calib_sec
-    # for a reviewer to consume by hand. Scenario modeled on the real
-    # r9 episode: the host slows 1.5x uniformly (calib 0.6 -> 0.9,
-    # every query x1.5) EXCEPT one query that genuinely regressed 3x
-    # and one that genuinely improved 2x.
-    import json as _json
-
-    prev = {
-        "calib_sec": 0.6,
-        "queries": {"a": 1.0, "b": 2.0, "c": 0.5, "tiny": 0.01},
-    }
-    p = tmp_path / "BENCH_DETAIL.json"
-    p.write_text(_json.dumps(prev))
-    timings = {
-        "a": 1.5,            # pure host drift -> normalized 1.0
-        "b": 2.0 * 1.5 * 3,  # real 3x regression under the same drift
-        "c": 0.5 * 1.5 / 2,  # real 2x improvement
-        "tiny": 0.03,        # sub-noise: excluded from movers
-        "new_q": 1.0,        # not shared: no mover row
-    }
-    total = sum(timings.values())
-    out = bench.drift_vs_prev(
-        bench.load_prev_detail(str(p)), timings, total, calib_sec=0.9
-    )
-    assert out["calib_ratio_vs_prev"] == 1.5
-    assert out["drift_normalized_total_sec"] == round(total / 1.5, 4)
-    assert out["shared_queries"] == 4
-    # the uniform-drift query normalizes to ~1.0 and is NOT a mover
-    assert "a" not in out["norm_movers_slower"]
-    assert "a" not in out["norm_movers_faster"]
-    # the real movers survive normalization
-    assert out["norm_movers_slower"]["b"] == 3.0
-    assert out["norm_movers_faster"]["c"] == 0.5
-    # sub-noise rows never fabricate a mover
-    assert "tiny" not in out["norm_movers_slower"]
-    # first run / missing artifact -> keys absent, not null
-    assert bench.load_prev_detail(str(tmp_path / "nope.json")) is None
-    assert bench.drift_vs_prev(None, timings, total, 0.9) == {}
-    # prior artifact predating calib recording -> absent too
-    assert bench.drift_vs_prev({"queries": {"a": 1.0}}, timings, total, 0.9) == {}
-
-
-def test_retime_to_fixpoint_best_of_two():
-    # VERDICT r10 Next #5 / r11 Next #2: flagged slower-movers get a
-    # second timed pass and the artifact keeps the min — so a one-shot
-    # GC/compile burst (all 8 r10 flagged movers were judge-refuted as
-    # exactly that) cannot name a regression.
-    prev = {
-        "calib_sec": 1.0,
-        "queries": {"burst": 1.0, "real": 1.0, "fast": 0.2},
-    }
-    timings = {"burst": 2.26, "real": 3.0, "fast": 0.2}
-    reruns = {"burst": 1.11, "real": 2.95}
-
-    def fake_run(name):
-        return reruns[name]
-
-    retimed, single, drift = bench.retime_to_fixpoint(
-        timings, prev, 1.0, fake_run
-    )
-    # one-shot burst collapses to its true warm time; a genuine
-    # regression survives the re-run; unflagged rows untouched
-    assert timings == {"burst": 1.11, "real": 2.95, "fast": 0.2}
-    assert retimed == ["burst", "real"]
-    # 'real' stays flagged after its best-of-2 — but it IS retimed,
-    # so nothing in the final slower list is single-timed
-    assert "real" in drift["norm_movers_slower"]
-    assert single == []
-    # a re-run that errors keeps the original number and the name is
-    # DISCLOSED as single-timed instead of silently published
-    def boom(name):
-        raise RuntimeError("transient")
-
-    t2 = {"burst": 2.26, "fast": 0.2}
-    retimed2, single2, drift2 = bench.retime_to_fixpoint(t2, prev, 1.0, boom)
-    assert retimed2 == [] and t2["burst"] == 2.26
-    assert single2 == ["burst"]
-    assert "burst" in drift2["norm_movers_slower"]
-    # no prior artifact -> no movers -> no-op
-    r3, s3, d3 = bench.retime_to_fixpoint({"a": 1.0}, None, 1.0, fake_run)
-    assert r3 == [] and s3 == [] and d3 == {}
-
-
-def test_retime_to_fixpoint_retimes_fresh_tier():
-    # The exact BENCH_r11 failure mode: the slower list caps at 8, so
-    # after the first retime pass collapses the provisional movers, a
-    # FRESH tier surfaces in the recompute — the r10 single-pass
-    # version published those on one timing. The fixpoint loop must
-    # retime them too, leaving the final list fully best-of-2+.
-    prev = {
-        "calib_sec": 1.0,
-        "queries": {f"q{i}": 1.0 for i in range(10)},
-    }
-    # q0..q8 burst to 2.0x (9 movers; cap publishes only 8), q9 flat.
-    timings = {f"q{i}": 2.0 for i in range(9)}
-    timings["q9"] = 1.0
-    calls: list[str] = []
-
-    def fake_run(name):
-        calls.append(name)
-        return 1.0  # every burst collapses on the re-run
-
-    retimed, single, drift = bench.retime_to_fixpoint(
-        timings, prev, 1.0, fake_run
-    )
-    # all NINE movers got a second run — including the one the first
-    # 8-capped list never showed — and the final list is empty
-    assert sorted(calls) == [f"q{i}" for i in range(9)]
-    assert retimed == [f"q{i}" for i in range(9)]
-    assert single == []
-    assert drift["norm_movers_slower"] == {}
-    assert all(timings[f"q{i}"] == 1.0 for i in range(10))
-
-
-def test_retime_fixpoint_invariants_randomized():
-    # refactor guard for the loop itself: under arbitrary prior maps,
-    # burst patterns, and flaky re-runs, (a) kept timings never
-    # increase, (b) retimed and single-timed are disjoint and cover
-    # every name the final artifact flags as slower, (c) the call
-    # terminates (bounded passes) — i.e. the disclosure contract
-    # can't be broken by any run behavior
-    import random
-
-    rng = random.Random(12)
-    for _ in range(60):
-        names = [f"q{i}" for i in range(rng.randint(1, 12))]
-        prev = {
-            "calib_sec": 1.0,
-            "queries": {n: rng.uniform(0.06, 2.0) for n in names},
+def test_bench_entry_counters_sum_one_group_per_entry():
+    # read_event_log's job records, as bench.main() hands them over:
+    # "a" has two jobs (one of them a construction job), "b" one; a
+    # rerun group and an ungrouped job (warmup) belong to no entry
+    def job(group, stages, tasks, read, write, spill, run_s, py_s):
+        return {
+            "group": group, "submitted": 0.0, "stages": float(stages),
+            "tasks": float(tasks), "executor_run_s": run_s,
+            "executor_cpu_s": run_s / 2, "shuffle_read_bytes": float(read),
+            "shuffle_write_bytes": float(write), "spill_bytes": float(spill),
+            "python_s": py_s,
         }
-        # production timings are round(·, 4) before retime; mirror it
-        # (the kept value is round(min(...), 4), so an unrounded input
-        # could appear to "increase" by the rounding grain)
-        timings = {n: round(rng.uniform(0.06, 4.0), 4) for n in names}
-        orig = dict(timings)
-        mode = {n: rng.choice(["lower", "same", "fail"]) for n in names}
 
-        def run(name):
-            if mode[name] == "fail":
-                raise RuntimeError("transient")
-            if mode[name] == "lower":
-                return orig[name] * rng.uniform(0.3, 0.9)
-            return orig[name] * rng.uniform(1.0, 1.5)  # min() ignores
-
-        retimed, single, drift = bench.retime_to_fixpoint(
-            timings, prev, 1.0, run
-        )
-        assert all(timings[n] <= orig[n] + 1e-9 for n in names)
-        assert not (set(retimed) & set(single))
-        flagged = set(drift.get("norm_movers_slower", {}))
-        assert flagged <= set(retimed) | set(single)
-        assert set(retimed) | set(single) <= set(names)
-        # a name that failed its re-run can only appear as single-timed
-        assert all(mode[n] != "fail" for n in retimed)
-
-
-def test_query_fingerprints_provenance():
-    # VERDICT r11 Next #6: per-query code-provenance fingerprints let
-    # the next round's artifact mark flagged movers whose implementing
-    # code is bit-identical ("unchanged_code"). Contract: every real
-    # registry entry gets a deterministic fingerprint, and the
-    # fingerprint keys off the entry function + package closure.
-    queries = entry_mod.queries()
-    fps = bench.query_fingerprints(queries)
-    # every entry is a plain introspectable function today — a new
-    # registration style that breaks this shows up here, not silently
-    # as a missing fingerprint in the artifact
-    missing = sorted(set(queries) - set(fps))
-    assert not missing, missing
-    # deterministic across calls
-    assert fps == bench.query_fingerprints(queries)
-    # 16-hex shape
-    assert all(len(v) == 16 and int(v, 16) >= 0 for v in fps.values())
-    # two queries over DIFFERENT code paths get different hashes
-    assert fps["summary_events"] != fps["ann_mips_topk"]
-
-
-def test_query_fingerprints_move_with_implementing_code():
-    # the load-bearing property: a change to a query's implementing
-    # module MOVES its fingerprint (so unchanged_code=false), while
-    # queries that never touch that module keep theirs (so residual
-    # drift on them still reads unchanged_code=true). Simulated via
-    # the test-only hash override instead of editing real files.
-    queries = entry_mod.queries()
-    sub = {
-        k: queries[k]
-        for k in ("ann_mips_topk", "pq_mips_recall_audit", "keep_metrics")
+    jobs = [
+        job("a", 1, 4, 0, 100, 0, 0.5, 0.0),
+        job("a", 2, 6, 100, 20, 8, 0.25, 0.125),
+        job("b", 1, 1, 7, 0, 0, 0.1, 0.0),
+        job("a/rerun", 9, 9, 9, 9, 9, 9.0, 9.0),
+        job(None, 5, 5, 5, 5, 5, 5.0, 5.0),
+    ]
+    builds = {
+        "a": {"build_s": 0.3, "build_jobs": 1},
+        "b": {"build_s": 0.1, "build_jobs": 0},
     }
-    base = bench.query_fingerprints(sub)
-    pkg = bench._PKG
-    moved = bench.query_fingerprints(
-        sub, _file_hashes={f"{pkg}.operators.similarity": "0" * 64}
-    )
-    # both ANN queries reference operators.similarity -> both move
-    assert moved["ann_mips_topk"] != base["ann_mips_topk"]
-    assert moved["pq_mips_recall_audit"] != base["pq_mips_recall_audit"]
-    # keep_metrics (relational serving path) never imports similarity
-    assert moved["keep_metrics"] == base["keep_metrics"]
-    # and a change to a module NOTHING here imports moves nothing
-    inert = bench.query_fingerprints(
-        sub, _file_hashes={f"{pkg}.multimodal.jpeg": "f" * 64}
-    )
-    assert inert == base
-
+    got = bench.entry_counters(jobs, builds)
+    assert got == {
+        "a": {
+            "build_s": 0.3, "build_jobs": 1, "jobs": 2, "stages": 3,
+            "tasks": 10, "executor_run_s": 0.75, "executor_cpu_s": 0.375,
+            "shuffle_read_bytes": 100, "shuffle_write_bytes": 120,
+            "spill_bytes": 8, "python_s": 0.125,
+        },
+        "b": {
+            "build_s": 0.1, "build_jobs": 0, "jobs": 1, "stages": 1,
+            "tasks": 1, "executor_run_s": 0.1, "executor_cpu_s": 0.05,
+            "shuffle_read_bytes": 7, "shuffle_write_bytes": 0,
+            "spill_bytes": 0, "python_s": 0.0,
+        },
+    }
+    for c in got.values():
+        for k in ("jobs", "stages", "tasks", "shuffle_read_bytes",
+                  "shuffle_write_bytes", "spill_bytes"):
+            assert type(c[k]) is int, (k, c[k])

@@ -602,85 +602,6 @@ def test_benford_audit_refuses_bigint_saturating_domain(spark):
         benford_audit(df, "v").collect()
 
 
-# ---------------------------------------------------------------- k-core
-
-
-def test_kcore_peels_pendant_keeps_triangle(spark):
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.functions.text import (
-        collocation_kcore,
-    )
-
-    # graph: a-b-c triangle + c-d pendant; 2-core = the triangle
-    docs = spark.createDataFrame(
-        [(1, "a b"), (2, "b c"), (3, "a c"), (4, "c d")],
-        "doc_id long, text string",
-    )
-    got = {
-        (r.token, r.degree)
-        for r in collocation_kcore(
-            docs, k_core=2, n_rounds=3, min_count=1
-        ).collect()
-    }
-    assert got == {("a", 2), ("b", 2), ("c", 2)}
-
-
-def test_kcore_chain_has_empty_two_core(spark):
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.functions.text import (
-        collocation_kcore,
-    )
-
-    # path a-b-c-d: every peel round removes the endpoints until empty;
-    # needs MULTIPLE rounds (each round only strips the current leaves)
-    docs = spark.createDataFrame(
-        [(1, "a b"), (2, "b c"), (3, "c d")], "doc_id long, text string"
-    )
-    assert (
-        collocation_kcore(docs, k_core=2, n_rounds=3, min_count=1).count()
-        == 0
-    )
-    # one round is NOT enough: after stripping a and d, b-c survives
-    # with degree 1 — the unconverged superset, never an undershoot
-    one = {
-        r.token
-        for r in collocation_kcore(
-            docs, k_core=2, n_rounds=1, min_count=1
-        ).collect()
-    }
-    assert one == {"b", "c"}
-
-
-def test_kcore_registered_rounds_converge_on_testdata(spark):
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.functions.text import (
-        collocation_kcore,
-    )
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.tables import (
-        load_table,
-    )
-
-    docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    r8 = sorted(
-        (r.token, r.degree)
-        for r in collocation_kcore(docs, k_core=3, n_rounds=8).collect()
-    )
-    r9 = sorted(
-        (r.token, r.degree)
-        for r in collocation_kcore(docs, k_core=3, n_rounds=9).collect()
-    )
-    assert r8 == r9 and len(r8) > 0  # registered config is converged
-
-
-def test_kcore_refuses_bad_params(spark):
-    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.functions.text import (
-        collocation_kcore,
-    )
-
-    docs = spark.createDataFrame([(1, "a b")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="k_core"):
-        collocation_kcore(docs, k_core=0)
-    with pytest.raises(ValueError, match="k_core"):
-        collocation_kcore(docs, n_rounds=0)
-
-
 # ---------------------------------------------------------------- MAD
 
 
