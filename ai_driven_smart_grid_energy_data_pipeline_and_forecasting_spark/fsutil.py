@@ -18,13 +18,21 @@ without atomic rename keep the documented manifest-CAS caveat from
 ``operators/versioned.py``; the marker/pointer PROTOCOL is unchanged,
 only the IO layer widened.
 
+``parquet_schema`` reads a table's schema from its Parquet footers
+through the same FileSystem API, so opening or merging into a table
+costs no schema-inference job.
+
 Everything here is driver-side, a handful of py4j calls per micro-batch
 — never on the executor hot path.
 """
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+from itertools import islice
+
 from pyspark.sql import SparkSession
+from pyspark.sql.types import StructType, _parse_datatype_json_string
 
 
 def _require_spark(spark: SparkSession | None) -> SparkSession:
@@ -41,7 +49,7 @@ def _require_spark(spark: SparkSession | None) -> SparkSession:
 
 def _fs_path(spark: SparkSession, path: str):
     jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = getattr(jvm, "org.apache.hadoop.fs.Path")(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
     return jvm, fs, p
 
@@ -133,3 +141,73 @@ def list_names(path: str, spark: SparkSession | None = None) -> list[str]:
     if not fs.exists(p):
         return []
     return [st.getPath().getName() for st in fs.listStatus(p)]
+
+
+def _hidden(segment: str) -> bool:
+    """Spark's file-index rule: ``_``/``.``-prefixed names are not data
+    (``_SUCCESS``, ``_staging``, ``.crc``), but a ``_``-prefixed
+    partition directory (``_x=1``) is."""
+    return segment.startswith(".") or (
+        segment.startswith("_") and "=" not in segment
+    )
+
+
+def _data_files(fs, root_uri: str, p):
+    """File statuses of the data files under Hadoop path ``p``
+    (recursive), by ``_hidden`` on their path relative to the table
+    root."""
+    if not fs.exists(p):
+        return
+    it = fs.listFiles(p, True)
+    while it.hasNext():
+        st = it.next()
+        rel = st.getPath().toUri().getPath()[len(root_uri):]
+        if not any(_hidden(seg) for seg in rel.split("/") if seg):
+            yield st
+
+
+def parquet_schema(
+    path: str,
+    spark: SparkSession | None = None,
+    dirs: Sequence[str] | None = None,
+    first: bool = False,
+) -> StructType | None:
+    """Data schema of the Parquet files under ``path`` (or under its
+    subdirectories ``dirs``), read from their footers on the driver.
+
+    Each footer goes through Spark's own converter
+    (``ParquetFileFormat.readSchemaFromFooter`` with a
+    ``ParquetToSparkSchemaConverter`` built from the session conf) and
+    several are merged with ``StructType.merge`` — the code Spark's
+    schema-inference job runs, without the job. ``first=True`` reads one
+    footer (a plain read's inference); otherwise every file's footer is
+    merged (a ``mergeSchema`` read's). Partition columns are not in the
+    footers: a reader given this schema infers them from the directory
+    names, as an inferring read does. None when there is no data file —
+    a new or empty table."""
+    spark = _require_spark(spark)
+    jvm, fs, root = _fs_path(spark, path)
+    # classes by full name: one py4j round trip each, where a dotted
+    # attribute chain pays one per package segment
+    pq = "org.apache.spark.sql.execution.datasources.parquet"
+    root_uri = fs.makeQualified(root).toUri().getPath()
+    hconf = spark._jsc.hadoopConfiguration()
+    sconf = spark._jsparkSession.sessionState().conf()
+    converter = getattr(jvm, f"{pq}.ParquetToSparkSchemaConverter")(sconf)
+    reader = getattr(jvm, "org.apache.parquet.hadoop.ParquetFileReader")
+    footer_cls = getattr(jvm, "org.apache.parquet.hadoop.Footer")
+    read_schema = getattr(jvm, f"{pq}.ParquetFileFormat").readSchemaFromFooter
+    bases = (
+        [root] if dirs is None
+        else [getattr(jvm, "org.apache.hadoop.fs.Path")(join(path, d)) for d in dirs]
+    )
+    files = (st for b in bases for st in _data_files(fs, root_uri, b))
+    merged = None
+    for st in islice(files, 1) if first else files:
+        fp = st.getPath()
+        schema = read_schema(footer_cls(fp, reader.readFooter(hconf, fp)), converter)
+        merged = (
+            schema if merged is None
+            else merged.merge(schema, sconf.caseSensitiveAnalysis())
+        )
+    return None if merged is None else _parse_datatype_json_string(merged.json())

@@ -22,13 +22,42 @@ the reference.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsutil
 from .relational import latest_per_group
+
+
+#: Directory label Spark/Hive writes for a NULL (or empty-string)
+#: partition value.
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+#: Characters Spark's ExternalCatalogUtils escapes in partition
+#: directory names (Hive's FileUtils.charToEscape): C0 controls plus
+#: the listed specials. '+' and space are NOT escaped.
+_HIVE_ESCAPE_CHARS = frozenset('"#%\'*/:=?\\{[]^') | frozenset(
+    chr(i) for i in range(0x20)
+) | frozenset({chr(0x7F)})  # DEL is in Hive's charToEscape too
+
+
+def _escape_part_val(val: object) -> str:
+    """Partition value → the directory-name form Spark writes for it
+    (``site=<this>``). Manifest keys use THIS form everywhere (ADVICE
+    r4): comparing raw ``str(value)`` against ``os.listdir`` names
+    silently dropped NULLs and any value containing ':','/','%','='
+    from the manifest."""
+    if val is None:
+        return _HIVE_NULL
+    s = str(val)
+    if s == "":
+        return _HIVE_NULL
+    return "".join(
+        f"%{ord(c):02X}" if c in _HIVE_ESCAPE_CHARS else c for c in s
+    )
 
 
 def merge_frames(
@@ -207,8 +236,9 @@ def _staged_overwrite(
     writer clears the stale staging. The residual window is the rename
     loop itself — pure metadata ops; a transactional format (Delta/
     Iceberg) shrinks that to one manifest CAS, which is the production
-    deployment's answer (see class docstring). Returns rows written
-    (counted from staged parquet footers — no recompute of the plan).
+    deployment's answer (see class docstring). Returns rows written,
+    counted by an ``Observation`` on the written frame: the count rides
+    the write job itself, so no job reads the staged files back.
 
     Writing to staging instead of overwriting in place also removes the
     read-own-input hazard, so callers no longer need the eager
@@ -221,17 +251,76 @@ def _staged_overwrite(
     if not recovered:
         _clear_work_dirs(spark, path)
     staged = f"{path}/_staging/data"
-    df.write.mode("overwrite").partitionBy(*partition_by).parquet(staged)
-    # A zero-row df stages only _SUCCESS (ADVICE r4): reading that back
-    # throws UNABLE_TO_INFER_SCHEMA, and the publish then only removes
-    # ``replaced`` dirs — a no-op for a plain empty batch, as the
-    # module contract (re-run idempotency) requires.
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).partitionBy(*partition_by).parquet(staged)
+    # A zero-row df stages only _SUCCESS (ADVICE r4), and its write may
+    # deliver no observed-metrics row, so the count is read only when a
+    # data file was staged; the publish then only removes ``replaced``
+    # dirs — a no-op for a plain empty batch, as the module contract
+    # (re-run idempotency) requires.
     fs, jvm = _hadoop_fs(spark, path)
     n = 0
     if _has_parquet_files(fs, jvm, staged):
-        n = spark.read.parquet(staged).count()  # metadata-only row count
+        row = obs._jo.getRow()
+        n = row.getLong(0) if row.size() else 0
     _publish_staged(spark, path, len(partition_by), replaced)
     return n
+
+
+def _touched(
+    updates: DataFrame, partition_by: Sequence[str]
+) -> dict[str, tuple]:
+    """{leaf partition dir: partition values} of every partition the
+    updates touch — one bounded collect (one row per partition). The dir
+    name comes from Spark's own string cast of each value, the form its
+    writer names partition directories with."""
+    cols = list(partition_by)
+    rows = (
+        updates.select(
+            *cols, *[F.col(k).cast("string").alias(f"_dir{i}") for i, k in enumerate(cols)]
+        )
+        .distinct()
+        .collect()
+    )
+    n = len(cols)
+    return {
+        "/".join(
+            f"{k}={_escape_part_val(r[n + i])}" for i, k in enumerate(cols)
+        ): tuple(r[:n])
+        for r in rows
+    }
+
+
+def _in_partitions(partition_by: Sequence[str], values) -> Column:
+    """Predicate selecting exactly the partitions ``values`` (tuples in
+    ``partition_by`` order): an ``isin`` for one column, an OR of
+    null-safe equalities otherwise. It reads partition columns only, so
+    the scan prunes to those directories."""
+    if len(partition_by) == 1:
+        vals = [v[0] for v in values]
+        pred = F.col(partition_by[0]).isin([v for v in vals if v is not None])
+        return pred | F.col(partition_by[0]).isNull() if None in vals else pred
+    return reduce(
+        lambda a, b: a | b,
+        [
+            reduce(
+                lambda a, b: a & b,
+                [F.col(k).eqNullSafe(v) for k, v in zip(partition_by, vals)],
+            )
+            for vals in values
+        ],
+    )
+
+
+class _Written(int):
+    """``merge_upsert``'s result: the rows written — a plain int to every
+    caller — carrying the partitions the merge touched as ``touched``
+    (``_touched``'s mapping), so the Silver refresh, which needs the same
+    values, does not collect them a second time."""
+
+    touched: dict[str, tuple]
 
 
 def merge_upsert(
@@ -245,19 +334,23 @@ def merge_upsert(
 ) -> int:
     """Upsert ``updates`` into the Parquet table at ``target_path`` keyed
     by ``keys``; conflicts resolved by highest ``order_col`` (ingest
-    recency), ties by update-over-existing. Returns rows written.
+    recency), ties by update-over-existing. Returns rows written (its
+    ``touched`` attribute holds the touched partitions, see ``_Written``).
 
     Only partitions present in ``updates`` are read and rewritten
     (partition pruning on the read; the write stages the rewritten
     partitions and publishes them by rename — crash-safe, see
-    ``_staged_overwrite``).
+    ``_staged_overwrite``). ``updates`` is read once to collect the
+    touched partitions and once by the write; pin an expensive frame
+    (``localCheckpoint``) before passing it. A batch with no rows
+    writes nothing.
 
     ``allow_schema_evolution=True`` (Delta ``mergeSchema`` analog) lets
-    a batch ADD columns: the touched-partition read uses parquet
-    ``mergeSchema`` and the union fills the missing side with NULL (see
-    ``merge_frames``). UNTOUCHED partitions keep their old files — the
-    table becomes mixed-schema on disk, exactly like Delta before
-    ``OPTIMIZE``; read an evolved table with
+    a batch ADD columns: the touched-partition read takes the merged
+    schema of those partitions' footers and the union fills the missing
+    side with NULL (see ``merge_frames``). UNTOUCHED partitions keep
+    their old files — the table becomes mixed-schema on disk, exactly
+    like Delta before ``OPTIMIZE``; read an evolved table with
     ``spark.read.option("mergeSchema", "true")`` until every partition
     has been rewritten.
     """
@@ -266,23 +359,32 @@ def merge_upsert(
     # captured earlier would hold stale file references (observed as
     # FileNotFoundException at execution time)
     _clear_work_dirs(spark, target_path)
-    existing = updates.limit(0)  # a new table: the optimizer drops this side
-    if os.path.exists(target_path):
-        # ALWAYS mergeSchema on the existing read: once a table has been
-        # evolved it is mixed-schema on disk, and a plain read would
-        # infer from one arbitrary footer — a later default merge could
-        # then silently rewrite partitions WITHOUT the evolved column
-        # (nondeterministic data loss). With the union of footers, a
-        # default merge against an evolved table instead fails loudly at
-        # unionByName, which is the guardrail this flag is about.
-        # Pruned to touched partitions: tiny distinct list, broadcast semi join.
-        touched = updates.select(*partition_by).distinct()
-        existing = (
-            spark.read.option("mergeSchema", "true").parquet(target_path)
-            .join(F.broadcast(touched), list(partition_by), "left_semi")
-        )
-    out = merge_frames(existing, updates, keys, order_col, allow_schema_evolution)
-    return _staged_overwrite(spark, target_path, out, partition_by, recovered=True)
+    parts = _touched(updates, partition_by)
+    n = 0
+    if parts:  # no rows: nothing to merge, nothing written
+        # The existing read's schema is the MERGE of the touched
+        # partitions' footers, read on the driver (no inference job):
+        # once a table has been evolved it is mixed-schema on disk, and
+        # one arbitrary footer (or a declared schema) could omit the
+        # evolved column — a later default merge would then silently
+        # rewrite partitions WITHOUT it. With the merged footers, a
+        # default merge against an evolved partition fails loudly at
+        # unionByName, which is the guardrail ``allow_schema_evolution``
+        # is about. No footer (a new table, an empty directory, or only
+        # new partitions) means nothing to merge with: the optimizer
+        # drops the empty side.
+        existing = updates.limit(0)
+        schema = fsutil.parquet_schema(target_path, spark, dirs=list(parts))
+        if schema is not None:
+            existing = (
+                spark.read.schema(schema).parquet(target_path)
+                .filter(_in_partitions(partition_by, parts.values()))
+            )
+        out = merge_frames(existing, updates, keys, order_col, allow_schema_evolution)
+        n = _staged_overwrite(spark, target_path, out, partition_by, recovered=True)
+    written = _Written(n)
+    written.touched = parts
+    return written
 
 
 def _file_sizes(spark: SparkSession, path: str) -> dict[str, int]:
@@ -352,8 +454,6 @@ def compact_partitions(
     row-identical; only layout changes — asserted by the round-trip
     test. Transactional formats run this as OPTIMIZE; the logic is the
     same."""
-    from functools import reduce
-
     # recover first, for the same plan-staleness reason as merge_upsert
     _clear_work_dirs(spark, path)
     sizes = _file_sizes(spark, path)

@@ -43,34 +43,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .upsert import merge_frames
-
-#: Directory label Spark/Hive writes for a NULL (or empty-string)
-#: partition value.
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-#: Characters Spark's ExternalCatalogUtils escapes in partition
-#: directory names (Hive's FileUtils.charToEscape): C0 controls plus
-#: the listed specials. '+' and space are NOT escaped.
-_HIVE_ESCAPE_CHARS = frozenset('"#%\'*/:=?\\{[]^') | frozenset(
-    chr(i) for i in range(0x20)
-) | frozenset({chr(0x7F)})  # DEL is in Hive's charToEscape too
-
-
-def _escape_part_val(val: object) -> str:
-    """Partition value → the directory-name form Spark writes for it
-    (``site=<this>``). Manifest keys use THIS form everywhere (ADVICE
-    r4): comparing raw ``str(value)`` against ``os.listdir`` names
-    silently dropped NULLs and any value containing ':','/','%','='
-    from the manifest."""
-    if val is None:
-        return _HIVE_NULL
-    s = str(val)
-    if s == "":
-        return _HIVE_NULL
-    return "".join(
-        f"%{ord(c):02X}" if c in _HIVE_ESCAPE_CHARS else c for c in s
-    )
+from .upsert import _HIVE_NULL, _escape_part_val, merge_frames
 
 
 def _unescape_part_val(name: str) -> str | None:

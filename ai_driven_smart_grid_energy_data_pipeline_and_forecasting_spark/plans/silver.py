@@ -147,13 +147,19 @@ def incremental_silver_refresh(
     insert), so the result is row-identical to a full recompute — the
     test asserts exactly that equivalence.
 
-    IO profile: one small job collects the touched site list; bronze
-    is read pruned to those sites (partition filter), then to touched
-    hours (broadcast semi join). Silver's touched sites are rewritten as
-    kept ∪ recomputed through ``upsert._staged_overwrite`` (staged write,
-    rename publish: a crash leaves the old snapshot readable, a re-run
-    converges), and a touched site left with no rows leaves the table in
-    the same publish. On Delta this whole function is ``MERGE WHEN
+    IO profile: the bronze merge collects the touched site list (one
+    small collect, the only one) and hands it on with its row count;
+    bronze is then read pruned to those sites (partition filter), with
+    the schema of their footers read on the driver (no inference job),
+    then to touched hours (broadcast semi join). Silver's touched sites
+    are rewritten as kept ∪ recomputed through
+    ``upsert._staged_overwrite`` (staged write, rename publish: a crash
+    leaves the old snapshot readable, a re-run converges; the row count
+    rides the write), and a touched site left with no rows leaves the
+    table in the same publish. The delta is read by the collect, the
+    merge and the touched-hours joins: a caller whose delta is costly to
+    compute pins it first (``stream_to_silver`` does). An empty delta
+    writes nothing. On Delta this whole function is ``MERGE WHEN
     MATCHED/NOT MATCHED BY SOURCE DELETE`` — the call signature is the
     contract.
 
@@ -161,17 +167,19 @@ def incremental_silver_refresh(
     """
     import os
 
+    from ..fsutil import parquet_schema
     from ..operators.upsert import _clear_work_dirs, _staged_overwrite, merge_upsert
-    from ..operators.versioned import _escape_part_val
 
-    merge_upsert(spark, bronze_path, bronze_delta, keys=["site", "ts_utc"],
-                 order_col="ingested_at")
+    parts = merge_upsert(spark, bronze_path, bronze_delta, keys=["site", "ts_utc"],
+                         order_col="ingested_at").touched
+    if not parts:
+        return 0  # an empty delta touches no site and writes nothing
     hour = F.date_trunc("hour", F.col("ts_utc"))
     touched = bronze_delta.select("site", hour.alias("ts_utc")).distinct()
-    sites = [r.site for r in touched.select("site").distinct().collect()]
-    in_sites = F.col("site").isin(sites)
+    in_sites = F.col("site").isin([v[0] for v in parts.values()])
     cand = (
-        spark.read.parquet(bronze_path).filter(in_sites).withColumn("_g", hour)
+        spark.read.schema(parquet_schema(bronze_path, spark, dirs=list(parts)))
+        .parquet(bronze_path).filter(in_sites).withColumn("_g", hour)
         .join(F.broadcast(touched.withColumnRenamed("ts_utc", "_g")),
               ["site", "_g"], "left_semi")
         .drop("_g")
@@ -189,6 +197,5 @@ def incremental_silver_refresh(
         )
         out = kept.unionByName(out)
     return _staged_overwrite(
-        spark, silver_path, out, ["site"], recovered=True,
-        replaced=[f"site={_escape_part_val(s)}" for s in sites],
+        spark, silver_path, out, ["site"], recovered=True, replaced=list(parts),
     )

@@ -42,6 +42,17 @@ def read_payload_stream(
     )
 
 
+def _parse_once(batch: DataFrame, ingested_at) -> DataFrame:
+    """The micro-batch parsed to Bronze rows and pinned
+    (``localCheckpoint``): the sink's merge and refresh read the delta
+    several times (touched partitions, the merge, the touched hours),
+    and each read would otherwise re-run the JSON parse and its pivot
+    shuffle over the batch's files. An empty batch pins no rows and the
+    sink writes nothing. If the pin is lost the batch fails, and the
+    restarted query replays it into the idempotent sink."""
+    return payloads_to_bronze(batch, ingested_at).localCheckpoint()
+
+
 def stream_to_bronze(
     stream: DataFrame,
     bronze_path: str,
@@ -56,13 +67,10 @@ def stream_to_bronze(
     """
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        bronze = payloads_to_bronze(batch, ingested_at)
         merge_upsert(
             batch.sparkSession,
             bronze_path,
-            bronze,
+            _parse_once(batch, ingested_at),
             keys=["site", "ts_utc"],
             order_col="ingested_at",
         )
@@ -158,11 +166,9 @@ def stream_to_silver(
     from ..plans.silver import incremental_silver_refresh
 
     def sink(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         incremental_silver_refresh(
             batch.sparkSession, bronze_path, silver_path,
-            payloads_to_bronze(batch, ingested_at),
+            _parse_once(batch, ingested_at),
         )
 
     return (

@@ -3,7 +3,9 @@
 The driver's synthetic star schema (TESTDATA.md) is the harness input;
 the engine reads it exactly as it would read a production lakehouse:
 ``spark.read.parquet`` with Catalyst doing column pruning and predicate
-pushdown into the scan. Never infer-and-cache eagerly — plans stay lazy.
+pushdown into the scan. The schema is read from a footer on the driver
+(``fsutil.parquet_schema``), so opening a table runs no Spark job;
+never infer-and-cache data eagerly — plans stay lazy.
 """
 
 from __future__ import annotations
@@ -12,6 +14,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .fsutil import parquet_schema
 
 TABLE_NAMES = [
     "region",
@@ -63,7 +67,13 @@ def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     # session would silently shift every result away from the oracle.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    # The schema Spark would infer, read from the first data file's
+    # footer on the driver, so opening a table runs no job. This is
+    # table metadata, not cached results: every read still scans the
+    # files. No data file: let the plain read raise as it always has.
+    schema = parquet_schema(path, spark, first=True)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
     return _normalize_ts(df, _CANONICAL_TS_COLS.get(name, []))
 
 

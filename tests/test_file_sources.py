@@ -101,3 +101,40 @@ def test_load_table_normalizes_all_ts_encodings(spark, tmp_path):
         1_700_000_000,
         1_700_003_600,
     ]
+
+
+def test_load_table_opens_with_zero_jobs(spark, tmp_path, jobs_in):
+    # the schema comes from a footer read on the driver: opening a table
+    # runs no Spark job and yields the schema an inferring read would —
+    # a single file, a partitioned multi-file table with writer
+    # leftovers, and the nanos timestamp encoding
+    import pyarrow as pa
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.tables import (
+        _CANONICAL_TS_COLS,
+        _normalize_ts,
+        load_table,
+    )
+
+    sf_dir = _write_events_variant(tmp_path, "nanos", pa.int64())
+    spark.createDataFrame(
+        [("a", 1, 1.5), ("b", 2, None), ("b", 3, 2.5)],
+        "site string, id long, v double",
+    ).repartition(2).write.partitionBy("site").parquet(f"{sf_dir}/readings.parquet")
+    (tmp_path / "nanos" / "readings.parquet" / "_staging").mkdir()
+    for name in ("events", "readings"):
+        with jobs_in() as jobs:
+            df = load_table(spark, name, sf_dir)
+        assert jobs == [], name
+        want = _normalize_ts(
+            spark.read.parquet(f"{sf_dir}/{name}.parquet"),
+            _CANONICAL_TS_COLS.get(name, []),
+        )
+        assert df.schema == want.schema, name
+        assert sorted(df.collect()) == sorted(want.collect()), name
+
+    (tmp_path / "nanos" / "hollow.parquet").mkdir()
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        load_table(spark, "hollow", sf_dir)

@@ -200,3 +200,35 @@ def test_crash_before_silver_publish_keeps_old_snapshot(spark, paths, monkeypatc
     monkeypatch.undo()
     incremental_silver_refresh(spark, bronze_path, silver_path, delta)
     assert _silver(spark, silver_path) == _full(spark, bronze_path)
+
+
+@pytest.mark.parametrize(
+    "row, want",
+    [
+        (("alpha", ts(3), 130.0, 13.0, 6.5, None, ING1), 4),  # next hour
+        (("alpha", ts(1), 999.0, 19.0, 9.0, None, ING1), 3),  # correction
+        (("alpha", ts(2), -1.0, 12.0, 6.0, None, ING1), 2),  # invalidated hour
+    ],
+    ids=["next_hour", "correction", "invalidated"],
+)
+def test_one_row_refresh_returns_site_rows_in_few_jobs(spark, paths, jobs_in, row, want):
+    # a one-row refresh returns the rows now in the refreshed site, and
+    # pays only for its merge, recompute and two writes: no schema
+    # inference, no read-back count, one touched-site collect
+    bronze_path, silver_path = paths
+    delta = spark.createDataFrame([row], RAW_WEATHER)
+    with jobs_in() as jobs:
+        n = incremental_silver_refresh(spark, bronze_path, silver_path, delta)
+    assert n == want
+    got = _silver(spark, silver_path)
+    assert got == _full(spark, bronze_path)
+    assert n == sum(1 for site, _ in got if site == "alpha")
+    assert len(jobs) <= 11
+
+
+def test_empty_delta_writes_nothing(spark, tmp_path):
+    bronze_path = str(tmp_path / "bronze")
+    silver_path = str(tmp_path / "silver")
+    empty = spark.createDataFrame([], RAW_WEATHER)
+    assert incremental_silver_refresh(spark, bronze_path, silver_path, empty) == 0
+    assert not (tmp_path / "bronze").exists() and not (tmp_path / "silver").exists()

@@ -369,3 +369,24 @@ def test_stream_dedup_watermark_retention_sweep(spark, tmp_path, wm, dup_rows):
     assert len(rows) == dup_rows, (wm, rows)
     if dup_rows == 1:
         assert rows[0].payload == "first"
+
+
+def test_stream_empty_batch_writes_nothing(spark, tmp_path):
+    # the sink pins the parsed batch instead of probing it with
+    # isEmpty(): an empty payload file must still write no table
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.streaming.ingest_stream import (
+        stream_to_silver,
+    )
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    (drop / "empty.json").write_text("")
+    bronze, silver = tmp_path / "bronze", tmp_path / "silver"
+    for start in (
+        lambda s: stream_to_bronze(s, str(bronze), str(tmp_path / "ck_b")),
+        lambda s: stream_to_silver(s, str(bronze), str(silver), str(tmp_path / "ck_s")),
+    ):
+        q = start(read_payload_stream(spark, str(drop)))
+        q.awaitTermination(60)
+        assert q.exception() is None
+    assert not bronze.exists() and not silver.exists()

@@ -416,3 +416,94 @@ def test_crash_mid_publish_resumes_whole_batch(spark, tmp_path):
     assert got[("c", 0)][0] == 5.0
     assert not os.path.exists(os.path.join(target, "_staging"))
     assert not os.path.exists(os.path.join(target, "_trash"))
+
+
+def test_merge_into_directory_without_data_files(spark, target):
+    # an existing table directory with no data file (an empty first
+    # merge, or a directory made by hand) has no footer to take a schema
+    # from: the next merge must treat it as a new table, not fail with
+    # UNABLE_TO_INFER_SCHEMA
+    import os
+
+    empty = spark.createDataFrame([], SCHEMA)
+    assert merge_upsert(spark, target, empty, keys=["site", "ts_utc"], order_col="ingested_at") == 0
+    os.makedirs(target, exist_ok=True)
+    rows = spark.createDataFrame([("a", ts(0), 1.0, ing(0)), ("b", ts(1), 2.0, ing(0))], SCHEMA)
+    assert merge_upsert(spark, target, rows, keys=["site", "ts_utc"], order_col="ingested_at") == 2
+    assert {k: v[0] for k, v in read_all(spark, target).items()} == {("a", 0): 1.0, ("b", 1): 2.0}
+
+
+def _returns_within(fn, seconds=120):
+    """fn() run on a daemon thread: its result, or a failure if it has
+    not returned within ``seconds`` (a blocked count read never does)."""
+    import threading
+
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except BaseException as e:  # re-raised on the test thread
+            out["error"] = e
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    assert not t.is_alive(), "call did not return"
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
+
+
+@pytest.mark.parametrize(
+    "rows, replaced, want",
+    [
+        ([("a", ts(0), 1.0, ing(0)), ("a", ts(1), 2.0, ing(0)), ("c", ts(0), 3.0, ing(0))], (), 3),
+        ([], (), 0),
+        ([], ("site=a",), 0),
+    ],
+    ids=["rows", "zero_rows", "zero_rows_replaced"],
+)
+def test_staged_overwrite_counts_the_published_rows(spark, target, rows, replaced, want):
+    # the count rides the write as an Observation; a zero-row write may
+    # deliver no metrics row, so it must return 0 without reading one
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.operators.upsert import (
+        _staged_overwrite,
+    )
+
+    base = spark.createDataFrame([("a", ts(5), 9.0, ing(0)), ("b", ts(5), 8.0, ing(0))], SCHEMA)
+    merge_upsert(spark, target, base, keys=["site", "ts_utc"], order_col="ingested_at")
+    df = spark.createDataFrame(rows, SCHEMA)
+    n = _returns_within(lambda: _staged_overwrite(spark, target, df, ["site"], replaced=replaced))
+    assert n == want
+    got = read_all(spark, target)
+    sites = {r[0] for r in rows} | {p.split("=")[1] for p in replaced}
+    assert len([k for k in got if k[0] in sites]) == want
+    assert got[("b", 5)][0] == 8.0  # neither written nor replaced
+
+
+def test_parquet_schema_merges_footers_of_the_named_dirs(spark, tmp_path):
+    # the driver-side footer read: the merged schema of the named
+    # partition dirs (an evolved one included), writer leftovers
+    # skipped, None where there is no data file
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.fsutil import parquet_schema
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame([("a", 1, 1.0)], "site string, ts int, v double").write.partitionBy(
+        "site").parquet(path)
+    spark.createDataFrame([("b", 2, 2.0, 0.5)], "site string, ts int, v double, q double").write.mode(
+        "append").partitionBy("site").parquet(path)
+    spark.createDataFrame([("x", "junk")], "site string, z string").write.partitionBy(
+        "site").parquet(f"{path}/_staging/data")
+
+    def names(schema):
+        return None if schema is None else schema.fieldNames()
+
+    assert names(parquet_schema(path, spark, dirs=["site=a"])) == ["ts", "v"]
+    assert names(parquet_schema(path, spark, dirs=["site=a", "site=b"])) == ["ts", "v", "q"]
+    assert names(parquet_schema(path, spark)) == ["ts", "v", "q"]
+    assert names(parquet_schema(path, spark, first=True)) in (["ts", "v"], ["ts", "v", "q"])
+    assert parquet_schema(path, spark, dirs=["site=zzz"]) is None
+    assert parquet_schema(str(tmp_path / "absent"), spark) is None
+    assert parquet_schema(path, spark) == spark.read.option("mergeSchema", "true").parquet(
+        path).drop("site").schema
