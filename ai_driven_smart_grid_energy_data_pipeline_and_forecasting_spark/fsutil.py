@@ -18,9 +18,11 @@ without atomic rename keep the documented manifest-CAS caveat from
 ``operators/versioned.py``; the marker/pointer PROTOCOL is unchanged,
 only the IO layer widened.
 
-``parquet_schema`` reads a table's schema from its Parquet footers
-through the same FileSystem API, so opening or merging into a table
-costs no schema-inference job.
+``data_files`` is the one listing of a table's files: a single
+recursive walk under Spark's hidden-name rule (``_hidden``). The
+partition-replace writer, its crash recovery and compaction all read it,
+and ``parquet_schema`` reads the footers of the same files, so opening
+or merging into a table costs no schema-inference job.
 
 Everything here is driver-side, a handful of py4j calls per micro-batch
 — never on the executor hot path.
@@ -153,17 +155,27 @@ def _hidden(segment: str) -> bool:
 
 
 def _data_files(fs, root_uri: str, p):
-    """File statuses of the data files under Hadoop path ``p``
-    (recursive), by ``_hidden`` on their path relative to the table
-    root."""
+    """(path relative to the table root, file status) of each data file
+    under Hadoop path ``p`` (recursive), by ``_hidden`` on that relative
+    path."""
     if not fs.exists(p):
         return
     it = fs.listFiles(p, True)
     while it.hasNext():
         st = it.next()
-        rel = st.getPath().toUri().getPath()[len(root_uri):]
-        if not any(_hidden(seg) for seg in rel.split("/") if seg):
-            yield st
+        rel = st.getPath().toUri().getPath()[len(root_uri):].strip("/")
+        if not any(_hidden(seg) for seg in rel.split("/")):
+            yield rel, st
+
+
+def data_files(path: str, spark: SparkSession | None = None) -> dict[str, int]:
+    """{path relative to ``path``: bytes} of every data file under
+    ``path`` — the files a Spark read of ``path`` sees, from one
+    recursive listing. Empty when ``path`` is absent or holds none."""
+    spark = _require_spark(spark)
+    _, fs, root = _fs_path(spark, path)
+    root_uri = fs.makeQualified(root).toUri().getPath()
+    return {rel: st.getLen() for rel, st in _data_files(fs, root_uri, root)}
 
 
 def parquet_schema(
@@ -201,7 +213,7 @@ def parquet_schema(
         [root] if dirs is None
         else [getattr(jvm, "org.apache.hadoop.fs.Path")(join(path, d)) for d in dirs]
     )
-    files = (st for b in bases for st in _data_files(fs, root_uri, b))
+    files = (st for b in bases for _, st in _data_files(fs, root_uri, b))
     merged = None
     for st in islice(files, 1) if first else files:
         fp = st.getPath()

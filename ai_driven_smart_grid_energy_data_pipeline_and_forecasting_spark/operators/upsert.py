@@ -91,39 +91,10 @@ def merge_frames(
     )
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the Hadoop FS API — the same
-    code paths work on local disk, HDFS, and S3A mounts."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
-
-
-def _leaf_dirs(fs, jvm, root: str) -> set[str]:
-    """Relative paths of every directory under ``root`` that directly
-    contains a file (one recursive listing)."""
-    HPath = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(HPath(root)):
-        return set()
-    root_uri = fs.makeQualified(HPath(root)).toUri().getPath()
-    leaves: set[str] = set()
-    it = fs.listFiles(HPath(root), True)
-    while it.hasNext():
-        fp = it.next().getPath().getParent().toUri().getPath()
-        leaves.add(fp[len(root_uri):].strip("/"))
-    return leaves
-
-
-def _has_parquet_files(fs, jvm, root: str) -> bool:
-    """True iff any ``.parquet`` file exists under ``root``."""
-    HPath = jvm.org.apache.hadoop.fs.Path
-    if not fs.exists(HPath(root)):
-        return False
-    it = fs.listFiles(HPath(root), True)
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            return True
-    return False
+def _leaf_dirs(spark: SparkSession, root: str) -> set[str]:
+    """Relative paths of the directories under ``root`` that directly
+    hold a data file (``fsutil.data_files``: one recursive listing)."""
+    return {rel.rpartition("/")[0] for rel in fsutil.data_files(root, spark)}
 
 
 def _rename_or_die(fs, src, dst) -> None:
@@ -136,6 +107,30 @@ def _rename_or_die(fs, src, dst) -> None:
             f"recovery rename failed: {src} -> {dst}; refusing to clear "
             "work dirs (staged/trash bytes may be the only copy)"
         )
+
+
+def _swap(fs, HPath, path: str, leaves: set[str], replaced: Sequence[str] = ()) -> None:
+    """Per leaf partition dir, rename live→``_trash`` then staged→live:
+    two metadata ops, no data movement on rename-capable filesystems.
+    A ``replaced`` leaf with no staged twin lost every row: its live dir
+    goes to ``_trash`` and nothing replaces it."""
+    for rel in sorted(leaves | set(replaced)):
+        live = HPath(f"{path}/{rel}")
+        if fs.exists(live):
+            trash = HPath(f"{path}/_trash/{rel}")
+            fs.mkdirs(trash.getParent())
+            _rename_or_die(fs, live, trash)
+        if rel in leaves:
+            fs.mkdirs(live.getParent())
+            _rename_or_die(fs, HPath(f"{path}/_staging/data/{rel}"), live)
+
+
+def _drop_work_dirs(fs, HPath, path: str) -> None:
+    # _trash first: recovery rolls _trash back only while _staging
+    # exists, so a crash between the two deletes must not leave a
+    # _trash that still holds partitions the publish removed
+    for d in ("_trash", "_staging"):
+        fs.delete(HPath(f"{path}/{d}"), True)
 
 
 def _clear_work_dirs(spark: SparkSession, path: str) -> None:
@@ -152,72 +147,40 @@ def _clear_work_dirs(spark: SparkSession, path: str) -> None:
     commit instead of applying it partially (a crash after site=a's
     rename but before site=b's must not yield a table with new-a /
     old-b and site=b's durable staged update deleted). If staging is
-    INCOMPLETE, trash-stranded leaves roll back (trash→live). Only
-    then are the work dirs deleted — staged/trash bytes are never the
-    only copy at the moment of deletion. A crash strictly before the
-    staged write finished leaves no ``_SUCCESS`` and no ``_trash``, so
-    that path is a plain delete as before."""
-    fs, jvm = _hadoop_fs(spark, path)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    trash_root = f"{path}/_trash"
+    INCOMPLETE, trash-stranded leaves roll back (trash→live); a
+    ``_trash`` without ``_staging`` is what a finished publish leaves
+    while deleting its work dirs, so it is not rolled back. Only then
+    are the work dirs deleted — staged/trash bytes are never the only
+    copy at the moment of deletion. Every writer calls this before it
+    plans its reads: the renames move the dirs a read plan would list."""
+    jvm, fs, _ = fsutil._fs_path(spark, path)
+    HPath = getattr(jvm, "org.apache.hadoop.fs.Path")
     staged_root = f"{path}/_staging/data"
-    staged_complete = fs.exists(HPath(f"{staged_root}/_SUCCESS"))
-    if staged_complete:
+    if fs.exists(HPath(f"{staged_root}/_SUCCESS")):
         # roll the whole publish forward: any staged leaf still present
         # was not yet renamed into place
-        for rel in sorted(_leaf_dirs(fs, jvm, staged_root)):
-            if "=" not in rel:
-                continue  # the _SUCCESS marker at the staged root
-            live = HPath(f"{path}/{rel}")
-            if fs.exists(live):
-                trash = HPath(f"{trash_root}/{rel}")
-                fs.mkdirs(trash.getParent())
-                _rename_or_die(fs, live, trash)
-            fs.mkdirs(live.getParent())
-            _rename_or_die(fs, HPath(f"{staged_root}/{rel}"), live)
-    else:
-        for rel in sorted(_leaf_dirs(fs, jvm, trash_root)):
+        _swap(fs, HPath, path, _leaf_dirs(spark, staged_root))
+    elif fs.exists(HPath(f"{path}/_staging")):
+        for rel in sorted(_leaf_dirs(spark, f"{path}/_trash")):
             live = HPath(f"{path}/{rel}")
             if fs.exists(live):
                 continue  # this leaf's publish completed; trash is stale
             fs.mkdirs(live.getParent())
-            _rename_or_die(fs, HPath(f"{trash_root}/{rel}"), live)  # roll back
-    for d in (f"{path}/_staging", trash_root):
-        p = HPath(d)
-        if fs.exists(p):
-            fs.delete(p, True)
+            _rename_or_die(fs, HPath(f"{path}/_trash/{rel}"), live)  # roll back
+    _drop_work_dirs(fs, HPath, path)
 
 
 def _publish_staged(
-    spark: SparkSession, path: str, n_partition_cols: int,
-    replaced: Sequence[str] = (),
-) -> list[str]:
-    """Swap staged partition directories into the live tree: per leaf
-    partition, rename live→``_trash`` then staged→live (two metadata
-    ops, no data movement on rename-capable filesystems). A
-    ``replaced`` leaf with no staged twin lost every row: its live dir
-    goes to ``_trash`` and nothing replaces it. Split out as a seam so
-    the crash-injection test can kill between write and publish.
-    Returns the published partition dir names."""
-    fs, jvm = _hadoop_fs(spark, path)
-    HPath = jvm.org.apache.hadoop.fs.Path
-    staged_root = f"{path}/_staging/data"
-    leaves = {
-        rel
-        for rel in _leaf_dirs(fs, jvm, staged_root)
-        if rel.count("=") >= n_partition_cols
-    }
-    for rel in sorted(leaves | set(replaced)):
-        live = HPath(f"{path}/{rel}")
-        if fs.exists(live):
-            trash = HPath(f"{path}/_trash/{rel}")
-            fs.mkdirs(trash.getParent())
-            _rename_or_die(fs, live, trash)
-        if rel in leaves:
-            fs.mkdirs(live.getParent())
-            _rename_or_die(fs, HPath(f"{staged_root}/{rel}"), live)
-    _clear_work_dirs(spark, path)
-    return sorted(leaves)
+    spark: SparkSession, path: str, leaves: set[str], replaced: Sequence[str] = (),
+) -> None:
+    """Swap the staged partition dirs ``leaves`` into the live tree and
+    remove the ``replaced`` ones with no staged twin (``_swap``), then
+    delete the work dirs. Split out as a seam so the crash-injection
+    test can kill between write and publish."""
+    jvm, fs, _ = fsutil._fs_path(spark, path)
+    HPath = getattr(jvm, "org.apache.hadoop.fs.Path")
+    _swap(fs, HPath, path, leaves, replaced)
+    _drop_work_dirs(fs, HPath, path)
 
 
 def _staged_overwrite(
@@ -225,7 +188,6 @@ def _staged_overwrite(
     path: str,
     df: DataFrame,
     partition_by: Sequence[str],
-    recovered: bool = False,
     replaced: Sequence[str] = (),
 ) -> int:
     """Crash-safe partition overwrite (VERDICT r2 #3 / r3 #6): write the
@@ -233,39 +195,36 @@ def _staged_overwrite(
     Parquet readers of ``path`` never see it — then publish each staged
     partition with two directory renames. A crash anywhere before
     publish leaves the previous snapshot fully readable; the next
-    writer clears the stale staging. The residual window is the rename
-    loop itself — pure metadata ops; a transactional format (Delta/
-    Iceberg) shrinks that to one manifest CAS, which is the production
-    deployment's answer (see class docstring). Returns rows written,
-    counted by an ``Observation`` on the written frame: the count rides
-    the write job itself, so no job reads the staged files back.
+    writer's ``_clear_work_dirs``, which every caller runs before it
+    plans its reads, clears the stale staging. The residual window is
+    the rename loop itself — pure metadata ops; a transactional format
+    (Delta/Iceberg) shrinks that to one manifest CAS, which is the
+    production deployment's answer (see class docstring). Returns rows
+    written, counted by an ``Observation`` on the written frame: the
+    count rides the write job itself, so no job reads the staged files
+    back.
 
     Writing to staging instead of overwriting in place also removes the
     read-own-input hazard, so callers no longer need the eager
     ``localCheckpoint`` materialization this module used to carry — one
     full pass over the merge output saved per call. ``replaced`` leaf
     dirs without rows in ``df`` are removed (``_publish_staged``)."""
-    # callers that already ran recovery at entry (merge_upsert,
-    # compact_partitions — they must, for read-plan freshness) skip the
-    # duplicate multi-request FS probe (review r5)
-    if not recovered:
-        _clear_work_dirs(spark, path)
     staged = f"{path}/_staging/data"
     obs = Observation()
     df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
         "overwrite"
     ).partitionBy(*partition_by).parquet(staged)
+    leaves = _leaf_dirs(spark, staged)
     # A zero-row df stages only _SUCCESS (ADVICE r4), and its write may
     # deliver no observed-metrics row, so the count is read only when a
     # data file was staged; the publish then only removes ``replaced``
     # dirs — a no-op for a plain empty batch, as the module contract
     # (re-run idempotency) requires.
-    fs, jvm = _hadoop_fs(spark, path)
     n = 0
-    if _has_parquet_files(fs, jvm, staged):
+    if leaves:
         row = obs._jo.getRow()
         n = row.getLong(0) if row.size() else 0
-    _publish_staged(spark, path, len(partition_by), replaced)
+    _publish_staged(spark, path, leaves, replaced)
     return n
 
 
@@ -381,40 +340,15 @@ def merge_upsert(
                 .filter(_in_partitions(partition_by, parts.values()))
             )
         out = merge_frames(existing, updates, keys, order_col, allow_schema_evolution)
-        n = _staged_overwrite(spark, target_path, out, partition_by, recovered=True)
+        n = _staged_overwrite(spark, target_path, out, partition_by)
     written = _Written(n)
     written.touched = parts
     return written
 
 
-def _file_sizes(spark: SparkSession, path: str) -> dict[str, int]:
-    """One recursive Hadoop-FileSystem listing → {decoded URI path of
-    each parquet file: bytes}. Goes through the FS API, not ``os``, so
-    the same code paths work on HDFS/S3A mounts, and the whole table
-    costs a single metadata pass instead of one listing per partition.
-    Underscore/dot-prefixed work dirs (``_staging``, ``_trash``) are
-    excluded, matching what Parquet readers see."""
-    fs, jvm = _hadoop_fs(spark, path)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(path)):
-        return {}
-    root = fs.makeQualified(jvm.org.apache.hadoop.fs.Path(path)).toUri().getPath()
-    it = fs.listFiles(jvm.org.apache.hadoop.fs.Path(path), True)
-    sizes: dict[str, int] = {}
-    while it.hasNext():
-        st = it.next()
-        fp = st.getPath().toUri().getPath()
-        rel = fp[len(root):].lstrip("/")
-        if not fp.endswith(".parquet") or any(
-            seg.startswith(("_", ".")) for seg in rel.split("/")
-        ):
-            continue
-        sizes[fp] = st.getLen()
-    return sizes
-
-
 #: Strips "scheme:" and an optional "//authority" from a URI, leaving
 #: the absolute filesystem path — the form ``Path.toUri().getPath()``
-#: returns, so the two sides of the file-size join agree.
+#: returns, which the file-size join's keys are built from.
 _URI_SCHEME_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*:(//[^/]*)?"
 
 
@@ -456,11 +390,13 @@ def compact_partitions(
     same."""
     # recover first, for the same plan-staleness reason as merge_upsert
     _clear_work_dirs(spark, path)
-    sizes = _file_sizes(spark, path)
+    sizes = fsutil.data_files(path, spark)
     if not sizes:
         return {}
+    _, fs, root = fsutil._fs_path(spark, path)
+    root_uri = fs.makeQualified(root).toUri().getPath()
     files_df = spark.createDataFrame(
-        list(sizes.items()), "_path string, _bytes long"
+        [(f"{root_uri}/{rel}", n) for rel, n in sizes.items()], "_path string, _bytes long"
     )
 
     infer_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
@@ -468,7 +404,7 @@ def compact_partitions(
     spark.conf.set(infer_key, "false")
     try:
         # url_decode is form-decoding ('+' → space), but the Hadoop-side
-        # keys in _file_sizes keep a literal '+' (ADVICE r4): pre-encode
+        # keys from data_files keep a literal '+' (ADVICE r4): pre-encode
         # '+' as %2B so only percent-escapes decode and '+' round-trips.
         table = spark.read.parquet(path).withColumn(
             "_path",
@@ -517,12 +453,11 @@ def compact_partitions(
             .repartition(total, *partition_by, "_b")
             .drop("_b", "_nf", "_path")
         )
-        _staged_overwrite(spark, path, out, partition_by, recovered=True)
+        _staged_overwrite(spark, path, out, partition_by)
     finally:
         spark.conf.set(infer_key, infer_prev)
-    null_label = "__HIVE_DEFAULT_PARTITION__"
     return {
-        "/".join(null_label if r[k] is None else str(r[k]) for k in partition_by):
+        "/".join(_HIVE_NULL if r[k] is None else str(r[k]) for k in partition_by):
             r["_nf"]
         for r in sorted(
             nf_rows, key=lambda r: tuple(str(r[k]) for k in partition_by)

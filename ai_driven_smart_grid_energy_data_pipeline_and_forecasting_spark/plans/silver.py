@@ -165,9 +165,7 @@ def incremental_silver_refresh(
 
     Returns rows now present in the refreshed sites.
     """
-    import os
-
-    from ..fsutil import parquet_schema
+    from ..fsutil import exists, parquet_schema
     from ..operators.upsert import _clear_work_dirs, _staged_overwrite, merge_upsert
 
     parts = merge_upsert(spark, bronze_path, bronze_delta, keys=["site", "ts_utc"],
@@ -188,7 +186,7 @@ def incremental_silver_refresh(
     # recover a crashed writer before planning the silver read (its
     # roll-forward renames the partition dirs that read would list)
     _clear_work_dirs(spark, silver_path)
-    if os.path.exists(silver_path):
+    if exists(silver_path, spark):
         # declared schema: a directory left empty by an all-invalid first
         # refresh has no parquet footer to infer one from
         kept = (
@@ -196,6 +194,4 @@ def incremental_silver_refresh(
             .join(F.broadcast(touched), ["site", "ts_utc"], "left_anti")
         )
         out = kept.unionByName(out)
-    return _staged_overwrite(
-        spark, silver_path, out, ["site"], recovered=True, replaced=list(parts),
-    )
+    return _staged_overwrite(spark, silver_path, out, ["site"], replaced=list(parts))

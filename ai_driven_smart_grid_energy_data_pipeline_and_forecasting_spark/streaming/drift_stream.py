@@ -14,10 +14,10 @@ rewrites its own ``batch_id=N`` partition byte-identically —
 per-partition replacement IS the idempotency here, no pointer needed
 (contrast ``agg_stream``, whose state is cumulative). The replacement
 goes through ``upsert._staged_overwrite``, the one partition-replace
-path every package writer shares (staged write, rename publish, crash
-recovery by the next writer), so a polling reader never sees a
-partition half-written — a missing or partial drift row is a silently
-muted alarm. One writer per report directory, as for every table
+path every package writer shares (staged write, rename publish; each
+batch first recovers a crashed writer with ``_clear_work_dirs``), so a
+polling reader never sees a partition half-written — a missing or
+partial drift row is a silently muted alarm. One writer per report directory, as for every table
 (SCALE.md "Write concurrency"). Reference rates are recomputed per
 batch from the (usually small, pre-aggregated) reference frame; cache
 it for long streams.
@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.drift import categorical_drift
-from ..operators.upsert import _staged_overwrite
+from ..operators.upsert import _clear_work_dirs, _staged_overwrite
 from .agg_stream import bind_checkpoint
 
 
@@ -53,10 +53,11 @@ def stream_drift_monitor(
     bind_checkpoint(report_path, checkpoint)
 
     def sink(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        _clear_work_dirs(spark, report_path)
         rep = categorical_drift(reference, batch, cat_col, threshold=threshold)
         _staged_overwrite(
-            batch.sparkSession, report_path,
-            rep.withColumn("batch_id", F.lit(batch_id)), ["batch_id"],
+            spark, report_path, rep.withColumn("batch_id", F.lit(batch_id)), ["batch_id"]
         )
 
     return (

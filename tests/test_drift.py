@@ -109,6 +109,12 @@ def test_stream_drift_monitor_reports_per_batch(spark, tmp_path):
         str(tmp_path / "rep"), str(tmp_path / "ckpt"), threshold=0.05,
     )
     q.awaitTermination(60)
+    # leave a crashed writer's state: an unfinished staged write, and
+    # batch 0's report moved to _trash; batch 1's sink must recover it
+    rep = tmp_path / "rep"
+    os.makedirs(rep / "_staging" / "data" / "batch_id=1")
+    (rep / "_staging" / "data" / "batch_id=1" / "part-00000.parquet").write_bytes(b"torn")
+    os.renames(rep / "batch_id=0", rep / "_trash" / "batch_id=0")
     drop("c1.json", ["a"] * 2 + ["zz"] * 8)
     q2 = stream_drift_monitor(
         stream(), reference, "cat",
@@ -122,6 +128,7 @@ def test_stream_drift_monitor_reports_per_batch(spark, tmp_path):
     assert not b0["a"].drifted and not b0["b"].drifted
     assert b1["zz"].drifted and b1["zz"].ref_n == 0  # new category flagged
     assert b1["b"].drifted and b1["b"].cur_n == 0  # vanished category flagged
+    assert not (rep / "_staging").exists() and not (rep / "_trash").exists()
     # lineage binding: a fresh checkpoint into the same report dir refuses
     import pytest as _pytest
 

@@ -141,6 +141,26 @@ def test_new_site_and_new_hour_insert(spark, paths):
     assert key("delta", 4) in got and key("beta", 5) in got
 
 
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+def test_refresh_keeps_untouched_hours_of_a_touched_site(spark, tmp_path, as_uri):
+    # Silver's existence check goes through the Hadoop FileSystem: a URI
+    # that reads as absent would rewrite alpha from its touched hour
+    # alone and drop hours 0 and 2
+    bronze_path, silver_path = (
+        p.as_uri() if as_uri else str(p) for p in (tmp_path / "bronze", tmp_path / "silver")
+    )
+    base = spark.createDataFrame(_base_rows(), RAW_WEATHER)
+    merge_upsert(spark, bronze_path, base, keys=["site", "ts_utc"], order_col="ingested_at")
+    clean_to_hourly(spark.read.parquet(bronze_path)).write.partitionBy("site").parquet(silver_path)
+    delta = spark.createDataFrame([("alpha", ts(1), 999.0, 19.0, 9.0, None, ING1)], RAW_WEATHER)
+    assert incremental_silver_refresh(spark, bronze_path, silver_path, delta) == 3
+    got = _silver(spark, silver_path)
+    assert got == _full(spark, bronze_path)
+    assert sorted((k[1].hour, v[0]) for k, v in got.items() if k[0] == "alpha") == [
+        (0, 100.0), (1, 999.0), (2, 120.0)
+    ]
+
+
 def test_refresh_after_all_invalid_first_refresh(spark, tmp_path):
     # a first refresh whose only row is invalid leaves an empty silver
     # directory; the next refresh must still read it (no parquet file

@@ -231,6 +231,24 @@ def test_crash_mid_publish_rolls_back_without_complete_staging(spark, tmp_path):
     assert not os.path.isdir(os.path.join(target, "_trash"))
 
 
+def test_crash_after_publish_keeps_removed_partition_removed(spark, tmp_path):
+    # A publish that removed site=b (a replaced leaf with no staged rows)
+    # crashed while deleting its work dirs, after _staging was gone: the
+    # _trash left behind is finished work, not a publish to roll back.
+    import os
+
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.operators import upsert
+
+    target = str(tmp_path / "bronze")
+    base = spark.createDataFrame([("a", ts(0), 1.0, ing(0)), ("b", ts(0), 2.0, ing(0))], SCHEMA)
+    upsert.merge_upsert(spark, target, base, keys=["site", "ts_utc"], order_col="ingested_at")
+    os.renames(os.path.join(target, "site=b"), os.path.join(target, "_trash", "site=b"))
+
+    upsert._clear_work_dirs(spark, target)
+    assert sorted({site for site, _ in read_all(spark, target)}) == ["a"]
+    assert not os.path.isdir(os.path.join(target, "_trash"))
+
+
 def test_empty_update_batch_is_a_noop(spark, target):
     # ADVICE r4 medium: a zero-row update stages only _SUCCESS, and the
     # staged read-back threw UNABLE_TO_INFER_SCHEMA. Must be a no-op
@@ -267,6 +285,31 @@ def test_compact_partition_value_with_plus_sign(spark, tmp_path):
     n = len([f for f in os.listdir(os.path.join(path, "site=a+b")) if f.endswith(".parquet")])
     assert n == 1
     assert {(r.site, r.v) for r in spark.read.parquet(path).collect()} == before
+
+
+def test_compact_covers_underscore_partition_dirs(spark, tmp_path):
+    # Spark reads a "_p=x" dir: only "_"-prefixed names WITHOUT "=" are
+    # hidden. Compaction lists files by the same rule, so it rewrites
+    # every partition a read returns.
+    import os
+
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.operators.upsert import (
+        compact_partitions,
+    )
+
+    path = str(tmp_path / "t")
+    for i in range(3):  # one file per partition per append
+        spark.createDataFrame([("x", float(i)), ("y", 10.0 + i)], "_p string, v double").coalesce(
+            1).write.mode("append").partitionBy("_p").parquet(path)
+
+    def n_files(p):
+        return len([f for f in os.listdir(os.path.join(path, f"_p={p}")) if f.endswith(".parquet")])
+
+    assert n_files("x") == n_files("y") == 3
+    before = sorted((r._p, r.v) for r in spark.read.parquet(path).collect())
+    assert compact_partitions(spark, path, partition_by=("_p",)) == {"x": 1, "y": 1}
+    assert n_files("x") == n_files("y") == 1
+    assert sorted((r._p, r.v) for r in spark.read.parquet(path).collect()) == before
 
 
 def test_merge_and_compact_with_nested_partitions(spark, tmp_path):
