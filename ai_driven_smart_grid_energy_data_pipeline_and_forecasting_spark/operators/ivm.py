@@ -2,7 +2,7 @@
 
 The aggregate side of IVM already exists (`aggstate.aggregate_state`
 merge ≡ recompute; `plans.silver.incremental_silver_refresh` touched-
-group replace).  This module adds the JOIN delta rule for insert-only
+site replace).  This module adds the JOIN delta rule for insert-only
 updates (Blakeley, Larson & Tompa, SIGMOD 1986; the bag-algebra form
 in Griffin & Libkin, SIGMOD 1995): for a view M = A ⋈ B and insert
 deltas ΔA, ΔB,

@@ -28,11 +28,19 @@ CRITICAL_COLS = ["ghi_wm2", "t2m_c", "ws10_mps"]
 
 
 def clean_to_hourly(bronze: DataFrame) -> DataFrame:
-    """Full Silver transform; returns FACT_WEATHER-shaped rows.
+    """Full Silver transform; returns FACT_WEATHER-shaped rows in
+    ``(site, ts_utc)`` order.
 
     Input: RAW_WEATHER-shaped DataFrame (already range/site filtered by
     the caller — predicates stay outside so they push into the scan).
     """
+    return _clean(bronze).orderBy("site", "ts_utc")
+
+
+def _clean(bronze: DataFrame) -> DataFrame:
+    """``clean_to_hourly`` without its global sort. Every output row
+    depends on its own ``(site, hour)`` group alone, so the clean of a
+    site's Bronze rows is that site's Silver."""
     hourly = bronze.withColumn("ts_hour", F.date_trunc("hour", F.col("ts_utc")))
     validated = nullify_out_of_range(hourly, WEATHER_RULES)
     complete = drop_any_null(validated, CRITICAL_COLS)
@@ -49,9 +57,7 @@ def clean_to_hourly(bronze: DataFrame) -> DataFrame:
     # W3 write-path assertion: hourly alignment is guaranteed by
     # date_trunc, but keep the reference's explicit guard as a filter so
     # a future non-truncating path can't write misaligned rows.
-    return fact.filter(
-        (F.minute("ts_utc") == 0) & (F.second("ts_utc") == 0)
-    ).orderBy("site", "ts_utc")
+    return fact.filter((F.minute("ts_utc") == 0) & (F.second("ts_utc") == 0))
 
 
 def silver_drop_reasons(bronze: DataFrame) -> DataFrame:
@@ -134,30 +140,33 @@ def incremental_silver_refresh(
     bronze_delta: DataFrame,
 ) -> int:
     """Incremental view maintenance for the silver table: merge a
-    bronze delta, then recompute ONLY the ``(site, hour)`` groups the
-    delta touches — the 100 TB alternative to re-running the full
-    clean (a delta touching 0.01% of groups reads/writes 0.01% of the
-    table, modulo partition granularity). This is the one Silver write
-    path; ``stream_to_silver`` calls it once per micro-batch.
+    bronze delta, then recompute ONLY the sites the delta touches — the
+    100 TB alternative to re-running the full clean (a delta touching
+    0.01% of the sites reads/writes 0.01% of the table). This is the one
+    Silver write path; ``stream_to_silver`` calls it once per
+    micro-batch.
 
     Semantics a plain keyed merge cannot give: group *deletion*. If an
     update invalidates every surviving row of an hour (range rules /
     critical nulls / recency dedup), that hour must DISAPPEAR from
-    silver; here each touched group is replaced wholesale (delete-then-
-    insert), so the result is row-identical to a full recompute — the
-    test asserts exactly that equivalence.
+    silver; here each touched site is replaced wholesale by the clean of
+    its merged Bronze rows (every Silver row depends on its own
+    ``(site, hour)`` group alone), so the result is row-identical to a
+    full recompute — the tests assert exactly that equivalence.
 
     IO profile: the bronze merge collects the touched site list (one
     small collect, the only one) and hands it on with its row count;
-    bronze is then read pruned to those sites (partition filter), with
-    the schema of their footers read on the driver (no inference job),
-    then to touched hours (broadcast semi join). Silver's touched sites
-    are rewritten as kept ∪ recomputed through
-    ``upsert._staged_overwrite`` (staged write, rename publish: a crash
-    leaves the old snapshot readable, a re-run converges; the row count
-    rides the write), and a touched site left with no rows leaves the
-    table in the same publish. The delta is read by the collect, the
-    merge and the touched-hours joins: a caller whose delta is costly to
+    the touched sites' Bronze partitions, which the merge has just
+    rewritten, are then read back (partition filter, with the schema of
+    their footers read on the driver: no inference job) and cleaned.
+    Silver is never read. The clean runs in one ``site`` exchange: the
+    per-(site, hour) dedup reuses it, the rows are sorted within their
+    partitions, and each site leaves one file. Silver's touched sites
+    are replaced through ``upsert._staged_overwrite`` (staged write,
+    rename publish: a crash leaves the old snapshot readable, a re-run
+    converges; the row count rides the write), and a touched site left
+    with no rows leaves the table in the same publish. The delta is read
+    by the collect and the merge: a caller whose delta is costly to
     compute pins it first (``stream_to_silver`` does). An empty delta
     writes nothing. On Delta this whole function is ``MERGE WHEN
     MATCHED/NOT MATCHED BY SOURCE DELETE`` — the call signature is the
@@ -165,33 +174,21 @@ def incremental_silver_refresh(
 
     Returns rows now present in the refreshed sites.
     """
-    from ..fsutil import exists, parquet_schema
-    from ..operators.upsert import _clear_work_dirs, _staged_overwrite, merge_upsert
+    from ..fsutil import parquet_schema
+    from ..operators.upsert import (
+        _clear_work_dirs, _in_partitions, _staged_overwrite, merge_upsert,
+    )
 
     parts = merge_upsert(spark, bronze_path, bronze_delta, keys=["site", "ts_utc"],
                          order_col="ingested_at").touched
     if not parts:
         return 0  # an empty delta touches no site and writes nothing
-    hour = F.date_trunc("hour", F.col("ts_utc"))
-    touched = bronze_delta.select("site", hour.alias("ts_utc")).distinct()
-    in_sites = F.col("site").isin([v[0] for v in parts.values()])
     cand = (
         spark.read.schema(parquet_schema(bronze_path, spark, dirs=list(parts)))
-        .parquet(bronze_path).filter(in_sites).withColumn("_g", hour)
-        .join(F.broadcast(touched.withColumnRenamed("ts_utc", "_g")),
-              ["site", "_g"], "left_semi")
-        .drop("_g")
+        .parquet(bronze_path).filter(_in_partitions(["site"], parts.values()))
     )
-    out = clean_to_hourly(cand)
-    # recover a crashed writer before planning the silver read (its
-    # roll-forward renames the partition dirs that read would list)
+    out = _clean(cand.repartition("site")).sortWithinPartitions("site", "ts_utc")
+    # recover a crashed writer first: a half-published partition may
+    # sit only in Silver's work dirs, which the staged write replaces
     _clear_work_dirs(spark, silver_path)
-    if exists(silver_path, spark):
-        # declared schema: a directory left empty by an all-invalid first
-        # refresh has no parquet footer to infer one from
-        kept = (
-            spark.read.schema(out.schema).parquet(silver_path).filter(in_sites)
-            .join(F.broadcast(touched), ["site", "ts_utc"], "left_anti")
-        )
-        out = kept.unionByName(out)
     return _staged_overwrite(spark, silver_path, out, ["site"], replaced=list(parts))

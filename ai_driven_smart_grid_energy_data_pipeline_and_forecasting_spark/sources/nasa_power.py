@@ -4,7 +4,7 @@ The reference fetches JSON over HTTP driver-side and parses it with
 nested Python loops (``nasa.py:58-108``). Here the payload lands as
 JSON text (file drop or HTTP fetch — transport stays at the edge) and
 the *parse* runs distributed: ``from_json`` → ``explode`` → shape
-dispatch → full-outer alignment via pivot. Both payload shapes
+dispatch → full-outer alignment in one aggregate. Both payload shapes
 (F10, ``nasa.py:62-75``) are handled in one pass:
 
 - shape A: ``{"yyyymmddhh": float-or-null}`` — hourly keys
@@ -16,7 +16,7 @@ Malformed keys → NULL timestamp → dropped, matching the reference's
 
 Scale: one payload row fans out to (params × hours) rows through
 generate-only operators (no shuffle); the only shuffle is the final
-per-timestamp pivot, keyed (site, ts_utc).
+per-timestamp alignment aggregate, keyed (site, ts_utc).
 """
 
 from __future__ import annotations
@@ -104,14 +104,17 @@ def parse_payloads(payloads: DataFrame, json_col: str = "payload") -> DataFrame:
 def align_to_bronze(series: DataFrame, ingested_at=None) -> DataFrame:
     """J1 n-way timestamp alignment (``nasa.py:91-108``): long → one wide
     row per (site, ts_utc) with NULLs where a param lacks that hour,
-    plus the reference's raw_json payload column (``nasa.py:106``)."""
-    wide = (
-        series.groupBy("site", "ts_utc")
-        .pivot("param", PARAMS)
-        .agg(F.first("value", ignorenulls=True))
+    plus the reference's raw_json payload column (``nasa.py:106``).
+
+    Each column is the first non-null value of its param in one
+    ``groupBy`` aggregate: a ``pivot`` plans the same rule as two
+    aggregations, so two shuffles."""
+    wide = series.groupBy("site", "ts_utc").agg(
+        *[
+            F.first(F.when(F.col("param") == param, F.col("value")), ignorenulls=True).alias(col)
+            for param, col in PARAM_COLS.items()
+        ]
     )
-    for param, col in PARAM_COLS.items():
-        wide = wide.withColumnRenamed(param, col)
     raw_json = F.to_json(
         F.struct(
             F.lit("NASA_POWER").alias("source"),

@@ -44,12 +44,12 @@ def read_payload_stream(
 
 def _parse_once(batch: DataFrame, ingested_at) -> DataFrame:
     """The micro-batch parsed to Bronze rows and pinned
-    (``localCheckpoint``): the sink's merge and refresh read the delta
-    several times (touched partitions, the merge, the touched hours),
-    and each read would otherwise re-run the JSON parse and its pivot
-    shuffle over the batch's files. An empty batch pins no rows and the
-    sink writes nothing. If the pin is lost the batch fails, and the
-    restarted query replays it into the idempotent sink."""
+    (``localCheckpoint``): the sink's merge reads the delta twice (the
+    touched partitions, then the merge itself), and each read would
+    otherwise re-run the JSON parse and its alignment shuffle over the
+    batch's files. An empty batch pins no rows and the sink writes
+    nothing. If the pin is lost the batch fails, and the restarted query
+    replays it into the idempotent sink."""
     return payloads_to_bronze(batch, ingested_at).localCheckpoint()
 
 
@@ -156,11 +156,11 @@ def stream_to_silver(
 ) -> StreamingQuery:
     """The full streaming medallion loop in one query: each micro-batch
     is parsed and handed to ``incremental_silver_refresh`` inside
-    ``foreachBatch`` — bronze MERGE, then delete-then-insert of every
-    touched (site, hour) Silver group — so both tiers commit per
-    micro-batch and replays are observable no-ops at both levels (the
-    reference's re-run contract, ``README.md:36``, extended to the tier
-    it never built). A later file that invalidates an hour an earlier
+    ``foreachBatch`` — bronze MERGE, then a replace of every touched
+    site's Silver partition by the clean of its merged Bronze rows — so
+    both tiers commit per micro-batch and replays are observable no-ops
+    at both levels (the reference's re-run contract, ``README.md:36``,
+    extended to the tier it never built). A later file that invalidates an hour an earlier
     one kept removes that hour from Silver, exactly as a full
     ``clean_to_hourly`` of Bronze would."""
     from ..plans.silver import incremental_silver_refresh

@@ -1,5 +1,5 @@
-"""Incremental silver maintenance: delta-touched (site, hour) groups
-are recomputed in place and the result is row-identical to a full
+"""Incremental silver maintenance: delta-touched sites are recomputed
+from their Bronze rows and the result is row-identical to a full
 recompute — including group DELETION, which a plain keyed merge cannot
 express."""
 
@@ -17,6 +17,7 @@ from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.silve
     incremental_silver_refresh,
 )
 from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.schemas import (
+    FACT_WEATHER,
     RAW_WEATHER,
 )
 
@@ -143,9 +144,9 @@ def test_new_site_and_new_hour_insert(spark, paths):
 
 @pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
 def test_refresh_keeps_untouched_hours_of_a_touched_site(spark, tmp_path, as_uri):
-    # Silver's existence check goes through the Hadoop FileSystem: a URI
-    # that reads as absent would rewrite alpha from its touched hour
-    # alone and drop hours 0 and 2
+    # file:// URIs go through the Hadoop FileSystem on the Bronze read
+    # and the Silver publish: a path that resolved to nothing would
+    # rewrite alpha without hours 0 and 2
     bronze_path, silver_path = (
         p.as_uri() if as_uri else str(p) for p in (tmp_path / "bronze", tmp_path / "silver")
     )
@@ -159,6 +160,27 @@ def test_refresh_keeps_untouched_hours_of_a_touched_site(spark, tmp_path, as_uri
     assert sorted((k[1].hour, v[0]) for k, v in got.items() if k[0] == "alpha") == [
         (0, 100.0), (1, 999.0), (2, 120.0)
     ]
+
+
+def test_refresh_recomputes_the_null_site_partition(spark, tmp_path):
+    # a payload row without a site parses to a NULL site, which Bronze
+    # and Silver keep in their default partition: the refresh must
+    # recompute that partition like any other touched site, not drop it
+    from pyspark.sql import types as T
+
+    schema = T.StructType([T.StructField(f.name, f.dataType, True) for f in RAW_WEATHER])
+    bronze_path = str(tmp_path / "bronze")
+    silver_path = str(tmp_path / "silver")
+    base = spark.createDataFrame(
+        [("alpha", ts(0), 100.0, 10.0, 5.0, None, ING0), (None, ts(0), 50.0, 20.0, 3.0, None, ING0)],
+        schema,
+    )
+    merge_upsert(spark, bronze_path, base, keys=["site", "ts_utc"], order_col="ingested_at")
+    clean_to_hourly(spark.read.parquet(bronze_path)).write.partitionBy("site").parquet(silver_path)
+    delta = spark.createDataFrame([(None, ts(1), 60.0, 21.0, 2.0, None, ING1)], schema)
+    assert incremental_silver_refresh(spark, bronze_path, silver_path, delta) == 2
+    assert _silver(spark, silver_path) == _full(spark, bronze_path)
+    assert set(_silver(spark, silver_path)) == {key("alpha", 0), key(None, 0), key(None, 1)}
 
 
 def test_refresh_after_all_invalid_first_refresh(spark, tmp_path):
@@ -233,8 +255,9 @@ def test_crash_before_silver_publish_keeps_old_snapshot(spark, paths, monkeypatc
 )
 def test_one_row_refresh_returns_site_rows_in_few_jobs(spark, paths, jobs_in, row, want):
     # a one-row refresh returns the rows now in the refreshed site, and
-    # pays only for its merge, recompute and two writes: no schema
-    # inference, no read-back count, one touched-site collect
+    # pays only for one touched-site collect, the merge and the site
+    # recompute (one shuffle each): no schema inference, no read-back
+    # count, no Silver read
     bronze_path, silver_path = paths
     delta = spark.createDataFrame([row], RAW_WEATHER)
     with jobs_in() as jobs:
@@ -243,7 +266,25 @@ def test_one_row_refresh_returns_site_rows_in_few_jobs(spark, paths, jobs_in, ro
     got = _silver(spark, silver_path)
     assert got == _full(spark, bronze_path)
     assert n == sum(1 for site, _ in got if site == "alpha")
-    assert len(jobs) <= 11
+    assert len(jobs) <= 7
+
+
+def test_refreshed_site_equals_clean_of_its_bronze(spark, paths):
+    # a refreshed site's Silver is the clean of its Bronze, hours the
+    # delta does not touch included: a stale Silver row of alpha (hour
+    # 5, which Bronze does not hold) must go, beta's stays untouched
+    bronze_path, silver_path = paths
+    stale = spark.createDataFrame(
+        [("alpha", ts(5), 1.0, 1.0, 1.0), ("beta", ts(5), 2.0, 2.0, 2.0)], FACT_WEATHER
+    )
+    stale.write.mode("append").partitionBy("site").parquet(silver_path)
+    delta = spark.createDataFrame([("alpha", ts(1), 999.0, 19.0, 9.0, None, ING1)], RAW_WEATHER)
+    assert incremental_silver_refresh(spark, bronze_path, silver_path, delta) == 3
+    got = _silver(spark, silver_path)
+    assert {k: v for k, v in got.items() if k[0] == "alpha"} == {
+        k: v for k, v in _full(spark, bronze_path).items() if k[0] == "alpha"
+    }
+    assert key("beta", 5) in got
 
 
 def test_empty_delta_writes_nothing(spark, tmp_path):

@@ -72,6 +72,22 @@ def test_alignment_full_outer_with_nulls(payloads):
     assert a[0].ghi_wm2 == 0.0 and a[0].t2m_c == -3.1 and a[0].ws10_mps == 4.2
 
 
+def test_alignment_merges_params_across_payload_rows_and_shapes(spark):
+    # one site, one hour: GHI and T2M arrive in a shape-A payload, WS10M
+    # in a shape-B payload of the same batch -> one aligned Bronze row
+    a = {"properties": {"parameter": {"ALLSKY_SFC_SW_DWN": {"2025010300": 7.0},
+                                      "T2M": {"2025010300": 1.5}}}}
+    b = {"properties": {"parameter": {"WS10M": {"20250103": [2.5]}}}}
+    rows = [("site_c", json.dumps(a)), ("site_c", json.dumps(b))]
+    bronze = payloads_to_bronze(
+        spark.createDataFrame(rows, "site STRING, payload STRING"),
+        ingested_at="2025-01-04 00:00:00",
+    ).collect()
+    assert [(r.site, r.ts_utc.hour, r.ghi_wm2, r.t2m_c, r.ws10_mps) for r in bronze] == [
+        ("site_c", 0, 7.0, 1.5, 2.5)
+    ]
+
+
 def test_raw_json_payload_shape(payloads):
     bronze = payloads_to_bronze(payloads, ingested_at="2025-01-03 00:00:00")
     row = bronze.filter((F.col("site") == "site_a") & (F.hour("ts_utc") == 0)).collect()[0]

@@ -177,6 +177,47 @@ def test_stream_to_silver_deletes_invalidated_hour(spark, tmp_path):
     assert len(got) == 1 and got[0][2] == 100.0
 
 
+def test_stream_to_silver_runs_few_jobs_per_batch(spark, tmp_path):
+    # a micro-batch pays for its pinned parse, one touched-site collect,
+    # the Bronze merge and the Silver site recompute (one shuffle each).
+    # The stream thread sets the query's run id as its job group and the
+    # foreachBatch jobs inherit it
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.plans.silver import (
+        clean_to_hourly,
+    )
+    from ai_driven_smart_grid_energy_data_pipeline_and_forecasting_spark.streaming.ingest_stream import (
+        stream_to_silver,
+    )
+
+    drop = tmp_path / "drop_jobs"
+    bronze, silver, ckpt = (str(tmp_path / n) for n in ("bronze", "silver", "ckpt"))
+    later = {
+        "properties": {
+            "parameter": {
+                "ALLSKY_SFC_SW_DWN": {"2025010101": 250.0, "2025010102": 300.0},
+                "T2M": {"2025010101": 2.5, "2025010102": 3.0},
+                "WS10M": {"2025010101": 4.5, "2025010102": 5.0},
+            }
+        }
+    }
+    _drop_file(drop, "a.json")
+    _drop_file(drop, "b.json", payload=later)
+    q = stream_to_silver(read_payload_stream(spark, str(drop)), bronze, silver, ckpt)
+    q.awaitTermination(120)
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(str(q.runId))
+    batches = sum(1 for p in q.recentProgress if p.numInputRows)
+    assert batches == 2
+    assert len(jobs) / batches <= 8
+    cols = ["site", "ts_utc", "ghi_wm2", "temp_c", "wind_mps"]
+    got = sorted(map(tuple, spark.read.parquet(silver).select(cols).collect()))
+    assert got == sorted(map(tuple, clean_to_hourly(spark.read.parquet(bronze)).collect()))
+    assert len(got) == 3
+    # the refresh's write leaves one file per site
+    assert len(list((tmp_path / "silver" / "site=site_a").glob("*.parquet"))) == 1
+
+
 def test_stream_distinct_users_within_sketch_tolerance(spark, tmp_path):
     import datetime as dt
 
